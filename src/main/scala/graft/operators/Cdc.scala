@@ -21,6 +21,15 @@ object Cdc {
     * `WHERE tracking_column > last_value`. As a Column predicate this
     * reaches the parquet scan (`PushedFilters`), so a daily delta on a
     * 100 TB table reads only row groups whose stats pass the filter.
+    *
+    * The bound is strict, like the reference's: a row that arrives
+    * after a cycle ran, with a tracking value EQUAL to that cycle's
+    * watermark, is never extracted by any later cycle. When sources
+    * can commit such late ties, pass one tick below the watermark
+    * (for a timestamp, `lit(watermark.toInstant.minusNanos(1000))`)
+    * and load through a keyed upsert such as
+    * [[graft.sources.Versioned.upsert]], which absorbs the rows at
+    * the watermark that are extracted again.
     */
   def incrementalFilter(df: DataFrame, trackingCol: String, lastValue: Column): DataFrame =
     df.filter(col(trackingCol) > lastValue)

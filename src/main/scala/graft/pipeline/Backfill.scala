@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Partitioned BACKFILL of a date-partitioned model — the Dagster
@@ -60,41 +60,23 @@ object Backfill {
     // cluster idle on every chunk's write tail. A small pool keeps a
     // few chunk jobs in flight; the landed table is identical (same
     // chunks, same partitions, dynamic overwrite replaces only each
-    // run's own days). The overwrite MODE is hoisted around the pool:
-    // Sink.overwritePartitions saves/sets/restores the session conf,
-    // and with concurrent chunks a restore from one could flip
-    // another's not-yet-planned write to static overwrite (which
-    // deletes the whole table root) — pinning `dynamic` for the whole
-    // range makes the per-chunk save/restore a no-op. Receipts return
-    // in chunk order.
-    val spark0 = spark
-    val prevMode = spark0.conf.getOption(
-      "spark.sql.sources.partitionOverwriteMode")
-    spark0.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      val threads = math.max(1, math.min(4, chunks.size))
-      if (threads <= 1)
-        chunks.map { case (lo, hi) => runChunk(spark, source, tsCol, model,
-          targetPath, partitionCol, lo.toString, hi.toString) }
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
-        try {
-          implicit val ec: scala.concurrent.ExecutionContext =
-            scala.concurrent.ExecutionContext.fromExecutorService(pool)
-          val futs = chunks.map { case (lo, hi) =>
-            scala.concurrent.Future(runChunk(spark, source, tsCol, model,
-              targetPath, partitionCol, lo.toString, hi.toString))
-          }
-          futs.map(f => scala.concurrent.Await.result(f,
-            scala.concurrent.duration.Duration.Inf))
-        } finally pool.shutdown()
-      }
-    } finally prevMode match {
-      case Some(v) =>
-        spark0.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None =>
-        try spark0.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        catch { case _: Throwable => () }
+    // run's own days). Receipts return in chunk order.
+    val threads = math.max(1, math.min(4, chunks.size))
+    if (threads <= 1)
+      chunks.map { case (lo, hi) => runChunk(spark, source, tsCol, model,
+        targetPath, partitionCol, lo.toString, hi.toString) }
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+      try {
+        implicit val ec: scala.concurrent.ExecutionContext =
+          scala.concurrent.ExecutionContext.fromExecutorService(pool)
+        val futs = chunks.map { case (lo, hi) =>
+          scala.concurrent.Future(runChunk(spark, source, tsCol, model,
+            targetPath, partitionCol, lo.toString, hi.toString))
+        }
+        futs.map(f => scala.concurrent.Await.result(f,
+          scala.concurrent.duration.Duration.Inf))
+      } finally pool.shutdown()
     }
   }
 
@@ -121,11 +103,19 @@ object Backfill {
         .otherwise(raise_error(concat(
           lit(s"backfill chunk [$fromDay, $toDay] leaked day "),
           col(partitionCol).cast("string")))))
-    val landed = graft.Par.persistTracked(guarded)
-    val n = landed.count()
-    if (n > 0)
-      graft.sources.Sink.overwritePartitions(landed, targetPath,
-        Seq(partitionCol))
+    // the row count is observed on the write itself; an empty chunk
+    // replaces no partition, and one that found no table removes the
+    // empty root its write created (a non-recursive delete, so a root
+    // a concurrent chunk has written to stays)
+    val target = new org.apache.hadoop.fs.Path(targetPath)
+    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val existed = fs.exists(target)
+    val landed = Observation()
+    graft.sources.Sink.overwritePartitions(
+      guarded.observe(landed, count(lit(1)).as("rows")), targetPath, Seq(partitionCol))
+    val n = landed.get("rows").asInstanceOf[Long]
+    if (n == 0 && !existed)
+      try fs.delete(target, false) catch { case _: java.io.IOException => () }
     ChunkRun(fromDay, toDay, n)
   }
 }

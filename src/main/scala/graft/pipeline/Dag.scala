@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 /** Batch job-graph execution — the reference's orchestration spine
   * (reference: dagster_code/nomba_pipeline/definitions.py:45 wires
@@ -63,7 +64,9 @@ object Dag {
   /** Run the graph in topological order. Each node gets up to
     * `1 + maxRetries` attempts; when a node exhausts them, every
     * transitive dependent is Skipped (recorded with the root cause's
-    * name) and independent branches keep running.
+    * name) and independent branches keep running. Only non-fatal
+    * failures are retried and recorded: a fatal error or an interrupt
+    * propagates and ends the run.
     *
     * `levelParallelism` > 1 runs INDEPENDENT nodes of the same
     * topological level concurrently on a bounded pool (r16, guide
@@ -86,7 +89,7 @@ object Dag {
         attempt += 1
         try { n.run(); result = Succeeded; done = true }
         catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             if (attempt > maxRetries) { result = Failed(e, attempt); done = true }
         }
       }
@@ -126,14 +129,18 @@ object Dag {
             val pool = java.util.concurrent.Executors.newFixedThreadPool(
               math.min(levelParallelism, runnable.size))
             try {
-              implicit val ec: scala.concurrent.ExecutionContext =
-                scala.concurrent.ExecutionContext.fromExecutorService(pool)
+              // java futures, not scala.concurrent ones: a Scala Future
+              // never completes on a fatal throwable, so awaiting it
+              // would hang; FutureTask hands any throwable to get()
               val futs = runnable.map { case (n, _) =>
-                n.name -> scala.concurrent.Future(runOne(n))
+                n.name -> pool.submit(new java.util.concurrent.Callable[Status] {
+                  def call(): Status = runOne(n)
+                })
               }
               futs.foreach { case (name, f) =>
-                status(name) = scala.concurrent.Await.result(f,
-                  scala.concurrent.duration.Duration.Inf)
+                status(name) =
+                  try f.get()
+                  catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
               }
             } finally pool.shutdown()
           }

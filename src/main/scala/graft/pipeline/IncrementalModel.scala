@@ -18,8 +18,14 @@ import org.apache.spark.sql.functions.col
   * incremental pass reads only row groups/partitions past the
   * watermark; the max() on the target is metadata-cheap on parquet.
   * Late rows AT the watermark are excluded (strict >) exactly like
-  * the reference — use [[graft.streaming.EventStream.applyUpserts]]
-  * when replays/updates of existing keys must converge instead.
+  * the reference: a row that arrives after a pass with a tracking
+  * value equal to the target's max is never appended by any later
+  * pass. Where sources commit such late ties, extract from one tick
+  * below the watermark instead and load through
+  * [[graft.sources.Versioned.upsert]], which absorbs the re-extracted
+  * rows (the recipe on [[graft.operators.Cdc.incrementalFilter]]);
+  * use [[graft.streaming.EventStream.applyUpserts]] when
+  * replays/updates of existing keys must converge in a stream.
   */
 object IncrementalModel {
 

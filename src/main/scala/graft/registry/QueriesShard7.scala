@@ -896,12 +896,12 @@ private[graft] object QueriesShard7 {
         .select(col("o_orderkey"), col("o_totalprice"),
           col("o_orderstatus")), dst)
       require(v1 == 1 && v2 == 2, s"unexpected versions ($v1, $v2)")
-      val narrow = Versioned.read(s, dst, Some(1), mergeSchema = true)
+      val narrow = Versioned.read(s, dst, Some(1))
       require(narrow.columns.sorted.toSeq ==
         Seq("o_orderkey", "o_totalprice"),
         s"time travel must keep the pre-evolution schema, " +
           s"got ${narrow.columns.mkString(",")}")
-      Versioned.read(s, dst, mergeSchema = true)
+      Versioned.read(s, dst)
         .select(col("o_orderkey"), col("o_totalprice"),
           col("o_orderstatus"))
         .orderBy(col("o_orderkey"))

@@ -34,20 +34,15 @@ object Sink {
 
   /** Idempotent batch append: overwrite ONLY the partitions present
     * in `df`, leave the rest of the table untouched. Re-running a
-    * day's load replaces that day exactly once.
+    * day's load replaces that day exactly once. The dynamic mode is a
+    * per-write option, so the session conf is never touched and
+    * concurrent writers cannot see each other's mode.
     */
-  def overwritePartitions(df: DataFrame, path: String, partitionCols: Seq[String]): Unit = {
-    val spark = df.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try df.write.mode(SaveMode.Overwrite)
+  def overwritePartitions(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
+    df.write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCols: _*)
       .parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-  }
 
   /** Keyed upsert into a parquet target (delete+insert by key,
     * latest wins) — the reference's incremental load against a table

@@ -1,7 +1,9 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit, max}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Staged extract → manifest → load: the object-store staging hop of
   * the reference's load protocol (base_loader.py:151 `upload_to_s3`,
@@ -22,21 +24,25 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *    every graft sink is (keyed upsert / partition overwrite), the
   *    same property the reference leans on.
   *
-  * The manifest is the ONLY commit point and is itself committed
-  * atomically (write to a temp name + rename — a metadata op on any
-  * HDFS-semantics store; on S3 proper, rename is copy+delete but
-  * single-object PUT is atomic, so the pattern still yields
+  * The manifest is the ONLY commit point, committed atomically
+  * through [[Manifest]] (write to a temp name + rename — a metadata op
+  * on any HDFS-semantics store; on S3 proper, rename is copy+delete
+  * but single-object PUT is atomic, so the pattern still yields
   * all-or-nothing manifests). Layout per batch:
   * {{{
   *   <stagingDir>/<batchId>/data/          the extracted parquet rows
   *   <stagingDir>/<batchId>/manifest.json  commit point + metadata
   *   <stagingDir>/<batchId>/loaded.json    load-complete marker
   * }}}
-  * Manifest metadata carries the row count, the schema, and the
-  * batch's tracking-column watermark so the NEXT incremental extract
-  * can resume from it without re-reading the staged data
-  * (base_loader's `get_last_loaded_value`, answered from the
-  * manifest instead of the warehouse).
+  * Both are in the one [[Manifest]] format. The commit manifest
+  * `{"batch_id", "rows", "schema", "watermark", "committed_at_ms"}`
+  * records what the extract's write produced, observed on the write
+  * itself: `watermark` (with a tracking column; "" for an empty batch)
+  * lets the NEXT incremental extract resume without re-reading the
+  * staged data (base_loader's `get_last_loaded_value`, answered from
+  * the manifest instead of the warehouse), and `schema` lets
+  * [[Staging.readStaged]] skip inference. The marker holds
+  * `{"batch_id", "loaded_at_ms"}`.
   */
 object Staging {
 
@@ -44,48 +50,17 @@ object Staging {
                                   schemaJson: String,
                                   watermark: Option[String])
 
-  private def fs(spark: SparkSession, dir: String): FileSystem =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def batchPath(dir: String, batchId: String) = new Path(dir, batchId)
-  private def dataPath(dir: String, batchId: String) =
-    new Path(batchPath(dir, batchId), "data")
-  private def manifestPath(dir: String, batchId: String) =
-    new Path(batchPath(dir, batchId), "manifest.json")
-  private def loadedPath(dir: String, batchId: String) =
-    new Path(batchPath(dir, batchId), "loaded.json")
-
-  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
-
-  private def writeAtomic(f: FileSystem, target: Path, content: String): Unit = {
-    val tmp = new Path(target.getParent, s".${target.getName}.tmp")
-    val out = f.create(tmp, true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-    if (f.exists(target)) f.delete(target, false)
-    if (!f.rename(tmp, target))
-      throw new java.io.IOException(s"could not commit $target")
-  }
-
-  private def readJson(f: FileSystem, p: Path): java.util.Map[String, Object] = {
-    val in = f.open(p)
-    val bytes = try {
-      val bos = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
-      bos.toByteArray
-    } finally in.close()
-    json.readValue(bytes, classOf[java.util.HashMap[String, Object]])
-      .asInstanceOf[java.util.Map[String, Object]]
-  }
+  private def dataPath(dir: String, batchId: String) = new Path(dir, s"$batchId/data")
+  private def manifestPath(dir: String, batchId: String) = new Path(dir, s"$batchId/manifest.json")
+  private def loadedPath(dir: String, batchId: String) = new Path(dir, s"$batchId/loaded.json")
 
   /** Has `batchId` been extract-committed (manifest present)? */
   def isStaged(spark: SparkSession, stagingDir: String, batchId: String): Boolean =
-    fs(spark, stagingDir).exists(manifestPath(stagingDir, batchId))
+    Manifest.fs(spark, stagingDir).exists(manifestPath(stagingDir, batchId))
 
   /** Has `batchId` been loaded (loaded marker present)? */
   def isLoaded(spark: SparkSession, stagingDir: String, batchId: String): Boolean =
-    fs(spark, stagingDir).exists(loadedPath(stagingDir, batchId))
+    Manifest.fs(spark, stagingDir).exists(loadedPath(stagingDir, batchId))
 
   /** Extract `df` into the staging area under `batchId` and commit it
     * with a manifest — UNLESS the batch is already committed, in which
@@ -96,54 +71,52 @@ object Staging {
   def stage(df: DataFrame, stagingDir: String, batchId: String,
             trackingCol: Option[String] = None): StagedManifest = {
     val spark = df.sparkSession
-    val f = fs(spark, stagingDir)
     if (isStaged(spark, stagingDir, batchId))
       return readManifest(spark, stagingDir, batchId)
-    val data = dataPath(stagingDir, batchId)
+    val written = Observation()
+    val metrics = count(lit(1)).as("rows") +:
+      trackingCol.map(c => max(col(c)).as("watermark")).toSeq
     // overwrite: leftovers of a mid-extract kill are garbage by
     // definition (no manifest committed them)
-    df.write.mode(SaveMode.Overwrite).parquet(data.toString)
-    val staged = spark.read.parquet(data.toString)
-    import org.apache.spark.sql.functions.{col, max}
-    val rows = staged.count()
-    val watermark = trackingCol.map { c =>
-      val v = staged.agg(max(col(c))).head().get(0)
-      if (v == null) "" else v.toString
-    }
-    val m = json.createObjectNode()
-    m.put("batch_id", batchId)
-    m.put("rows", rows)
-    m.put("schema", df.schema.json)
-    watermark.foreach(m.put("watermark", _))
+    df.observe(written, metrics.head, metrics.tail: _*)
+      .write.mode(SaveMode.Overwrite).parquet(dataPath(stagingDir, batchId).toString)
+    val seen = written.get
+    val staged = StagedManifest(batchId, seen("rows").asInstanceOf[Long],
+      df.schema.json, trackingCol.map(_ => Option(seen("watermark")).fold("")(_.toString)))
+    val m = Manifest.obj()
+      .put("batch_id", batchId)
+      .put("rows", staged.rows)
+      .put("schema", staged.schemaJson)
+    staged.watermark.foreach(m.put("watermark", _))
     m.put("committed_at_ms", System.currentTimeMillis())
-    writeAtomic(f, manifestPath(stagingDir, batchId), m.toString)
-    StagedManifest(batchId, rows, df.schema.json, watermark)
+    Manifest.write(Manifest.fs(spark, stagingDir), manifestPath(stagingDir, batchId), m)
+    staged
   }
 
   /** The committed manifest for `batchId` (throws if not staged). */
   def readManifest(spark: SparkSession, stagingDir: String,
                    batchId: String): StagedManifest = {
-    val m = readJson(fs(spark, stagingDir), manifestPath(stagingDir, batchId))
-    StagedManifest(
-      String.valueOf(m.get("batch_id")),
-      String.valueOf(m.get("rows")).toLong,
-      String.valueOf(m.get("schema")),
-      Option(m.get("watermark")).map(String.valueOf))
+    val m = Manifest.read(Manifest.fs(spark, stagingDir), manifestPath(stagingDir, batchId))
+    StagedManifest(m.get("batch_id").asText, m.get("rows").asLong,
+      m.get("schema").asText, Option(m.get("watermark")).map(_.asText))
   }
 
-  /** The staged rows of a committed batch. */
+  /** The staged rows of a committed batch, read under the manifest's
+    * schema (no inference pass over the staged files). */
   def readStaged(spark: SparkSession, stagingDir: String,
                  batchId: String): DataFrame = {
     require(isStaged(spark, stagingDir, batchId),
       s"batch $batchId has no committed manifest under $stagingDir")
-    spark.read.parquet(dataPath(stagingDir, batchId).toString)
+    val schema = DataType.fromJson(readManifest(spark, stagingDir, batchId).schemaJson)
+    spark.read.schema(schema.asInstanceOf[StructType])
+      .parquet(dataPath(stagingDir, batchId).toString)
   }
 
   /** Batches that are extract-committed but not yet loaded, in batch-id
     * order — the load half's work queue after any restart.
     */
   def pending(spark: SparkSession, stagingDir: String): Seq[String] = {
-    val f = fs(spark, stagingDir)
+    val f = Manifest.fs(spark, stagingDir)
     val root = new Path(stagingDir)
     if (!f.exists(root)) return Nil
     f.listStatus(root).toSeq.filter(_.isDirectory).map(_.getPath.getName)
@@ -161,10 +134,8 @@ object Staging {
                 (load: DataFrame => Unit): Boolean = {
     if (isLoaded(spark, stagingDir, batchId)) return false
     load(readStaged(spark, stagingDir, batchId))
-    val m = json.createObjectNode()
-    m.put("batch_id", batchId)
-    m.put("loaded_at_ms", System.currentTimeMillis())
-    writeAtomic(fs(spark, stagingDir), loadedPath(stagingDir, batchId), m.toString)
+    Manifest.write(Manifest.fs(spark, stagingDir), loadedPath(stagingDir, batchId),
+      Manifest.obj().put("batch_id", batchId).put("loaded_at_ms", System.currentTimeMillis()))
     true
   }
 }

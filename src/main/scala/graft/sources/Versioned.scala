@@ -1,8 +1,11 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit, max, min, when}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Versioned parquet table: a minimal manifest log giving plain
   * parquet directories the three properties object-store tables are
@@ -23,19 +26,25 @@ import org.apache.spark.sql.functions.{col, count, lit, max, min, when}
   *  - a WRITE lands its parquet segment under a fresh `d-<uuid>/`
   *    directory — invisible until referenced; a crash mid-write
   *    leaves an orphan segment, never a torn table;
-  *  - a COMMIT writes the next `v<n>.json` (segment list) via
-  *    write-temp + rename. Rename-if-absent is the atomic
-  *    compare-and-swap: two racing committers collide on the same
-  *    version name and the loser RETRIES against the new head —
-  *    optimistic concurrency without a lock service. The CAS is as
-  *    strong as the filesystem's rename: HDFS renames atomically and
-  *    refuses an existing destination (a true CAS); the local FS
-  *    narrows but cannot fully close the window (POSIX rename
-  *    overwrites); object stores need their committer. Same contract
-  *    every log-based table format carries;
-  *  - a READER resolves one manifest and reads only its segments:
-  *    pinned, repeatable, immune to concurrent commits;
+  *  - a COMMIT writes the next `v<n>.json` through [[Manifest]]:
+  *    write-temp + rename-if-absent is the atomic compare-and-swap,
+  *    so two racing committers collide on the same version name and
+  *    the loser RETRIES against the new head — optimistic concurrency
+  *    without a lock service, as strong as the filesystem's rename.
+  *    Same contract every log-based table format carries;
+  *  - a READER resolves one manifest and reads only its segments,
+  *    under the schema the manifest records: pinned, repeatable,
+  *    immune to concurrent commits, and no schema-inference job;
   *  - [[vacuum]] deletes segments no kept manifest references.
+  *
+  * A version's manifest, in the one [[Manifest]] format:
+  * `{"version": 3, "segments": ["d-<uuid>", ...], "schema": "<StructType JSON>"}`.
+  * Segments are root-relative or absolute ([[shallowClone]]). The
+  * schema is the segment's on a replace and the head's widened by the
+  * segment's ([[SchemaEvolution.evolve]]) on an append, so older
+  * segments null-fill added columns while time travel keeps each
+  * version's own schema; [[restore]] and [[shallowClone]] copy it. A
+  * manifest without one infers it (the empty schema if no segments).
   *
   * Scale notes: a manifest holds segment DIRECTORY names (not file
   * lists), so its size grows with commits, not files; `replace=false`
@@ -45,74 +54,65 @@ import org.apache.spark.sql.functions.{col, count, lit, max, min, when}
   */
 object Versioned {
 
-  private val VersionsDir = "_versions"
-  private def manifestName(v: Int) = f"v$v%08d.json"
+  private def versionsDir(path: String) = new Path(path, "_versions")
+  private def newSegment() = s"d-${java.util.UUID.randomUUID()}"
 
-  private def fs(spark: SparkSession, path: String): FileSystem =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** A committed version: its segments and the schema they read as. */
+  private final case class Version(segments: Seq[String], schema: StructType)
 
   /** Latest committed version number, 0 if none. */
-  def currentVersion(spark: SparkSession, path: String): Int = {
-    val dir = new Path(path, VersionsDir)
-    val f = fs(spark, path)
-    if (!f.exists(dir)) 0
-    else f.listStatus(dir).map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".json"))
-      .map(n => n.stripPrefix("v").stripSuffix(".json").toInt)
-      .foldLeft(0)(math.max)
+  def currentVersion(spark: SparkSession, path: String): Int =
+    Manifest.latest(Manifest.fs(spark, path), versionsDir(path), "v")
+
+  private def segmentPaths(path: String, segments: Seq[String]): Seq[String] =
+    segments.map { s =>
+      val p = new Path(s)
+      (if (p.isAbsolute) p else new Path(path, s)).toString
+    }
+
+  private def readVersion(spark: SparkSession, path: String, v: Int): Version = {
+    val m = Manifest.read(Manifest.fs(spark, path), new Path(versionsDir(path), Manifest.name("v", v)))
+    val segments = m.path("segments").elements().asScala.map(_.asText).toSeq
+    val schema = Option(m.get("schema"))
+      .map(j => DataType.fromJson(j.asText).asInstanceOf[StructType])
+      .getOrElse(
+        if (segments.isEmpty) new StructType()
+        else spark.read.parquet(segmentPaths(path, segments): _*).schema)
+    Version(segments, schema)
   }
 
-  private def readManifest(spark: SparkSession, path: String, v: Int): Seq[String] = {
-    val f = fs(spark, path)
-    val in = f.open(new Path(new Path(path, VersionsDir), manifestName(v)))
-    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    // segments are uuid-named dirs (`d-uuid`), possibly behind an
-    // absolute foreign prefix (shallowClone) — no quotes/escapes
-    // inside either form; the JSON keys carry no "d-" substring
-    "\"([^\"]*d-[^\"]+)\"".r.findAllMatchIn(body).map(_.group(1)).toSeq
-  }
-
-  private def writeManifestCas(spark: SparkSession, path: String,
-                               v: Int, segments: Seq[String]): Boolean = {
-    val f = fs(spark, path)
-    val dir = new Path(path, VersionsDir)
-    f.mkdirs(dir)
-    val target = new Path(dir, manifestName(v))
-    if (f.exists(target)) return false
-    val tmp = new Path(dir, s".tmp-${java.util.UUID.randomUUID()}")
-    val out = f.create(tmp, false)
-    try out.write(
-      s"""{"version":$v,"segments":[${segments.map("\"" + _ + "\"").mkString(",")}]}"""
-        .getBytes("UTF-8"))
-    finally out.close()
-    // rename-if-absent IS the commit point: exactly one racer wins v
-    val won = !f.exists(target) && f.rename(tmp, target)
-    if (!won) f.delete(tmp, false)
-    won
-  }
+  /** Commit the next version through the [[Manifest]] CAS loop;
+    * `next(head)` is the new version's content, re-derived after
+    * every lost race. */
+  private def commitVersion(spark: SparkSession, path: String,
+                            lost: () => Unit = () => ())(next: Int => Version): Int =
+    Manifest.commitNext(Manifest.fs(spark, path), versionsDir(path), "v", lost) { head =>
+      val v = next(head)
+      val m = Manifest.obj().put("version", head + 1)
+      val segments = m.putArray("segments")
+      v.segments.foreach(segments.add(_))
+      m.put("schema", v.schema.json)
+    }
 
   /** Write `df` as a new segment and commit the next version.
     * `replace = true` makes the new version exactly this segment (the
     * atomic full-refresh swap); `replace = false` appends it to the
-    * current head's segments. Returns the committed version number.
-    * Retries the manifest CAS against a moved head up to `maxRetries`
-    * times — concurrent appends serialize without locks.
+    * current head's segments, widening the head's schema by any
+    * columns the segment adds. Returns the committed version number.
+    * Retries the manifest CAS against a moved head — concurrent
+    * appends serialize without locks.
     */
-  def commit(df: DataFrame, path: String, replace: Boolean = false,
-             maxRetries: Int = 10): Int = {
+  def commit(df: DataFrame, path: String, replace: Boolean = false): Int = {
     val spark = df.sparkSession
-    val seg = s"d-${java.util.UUID.randomUUID()}"
+    val seg = newSegment()
     df.write.mode(SaveMode.ErrorIfExists).parquet(new Path(path, seg).toString)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = currentVersion(spark, path)
-      val base = if (replace || head == 0) Nil else readManifest(spark, path, head)
-      if (writeManifestCas(spark, path, head + 1, base :+ seg)) return head + 1
-      attempt += 1
+    commitVersion(spark, path) { head =>
+      if (replace || head == 0) Version(Seq(seg), df.schema)
+      else {
+        val base = readVersion(spark, path, head)
+        Version(base.segments :+ seg, SchemaEvolution.evolve(base.schema, df.schema))
+      }
     }
-    throw new IllegalStateException(
-      s"commit lost the version race $maxRetries times at $path")
   }
 
   /** Write-audit-publish (the Iceberg/Netflix WAP discipline): stage
@@ -131,25 +131,16 @@ object Versioned {
     * @return (published version if any, the audit failures)
     */
   def writeAuditPublish(candidate: DataFrame, path: String,
-                        audit: DataFrame => DataFrame,
-                        maxRetries: Int = 10): (Option[Int], DataFrame) = {
+                        audit: DataFrame => DataFrame): (Option[Int], DataFrame) = {
     val spark = candidate.sparkSession
-    val seg = s"d-${java.util.UUID.randomUUID()}"
+    val seg = newSegment()
     candidate.write.mode(SaveMode.ErrorIfExists)
       .parquet(new Path(path, seg).toString)
-    val staged = spark.read.parquet(new Path(path, seg).toString)
+    val staged = spark.read.schema(candidate.schema).parquet(new Path(path, seg).toString)
     val failures = graft.Par.persistTracked(audit(staged))
-    if (failures.isEmpty) {
-      var attempt = 0
-      while (attempt < maxRetries) {
-        val head = currentVersion(spark, path)
-        if (writeManifestCas(spark, path, head + 1, Seq(seg)))
-          return (Some(head + 1), failures)
-        attempt += 1
-      }
-      throw new IllegalStateException(
-        s"writeAuditPublish lost the version race $maxRetries times at $path")
-    } else {
+    if (failures.isEmpty)
+      (Some(commitVersion(spark, path)(_ => Version(Seq(seg), candidate.schema))), failures)
+    else {
       // Materialize the failures OFF the staged files BEFORE deleting
       // them (r11 ADVICE): persist is lazy and isEmpty only ran the
       // first partition(s), so a caller consuming the failures after
@@ -159,7 +150,7 @@ object Versioned {
       // every partition, cutting lineage to the staged parquet; only
       // then is the segment dropped.
       val pinned = failures.localCheckpoint(true)
-      fs(spark, path).delete(new Path(path, seg), true)
+      Manifest.fs(spark, path).delete(new Path(path, seg), true)
       (None, pinned)
     }
   }
@@ -169,27 +160,17 @@ object Versioned {
     * table-root-relative (`d-uuid`) or ABSOLUTE (a [[shallowClone]]'s
     * foreign references) — resolved accordingly.
     *
-    * `mergeSchema` widens across segments committed under EVOLVED
-    * schemas (a column added by a later append null-fills the older
-    * segments' rows — the dbt `on_schema_change: append_new_columns`
-    * contract); off by default because the footer-merge pass costs a
-    * per-file read and same-schema tables (the normal case) never
-    * need it. Time travel to a pre-evolution version keeps the
-    * ORIGINAL narrow schema either way — old manifests only list old
-    * segments.
+    * The read uses the version's recorded schema, so it runs no
+    * schema-inference job; segments committed before an evolving
+    * append null-fill its added columns, and a pre-evolution version
+    * keeps its ORIGINAL narrow schema.
     */
   def read(spark: SparkSession, path: String,
-           version: Option[Int] = None,
-           mergeSchema: Boolean = false): DataFrame = {
+           version: Option[Int] = None): DataFrame = {
     val v = version.getOrElse(currentVersion(spark, path))
     require(v >= 1, s"no committed version at $path")
-    val segs = readManifest(spark, path, v)
-    val r = if (mergeSchema) spark.read.option("mergeSchema", "true")
-            else spark.read
-    r.parquet(segs.map { s =>
-      val p = new Path(s)
-      (if (p.isAbsolute) p else new Path(path, s)).toString
-    }: _*)
+    val m = readVersion(spark, path, v)
+    spark.read.schema(m.schema).parquet(segmentPaths(path, m.segments): _*)
   }
 
   /** Per-FILE min/max stats for a pinned version — Delta/Iceberg
@@ -234,7 +215,7 @@ object Versioned {
                  version: Option[Int] = None): DataFrame = {
     val v = version.getOrElse(currentVersion(spark, path))
     val statsPath = s"$path/_stats/v$v"
-    require(fs(spark, path).exists(new Path(statsPath)),
+    require(Manifest.fs(spark, path).exists(new Path(statsPath)),
       s"no stats manifest at $statsPath — run writeStats for v$v first")
     val stats = spark.read.parquet(statsPath)
     val kept = stats.filter(
@@ -269,22 +250,16 @@ object Versioned {
     * dirs under its own root, and foreign entries never match one.
     */
   def shallowClone(spark: SparkSession, srcPath: String, dstPath: String,
-                   version: Option[Int] = None, maxRetries: Int = 10): Int = {
+                   version: Option[Int] = None): Int = {
     val v = version.getOrElse(currentVersion(spark, srcPath))
     require(v >= 1, s"no committed version to clone at $srcPath")
-    val srcRoot = fs(spark, srcPath).makeQualified(new Path(srcPath))
-    val segs = readManifest(spark, srcPath, v).map { s =>
+    val srcRoot = Manifest.fs(spark, srcPath).makeQualified(new Path(srcPath))
+    val src = readVersion(spark, srcPath, v)
+    val segs = src.segments.map { s =>
       val p = new Path(s)
       if (p.isAbsolute) s else new Path(srcRoot, s).toString
     }
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = currentVersion(spark, dstPath)
-      if (writeManifestCas(spark, dstPath, head + 1, segs)) return head + 1
-      attempt += 1
-    }
-    throw new IllegalStateException(
-      s"shallowClone lost the version race $maxRetries times at $dstPath")
+    commitVersion(spark, dstPath)(_ => Version(segs, src.schema))
   }
 
   /** RESTORE TABLE TO VERSION (Delta's `RESTORE`, Iceberg's
@@ -297,19 +272,13 @@ object Versioned {
     * `toVersion`'s existing segments — zero data moved at any table
     * size, the same CAS race discipline as [[commit]].
     */
-  def restore(spark: SparkSession, path: String, toVersion: Int,
-              maxRetries: Int = 10): Int = {
-    val segs = readManifest(spark, path, toVersion) // validates existence
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = currentVersion(spark, path)
+  def restore(spark: SparkSession, path: String, toVersion: Int): Int = {
+    val target = readVersion(spark, path, toVersion) // validates existence
+    commitVersion(spark, path) { head =>
       require(toVersion >= 1 && toVersion <= head,
         s"version $toVersion not committed at $path (head $head)")
-      if (writeManifestCas(spark, path, head + 1, segs)) return head + 1
-      attempt += 1
+      target
     }
-    throw new IllegalStateException(
-      s"restore lost the version race $maxRetries times at $path")
   }
 
   /** Keyed change feed between two committed versions — the
@@ -369,21 +338,15 @@ object Versioned {
     * update). A lost attempt's orphan segment is deleted eagerly;
     * a crash leaves it for [[vacuum]].
     */
-  private[graft] def commitRebase(spark: SparkSession, path: String,
-                                  maxRetries: Int)(stateOf: Int => DataFrame): Int = {
-    val f = fs(spark, path)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = currentVersion(spark, path)
-      val seg = s"d-${java.util.UUID.randomUUID()}"
-      stateOf(head).write.mode(SaveMode.ErrorIfExists)
-        .parquet(new Path(path, seg).toString)
-      if (writeManifestCas(spark, path, head + 1, Seq(seg))) return head + 1
-      f.delete(new Path(path, seg), true)
-      attempt += 1
+  private[graft] def commitRebase(spark: SparkSession, path: String)
+                                 (stateOf: Int => DataFrame): Int = {
+    var seg: Path = null
+    commitVersion(spark, path, lost = () => Manifest.fs(spark, path).delete(seg, true)) { head =>
+      seg = new Path(path, newSegment())
+      val state = stateOf(head)
+      state.write.mode(SaveMode.ErrorIfExists).parquet(seg.toString)
+      Version(Seq(seg.getName), state.schema)
     }
-    throw new IllegalStateException(
-      s"rebase commit lost the version race $maxRetries times at $path")
   }
 
   /** Keyed upsert as a version commit: merge `updates` into the head
@@ -406,10 +369,9 @@ object Versioned {
     * compaction pass.
     */
   def upsert(updates: DataFrame, path: String, key: Seq[String],
-             trackingCol: String, tieBreak: Seq[String] = Nil,
-             maxRetries: Int = 10): Int = {
+             trackingCol: String, tieBreak: Seq[String] = Nil): Int = {
     val spark = updates.sparkSession
-    commitRebase(spark, path, maxRetries) { head =>
+    commitRebase(spark, path) { head =>
       if (head == 0)
         graft.operators.Cdc.dedupLatestPerKey(updates, key, trackingCol, tieBreak)
       else graft.operators.Cdc.upsert(read(spark, path, Some(head)), updates,
@@ -436,10 +398,9 @@ object Versioned {
   def mergeInto(source: DataFrame, path: String, key: Seq[String],
                 matched: Seq[graft.operators.Merge.MatchedClause] = Seq.empty,
                 notMatched: Seq[graft.operators.Merge.NotMatchedClause] = Seq.empty,
-                notMatchedBySource: Seq[graft.operators.Merge.NotMatchedBySourceClause] = Seq.empty,
-                maxRetries: Int = 10): Int = {
+                notMatchedBySource: Seq[graft.operators.Merge.NotMatchedBySourceClause] = Seq.empty): Int = {
     val spark = source.sparkSession
-    commitRebase(spark, path, maxRetries) { head =>
+    commitRebase(spark, path) { head =>
       val target =
         if (head == 0)
           spark.createDataFrame(
@@ -458,9 +419,8 @@ object Versioned {
     * so a concurrent append is never silently un-compacted away.
     * Returns the new version.
     */
-  def compact(spark: SparkSession, path: String,
-              maxRetries: Int = 10): Int =
-    commitRebase(spark, path, maxRetries) { head =>
+  def compact(spark: SparkSession, path: String): Int =
+    commitRebase(spark, path) { head =>
       read(spark, path, Some(head)) // head==0 fails fast: nothing to compact
     }
 
@@ -482,11 +442,11 @@ object Versioned {
              retentionMs: Long = 24L * 3600 * 1000): Int = {
     require(keepVersions >= 1, "must keep at least the head version")
     require(retentionMs >= 0, "retentionMs must be non-negative")
-    val f = fs(spark, path)
+    val f = Manifest.fs(spark, path)
     val head = currentVersion(spark, path)
     if (head == 0) return 0
     val keepFrom = math.max(1, head - keepVersions + 1)
-    val live = (keepFrom to head).flatMap(readManifest(spark, path, _)).toSet
+    val live = (keepFrom to head).flatMap(readVersion(spark, path, _).segments).toSet
     val cutoff = System.currentTimeMillis() - retentionMs
     val removed = f.listStatus(new Path(path))
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("d-"))
@@ -494,7 +454,7 @@ object Versioned {
       .filter(s => s.getModificationTime <= cutoff)
       .map { s => f.delete(s.getPath, true); 1 }.sum
     (1 until keepFrom).foreach { v =>
-      f.delete(new Path(new Path(path, VersionsDir), manifestName(v)), false)
+      f.delete(new Path(versionsDir(path), Manifest.name("v", v)), false)
     }
     removed
   }
@@ -509,7 +469,8 @@ object Versioned {
   *
   * Layout: `root/<table>/` is a plain [[Versioned]] table per frame;
   * `root/_group/g<N>.json` pins `{table → version}` for group
-  * version N. A group commit first commits every frame (their new
+  * version N, in the one [[Manifest]] format:
+  * `{"version": N, "tables": {"<table>": <version>, ...}}`. A group commit first commits every frame (their new
   * versions are INVISIBLE to group readers until referenced), then
   * CASes the next group manifest — the same rename-if-absent commit
   * point as [[Versioned]], so a crash anywhere before the group CAS
@@ -524,53 +485,19 @@ object Versioned {
   */
 object VersionedGroup {
 
-  private val GroupDir = "_group"
-  private def groupName(v: Int) = f"g$v%08d.json"
-
-  private def fs(spark: SparkSession, root: String): FileSystem =
-    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def groupDir(root: String) = new Path(root, "_group")
 
   /** Latest committed group version, 0 if none. */
-  def currentVersion(spark: SparkSession, root: String): Int = {
-    val dir = new Path(root, GroupDir)
-    val f = fs(spark, root)
-    if (!f.exists(dir)) 0
-    else f.listStatus(dir).map(_.getPath.getName)
-      .filter(n => n.startsWith("g") && n.endsWith(".json"))
-      .map(n => n.stripPrefix("g").stripSuffix(".json").toInt)
-      .foldLeft(0)(math.max)
-  }
+  def currentVersion(spark: SparkSession, root: String): Int =
+    Manifest.latest(Manifest.fs(spark, root), groupDir(root), "g")
 
   /** The {table → pinned version} map of a group version. */
   def tableVersions(spark: SparkSession, root: String,
                     version: Option[Int] = None): Map[String, Int] = {
     val v = version.getOrElse(currentVersion(spark, root))
     require(v >= 1, s"no committed group version at $root")
-    val f = fs(spark, root)
-    val in = f.open(new Path(new Path(root, GroupDir), groupName(v)))
-    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    "\"([A-Za-z0-9_.-]+)\":(\\d+)".r.findAllMatchIn(body)
-      .filter(_.group(1) != "version")
-      .map(m => m.group(1) -> m.group(2).toInt).toMap
-  }
-
-  private def writeGroupCas(spark: SparkSession, root: String, v: Int,
-                            tables: Map[String, Int]): Boolean = {
-    val f = fs(spark, root)
-    val dir = new Path(root, GroupDir)
-    f.mkdirs(dir)
-    val target = new Path(dir, groupName(v))
-    if (f.exists(target)) return false
-    val body = tables.toSeq.sortBy(_._1)
-      .map { case (t, tv) => "\"" + t + "\":" + tv }.mkString(",")
-    val tmp = new Path(dir, s".tmp-${java.util.UUID.randomUUID()}")
-    val out = f.create(tmp, false)
-    try out.write(s"""{"version":$v,"tables":{$body}}""".getBytes("UTF-8"))
-    finally out.close()
-    val won = !f.exists(target) && f.rename(tmp, target)
-    if (!won) f.delete(tmp, false)
-    won
+    val m = Manifest.read(Manifest.fs(spark, root), new Path(groupDir(root), Manifest.name("g", v)))
+    m.path("tables").properties().asScala.map(e => e.getKey -> e.getValue.asInt).toMap
   }
 
   /** Commit `updates` (table → new content) as ONE group version:
@@ -581,7 +508,7 @@ object VersionedGroup {
     * group version.
     */
   def commit(root: String, updates: Map[String, DataFrame],
-             replace: Boolean = false, maxRetries: Int = 10): Int = {
+             replace: Boolean = false): Int = {
     require(updates.nonEmpty, "group commit needs at least one table")
     updates.keys.foreach(t => require(t.matches("[A-Za-z0-9_.-]+"),
       s"table name $t must be [A-Za-z0-9_.-]+"))
@@ -591,16 +518,14 @@ object VersionedGroup {
       t -> Versioned.commit(df, new Path(root, t).toString, replace)
     }
     // phase 2: pin them (plus the head's pins for untouched tables)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = currentVersion(spark, root)
+    Manifest.commitNext(Manifest.fs(spark, root), groupDir(root), "g") { head =>
       val base = if (head == 0) Map.empty[String, Int]
                  else tableVersions(spark, root, Some(head))
-      if (writeGroupCas(spark, root, head + 1, base ++ committed)) return head + 1
-      attempt += 1
+      val m = Manifest.obj().put("version", head + 1)
+      val tables = m.putObject("tables")
+      (base ++ committed).toSeq.sortBy(_._1).foreach { case (t, v) => tables.put(t, v) }
+      m
     }
-    throw new IllegalStateException(
-      s"group commit lost the version race $maxRetries times at $root")
   }
 
   /** Read one table at a pinned group version (default: head). */

@@ -4,6 +4,8 @@ import graft.pipeline.Backfill
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 class BackfillSpec extends SparkSuite {
   import spark.implicits._
 
@@ -65,6 +67,47 @@ class BackfillSpec extends SparkSuite {
       Backfill.runChunk(spark, source, "t",
         s => s.select(col("typ")), tmpDir("bf-m"), "day",
         "2024-01-01", "2024-01-02")
+    }
+  }
+
+  test("pooled runDaily leaves the session's overwrite mode alone and every partition outside its range") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "static")
+    def listing(dir: String): Seq[(String, Long)] = {
+      val root = java.nio.file.Paths.get(dir)
+      val files = java.nio.file.Files.walk(root)
+      try files.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(p => root.relativize(p).toString -> java.nio.file.Files.size(p)).toSeq.sorted
+      finally files.close()
+    }
+    try {
+      val dir = tmpDir("backfill-static") + "/t"
+      Seq(("2023-12-31", "z", 7L), ("2024-01-09", "z", 9L)).toDF("day", "typ", "sv")
+        .withColumn("day", col("day").cast("date"))
+        .write.partitionBy("day").parquet(dir)
+      // chunks [01,02] [03,04] [05,06] [07,07] run on the pool; the last is empty
+      val runs = Backfill.runDaily(spark, source, "t", mart, dir, "day",
+        "2024-01-01", "2024-01-07", chunkDays = 2)
+      assert(runs.map(_.rows) === Seq(2L, 1L, 1L, 0L))
+      assert(spark.conf.get(key).equalsIgnoreCase("static"))
+      assert(readBack(dir) === Map(("2023-12-31", "z") -> 7L,
+        ("2024-01-01", "a") -> 3L, ("2024-01-02", "b") -> 3L,
+        ("2024-01-03", "a") -> 4L, ("2024-01-05", "b") -> 5L,
+        ("2024-01-09", "z") -> 9L))
+      // an empty chunk leaves an existing table exactly as it was ...
+      val before = listing(dir)
+      assert(Backfill.runChunk(spark, source, "t", mart, dir, "day",
+        "2024-01-20", "2024-01-21").rows === 0L)
+      assert(listing(dir) === before)
+      // ... and creates nothing where there was no table
+      val fresh = tmpDir("backfill-none") + "/t"
+      assert(Backfill.runChunk(spark, source, "t", mart, fresh, "day",
+        "2024-01-20", "2024-01-21").rows === 0L)
+      assert(!new java.io.File(fresh).exists())
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
     }
   }
 }

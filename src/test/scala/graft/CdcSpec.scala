@@ -87,4 +87,40 @@ class CdcSpec extends SparkSuite {
     assert(out("c") === ((2L, 4L, 0.5, 1L, 1L)))
     assert(out("v") === ((1L, 4L, 0.25, 1L, 1L)))
   }
+
+  test("incrementalFilter misses a late row tied at the watermark; one tick below converges") {
+    import graft.sources.Versioned
+    val t1 = ts("2024-01-01 10:00:00")
+    val t2 = ts("2024-01-01 11:00:00")
+    val cycle1 = Seq((1L, t1, "a"), (2L, t2, "b")).toDF("k", "updated_at", "v")
+    // arrives after cycle 1 ran, stamped with cycle 1's watermark
+    val late = Seq((3L, t2, "c")).toDF("k", "updated_at", "v")
+    val source = cycle1.union(late)
+    def contents(dir: String) =
+      Versioned.read(spark, dir).collect().map(r => r.getLong(0) -> r.getString(2)).toMap
+    def watermark(dir: String) =
+      Cdc.lastLoadedValue(Versioned.read(spark, dir), "updated_at").head().getTimestamp(0)
+    val want = Map(1L -> "a", 2L -> "b", 3L -> "c")
+
+    // strict >: the late tie is never extracted
+    val strict = tmpDir("cdc-strict") + "/t"
+    Versioned.upsert(cycle1, strict, Seq("k"), "updated_at")
+    val missed = Cdc.incrementalFilter(source, "updated_at", lit(watermark(strict)))
+    assert(missed.count() === 0L)
+
+    // the recipe: extract from one tick (1 µs) below the watermark and
+    // let the keyed upsert absorb the rows extracted again
+    val recipe = tmpDir("cdc-recipe") + "/t"
+    Versioned.upsert(cycle1, recipe, Seq("k"), "updated_at")
+    def cycle(): Unit = {
+      val from = watermark(recipe).toInstant.minusNanos(1000L)
+      Versioned.upsert(Cdc.incrementalFilter(source, "updated_at", lit(from)),
+        recipe, Seq("k"), "updated_at")
+    }
+    cycle()
+    assert(contents(recipe) === want)
+    cycle() // idempotent: the next cycle re-extracts the tie and changes nothing
+    assert(contents(recipe) === want)
+    assert(Versioned.read(spark, recipe).count() === 3L)
+  }
 }

@@ -119,13 +119,13 @@ class R14bSpec extends SparkSuite {
     Versioned.commit(Seq((1L, 10.0)).toDF("k", "v"), dst)
     Versioned.commit(Seq((2L, 20.0, "x")).toDF("k", "v", "tag"), dst)
     // head merged: old row null-fills tag
-    val head = Versioned.read(spark, dst, mergeSchema = true)
+    val head = Versioned.read(spark, dst)
       .orderBy(col("k")).collect()
     assert(head.length === 2)
     assert(head(0).getLong(0) === 1L && head(0).isNullAt(2))
     assert(head(1).getAs[String]("tag") === "x")
     // time travel keeps the narrow schema
-    assert(Versioned.read(spark, dst, Some(1), mergeSchema = true)
+    assert(Versioned.read(spark, dst, Some(1))
       .columns.toSeq === Seq("k", "v"))
   }
 

@@ -150,4 +150,44 @@ class ScheduleSpec extends SparkSuite {
     // a hostile column NAME is escaped, never raw
     assert(!html.contains("<td>a<b</td>") && html.contains("a&lt;b"))
   }
+
+  test("Dag.run retries and records only non-fatal failures; a fatal one ends the run, serial or pooled") {
+    import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    // a pooled run that swallowed a fatal error would block forever:
+    // run it on its own thread with a deadline
+    def bounded(run: => Map[String, Dag.Status]): Map[String, Dag.Status] = {
+      val pool = Executors.newSingleThreadExecutor()
+      try pool.submit(new Callable[Map[String, Dag.Status]] { def call() = run })
+        .get(120, TimeUnit.SECONDS)
+      catch { case e: ExecutionException => throw e.getCause }
+      finally pool.shutdownNow()
+    }
+    val ok = Dag.Node("ok", Nil, () => ())
+    for (par <- Seq(1, 2)) {
+      val flakyRuns = new AtomicInteger()
+      val flaky = Dag.Node("flaky", Nil, () => {
+        if (flakyRuns.incrementAndGet() == 1) throw new RuntimeException("transient")
+      })
+      val broken = Dag.Node("broken", Nil, () => throw new IllegalStateException("bad"))
+      val status = bounded(Dag.run(Seq(flaky, broken, ok), maxRetries = 1,
+        levelParallelism = par))
+      assert(status("flaky") === Dag.Succeeded && flakyRuns.get === 2, s"par=$par")
+      assert(status("ok") === Dag.Succeeded)
+      assert(status("broken").isInstanceOf[Dag.Failed] &&
+        status("broken").asInstanceOf[Dag.Failed].attempts === 2)
+
+      val fatalRuns = new AtomicInteger()
+      val fatal = Dag.Node("fatal", Nil, () => {
+        fatalRuns.incrementAndGet(); throw new OutOfMemoryError("simulated")
+      })
+      intercept[OutOfMemoryError](
+        bounded(Dag.run(Seq(fatal, ok), maxRetries = 3, levelParallelism = par)))
+      assert(fatalRuns.get === 1, s"a fatal error is not retried (par=$par)")
+
+      val interrupted = Dag.Node("interrupted", Nil, () => throw new InterruptedException())
+      intercept[InterruptedException](
+        bounded(Dag.run(Seq(interrupted, ok), maxRetries = 3, levelParallelism = par)))
+    }
+  }
 }

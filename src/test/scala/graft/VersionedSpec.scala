@@ -136,7 +136,7 @@ class VersionedSpec extends SparkSuite {
     // first CAS must lose and the retry must re-derive from v2, so
     // the interloper's row survives in the final head.
     var interleaved = false
-    val v = Versioned.commitRebase(spark, dir, maxRetries = 5) { head =>
+    val v = Versioned.commitRebase(spark, dir) { head =>
       val base = Versioned.read(spark, dir, Some(head))
       if (!interleaved) {
         interleaved = true
@@ -324,5 +324,53 @@ class VersionedSpec extends SparkSuite {
     Versioned.vacuum(spark, dst, keepVersions = 1, retentionMs = 0L)
     assert(Versioned.read(spark, src).count() === 4)
     assert(Versioned.read(spark, dst).count() === 4)
+  }
+
+  test("every write path records the schema a schemaless parquet read infers") {
+    import graft.operators.Merge.{MatchedUpdate, NotMatchedInsert}
+    import org.apache.spark.sql.types.MetadataBuilder
+    val note = new MetadataBuilder().putString("comment", "amount in kobo").build()
+    def rows(ks: Seq[Long], ver: Long) = ks.map(k => (k, ver, s"n$k", k * 1.5)).toDF("k", "ver", "name", "amt")
+      .select(col("k"), col("ver"), col("name"), col("amt").as("amt", note),
+        struct(col("k").as("id"), array(col("name")).as("tags")).as("nested"),
+        timestamp_seconds(col("ver")).as("ts"), col("amt").cast("decimal(12,2)").as("dec"))
+    // the same segments read with nothing but parquet inference; it
+    // takes one file's footer, so it is only a reference where the
+    // version's segments agree on their schema
+    def inferred(df: org.apache.spark.sql.DataFrame) = {
+      import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+      val segments = df.queryExecution.analyzed.collect { case r: LogicalRelation => r.relation }
+        .collect { case h: HadoopFsRelation => h.location.rootPaths.map(_.toString) }.flatten
+      spark.read.parquet(segments: _*).schema
+    }
+    def check(path: String, v: Int, what: String): Unit = {
+      val df = Versioned.read(spark, path, Some(v))
+      assert(df.schema === inferred(df), what)
+    }
+    val dir = tmpDir("ver-schema") + "/t"
+    check(dir, Versioned.commit(rows(1L to 5L, 1L), dir, replace = true), "commit replace")
+    val appended = Versioned.commit(rows(6L to 8L, 1L), dir)
+    check(dir, appended, "commit append")
+    check(dir, Versioned.upsert(rows(Seq(2L, 9L), 2L), dir, Seq("k"), "ver"), "upsert")
+    check(dir, Versioned.mergeInto(rows(Seq(3L, 10L), 3L), dir, Seq("k"),
+      matched = Seq(MatchedUpdate(Map("name" -> col("s.name")))),
+      notMatched = Seq(NotMatchedInsert())), "mergeInto")
+    // the merge dropped the column comment, so this append's segments
+    // disagree on it: the version keeps its head's schema, and so do
+    // its compaction and its restore
+    val mixed = Versioned.commit(rows(Seq(11L), 4L), dir)
+    val mergedSchema = Versioned.read(spark, dir, Some(mixed - 1)).schema
+    assert(Versioned.read(spark, dir, Some(mixed)).schema === mergedSchema)
+    check(dir, Versioned.compact(spark, dir), "compact")
+    assert(Versioned.read(spark, dir).schema === mergedSchema)
+    assert(Versioned.read(spark, dir, Some(Versioned.restore(spark, dir, toVersion = mixed)))
+      .schema === mergedSchema)
+    check(dir, Versioned.restore(spark, dir, toVersion = appended), "restore")
+    val clone = tmpDir("ver-schema-clone") + "/t"
+    check(clone, Versioned.shallowClone(spark, dir, clone), "shallowClone")
+    val wap = tmpDir("ver-schema-wap") + "/t"
+    val (published, _) = Versioned.writeAuditPublish(rows(1L to 3L, 1L), wap,
+      _.filter(col("k") < 0))
+    check(wap, published.get, "writeAuditPublish")
   }
 }
