@@ -105,7 +105,7 @@ object Bench {
     // first, serially, so the stamped store_build_sec measures a
     // quiet build, not pool contention; (b) a few builders
     // save/set/restore session confs (shuffle.partitions,
-    // autoBroadcastJoinThreshold, partitionOverwriteMode) whose
+    // partitionOverwriteMode, parquet nanosAsLong) whose
     // save/restore can interleave wrongly across threads — harmless
     // for the DISCARDED warmup outputs, but the timed loop must not
     // inherit a raced value, so the pre-warmup values are reasserted
@@ -134,7 +134,6 @@ object Bench {
       // owners to warm the parquet/agg/codegen paths the builds use.
       SparkEntry.queries.get("corpus_top_terms").foreach(warmOne)
       val confGuard = Seq("spark.sql.shuffle.partitions",
-        "spark.sql.autoBroadcastJoinThreshold",
         "spark.sql.sources.partitionOverwriteMode",
         "spark.sql.legacy.parquet.nanosAsLong")
         .map(k => k -> spark.conf.getOption(k))

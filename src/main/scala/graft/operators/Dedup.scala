@@ -16,6 +16,26 @@ import org.apache.spark.sql.functions._
   * shared-shingle buckets are additionally capped by document
   * frequency (`maxDocFreq`) so one hot shingle can't fan out d².
   *
+  * The six pair methods — n-gram Jaccard, MinHash-LSH, SimHash,
+  * shared runs, embedding cosine and edit distance — plus
+  * [[semanticDedup]] share ONE candidate core. Each method supplies
+  * only its per-doc frames, its blocking-key frames (probe side and
+  * index side, which may differ: PPJoin prefixes vs full postings,
+  * edit-distance probes vs segments) and its verifier. The core does
+  * the rest: the key join (salted where the method asks), pair
+  * orientation, the keyed repartition that pins the pair-space width,
+  * `distinct` (or the shared-runs count), the payload fetch, and the
+  * cross ∪ intra union. A batch run `X(docs)` is the intra half over
+  * the method's frames of `docs`; `XIncremental(index, batch)` is the
+  * cross half — the batch probing the stored index — unioned with
+  * the batch's intra half when intra-batch pairs are asked for, so
+  * the two forms cannot drift apart or build the batch frames twice.
+  * Method-specific pre-steps (n-gram's merged-df cap and orphan
+  * rescue, shared runs' merged df, edit distance's short-string band)
+  * keep their own code and feed the core. Exact, segment,
+  * contamination and cross-source dedup produce keepers, rebuilt text
+  * or matrices rather than scored pairs, and stay outside it.
+  *
   * Cost discipline for the expensive parts (measured, not guessed):
   *  - inputs are `Par.widen`ed — shingling/hashing after a
   *    single-file scan otherwise runs on one core;
@@ -86,36 +106,165 @@ object Dedup {
       .withColumn("dup_rate",
         round(col("dup_docs").cast("double") / col("n_docs").cast("double"), 6))
 
-  /** Near-duplicate pairs by word-n-gram Jaccard similarity, with
-    * PPJoin-style PREFIX FILTERING for candidate generation (Bayardo
-    * et al. WWW'07 "Scaling Up All Pairs"; Xiao et al. PPJoin): order
-    * every doc's shingles by a global (document-frequency asc, gram)
-    * order and join only each doc's first `len - ceil(t*len) + 1`
-    * shingles. Any pair with Jaccard ≥ t shares ≥ ceil(t*len) shingles
-    * per side, so by pigeonhole the prefixes of both sides must
-    * intersect — no qualifying pair is missed. Candidates are then
-    * verified with the EXACT Jaccard over the full surviving shingle
-    * sets, so output is identical to the naive share-any-shingle join
-    * while the candidate join touches a fraction of the occurrences
-    * (and the rarest-first order keeps hot grams out of prefixes).
-    *
-    * `maxDocFreq > 0` removes shingles whose document frequency
-    * exceeds the cap from the VOCABULARY — candidate generation AND
-    * scoring (per-doc sets are recomputed over surviving shingles, so
-    * numerator and denominator stay consistent). This is the standard
-    * hot-shingle bound: one boilerplate phrase shared by 10k docs
-    * would alone fan out 5·10⁷ candidate pairs. With the cap above
-    * every actual df, output is bit-identical to uncapped.
-    *
-    * Edge case, handled: a doc whose shingles are ALL above the cap
-    * drops out of the capped vocabulary entirely. Such orphans are
-    * rescued through a whole-document bucket (hash of the full sorted
-    * shingle multiset): orphans with IDENTICAL shingle sets — e.g.
-    * bit-identical pure-boilerplate docs — still pair, at their true
-    * Jaccard of 1.0. Orphans that differ get no pair (their mutual
-    * similarity is boilerplate-only by construction); pair with
-    * [[exact]] if byte-identical fallback coverage must be total.
+  // ---- the candidate-pair core ----
+
+  /** One corpus as the candidate core sees it — a batch, or a stored
+    * index. `probe` and `index` are blocking-key rows
+    * `(id, key columns, carried columns)`: within the corpus `probe`
+    * joins `index`; across, a batch's `probe` joins the stored index's
+    * `index`. A symmetric method passes one frame as both (PPJoin
+    * prefixes, LSH bands, SimHash blocks); an asymmetric one passes
+    * two (edit-distance probes vs segments, n-gram prefixes vs full
+    * postings) and carries no columns. `payload` builds the per-doc
+    * rows `(id, ...)` the verifier reads from this side's distinct
+    * candidate ids (`id`; only the stored n-gram index uses them, to
+    * fetch candidate postings alone); `None` when everything rides the
+    * key rows. `extra` holds candidate pairs found outside the key
+    * join, already oriented (edit distance's short-string band).
     */
+  private final case class Frames(probe: DataFrame, index: DataFrame,
+                                  payload: Option[DataFrame => DataFrame] = None,
+                                  extra: Option[DataFrame] = None)
+
+  /** What a pair method fixes beyond its frames: the blocking key
+    * columns, the verifier, whether the key join is salted, and
+    * whether candidates are deduplicated (`distinct`) or counted
+    * (`minShared` shared keys, the shared-runs rule). The verifier
+    * reads `(id_a, id_b)` plus every carried and payload column
+    * suffixed `_a` / `_b`, treats both sides alike, and returns
+    * `(id_a, id_b, score)`.
+    */
+  private final case class PairMethod(on: Seq[String],
+                                      verify: DataFrame => DataFrame,
+                                      salted: Boolean = false,
+                                      minShared: Option[Int] = None)
+
+  /** The batch form of a pair method: the intra half over its frames. */
+  private def intra(m: PairMethod, f: Frames): DataFrame =
+    verifiedPairs(m, f.probe, f.index, within = true, f.payload, f.payload, f.extra)
+
+  /** The cross half: `batch` probes the stored `index`. */
+  private def cross(m: PairMethod, index: Frames, batch: Frames): DataFrame =
+    verifiedPairs(m, batch.probe, index.index, within = false,
+      index.payload, batch.payload, batch.extra)
+
+  /** The incremental form: the cross half, plus the batch's own intra
+    * half when intra-batch pairs are asked for. Both halves read the
+    * same batch frames, built once by the caller. With `oneJoin` (a
+    * method that fetches no payload and whose index keys are already
+    * cut down to the batch's) the halves share ONE key join — the
+    * batch probes index ∪ batch keys, each row oriented by the side it
+    * came from — and one pair shuffle.
+    */
+  private def incremental(m: PairMethod, index: Frames, batch: Frames,
+                          withIntra: Boolean, oneJoin: Boolean = false): DataFrame =
+    if (withIntra && oneJoin)
+      verifiedPairs(m, batch.probe, index.index.withColumn("__intra", lit(false))
+          .unionByName(batch.index.withColumn("__intra", lit(true))),
+        within = false, None, None, None)
+    else {
+      val c = cross(m, index, batch)
+      if (withIntra) c.unionByName(intra(m, batch)) else c
+    }
+
+  /** Candidate pairs of `probe` (side `b`) against `index` (side `a`),
+    * verified:
+    *  - Orientation. Within one corpus pairs leave as `id_a < id_b` —
+    *    a symmetric join filters `<`, an asymmetric one filters `=!=`
+    *    and takes `least`/`greatest` so both directions collapse.
+    *    Across, pairs keep their (index, batch) sides through the
+    *    payload fetch, so each side joins its OWN payload frame (a
+    *    bucketed index payload stays exchange-free), and are put in
+    *    `least`/`greatest` order after the verifier.
+    *  - Salting. `(key)` values can be few (LSH buckets, k-means
+    *    cells), so an unsalted join hands whole buckets to single
+    *    reducers — and AQE, seeing tiny INPUT bytes, coalesces the
+    *    pair-GENERATING join down to one task (measured at sf0.1: the
+    *    whole embedding candidate pipeline ran single-threaded, 16 s).
+    *    Side `a` keeps one salt derived from its id; side `b` is
+    *    replicated across all salts, so each pair still matches once.
+    *  - Width. The candidate join's INPUT is small, so AQE would also
+    *    coalesce the pair space (the join output) to one task; a
+    *    keyed user repartition pins the width, and `distinct` (or the
+    *    shared-key count) and the payload joins reuse it.
+    */
+  private def verifiedPairs(m: PairMethod, probe: DataFrame, index: DataFrame,
+                            within: Boolean,
+                            payloadA: Option[DataFrame => DataFrame],
+                            payloadB: Option[DataFrame => DataFrame],
+                            extra: Option[DataFrame]): DataFrame = {
+    val spark = probe.sparkSession
+    def side(df: DataFrame, s: String): DataFrame = df.select(df.columns.map(c =>
+      if (m.on.contains(c)) col(c) else col(c).as(s"${c}_$s")): _*)
+    val (a, b, on) =
+      if (!m.salted) (side(index, "a"), side(probe, "b"), m.on)
+      else {
+        val salts = math.max(1, math.min(64, spark.sparkContext.defaultParallelism))
+        (side(index, "a").withColumn("salt", pmod(xxhash64(col("id_a")), lit(salts.toLong))),
+          side(probe, "b").withColumn("salt",
+            explode(array((0 until salts).map(s => lit(s.toLong)): _*))),
+          m.on :+ "salt")
+      }
+    val joined = a.join(b, on)
+    val carried = joined.columns.filterNot(c =>
+      on.contains(c) || Seq("id_a", "id_b", "__intra_a").contains(c)).map(col)
+    val (ida, idb) = (col("id_a"), col("id_b"))
+    // across, rows a one-join incremental drew from the batch's own
+    // keys pair within (`<`); the stored index's rows pair across
+    val intraRow =
+      if (joined.columns.contains("__intra_a")) col("__intra_a") else lit(false)
+    val oriented =
+      if (within && (probe eq index)) joined.filter(ida < idb).select(ida +: idb +: carried: _*)
+      else if (within) joined.filter(ida =!= idb)
+        .select(least(ida, idb).as("id_a"), greatest(ida, idb).as("id_b"))
+      else joined.filter(when(intraRow, ida < idb).otherwise(ida =!= idb))
+        .select(ida +: idb +: carried: _*)
+    val width = spark.conf.getOption("spark.sql.shuffle.partitions")
+      .flatMap(v => scala.util.Try(v.toInt).toOption)
+      .getOrElse(spark.sparkContext.defaultParallelism)
+    val spread = extra.fold(oriented)(oriented.unionByName(_))
+      .repartition(width, ida, idb)
+    val cand = m.minShared match {
+      case Some(k) => spread.groupBy(ida, idb)
+        .agg(count(lit(1)).as("n_shared")).filter(col("n_shared") >= k)
+      case None => spread.distinct()
+    }
+    def fetch(df: DataFrame, payload: Option[DataFrame => DataFrame], s: String) =
+      payload.fold(df) { p =>
+        val ids = cand.select(col(s"id_$s").as("id")).distinct()
+        df.join(side(p(ids), s), Seq(s"id_$s"))
+      }
+    val scored = m.verify(fetch(fetch(cand, payloadA, "a"), payloadB, "b"))
+    if (within) scored
+    else scored.select(least(ida, idb).as("id_a") +: greatest(ida, idb).as("id_b") +:
+      scored.columns.filterNot(c => c == "id_a" || c == "id_b").map(col): _*)
+  }
+
+  /** Exact Jaccard of sorted hashed-shingle arrays `hs_a` / `hs_b`
+    * (codegen'd merge-walk intersection, no per-pair hash set;
+    * |A ∪ B| = |A| + |B| − |A ∩ B|).
+    */
+  private def jaccardPairs(on: Seq[String], threshold: Double): PairMethod =
+    PairMethod(on, _
+      .withColumn("common", Vectors.sortedIntersectCount(col("hs_a"), col("hs_b")))
+      .withColumn("jaccard", col("common").cast("double") /
+        (size(col("hs_a")) + size(col("hs_b")) - col("common")).cast("double"))
+      .filter(col("jaccard") >= threshold)
+      .select(col("id_a"), col("id_b"), col("jaccard")))
+
+  /** Exact cosine over (vec, nrm) payloads: vectors are normalized once
+    * per doc, so a pair costs one dot product.
+    */
+  private def cosine(pairs: DataFrame, threshold: Double): DataFrame = pairs
+    .withColumn("cosine",
+      Vectors.dot(col("vec_a"), col("vec_b")) / (col("nrm_a") * col("nrm_b")))
+    .filter(col("cosine") >= threshold)
+    .select(col("id_a"), col("id_b"), col("cosine"))
+
+  /** Salted LSH-bucket (or cell) blocking, verified by exact cosine. */
+  private def cosinePairs(on: Seq[String], threshold: Double): PairMethod =
+    PairMethod(on, cosine(_, threshold), salted = true)
+
   /** Asymmetric CONTAINMENT search (Broder '97's c(Q,D) =
     * |S(Q)∩S(D)|/|S(Q)| — the one-sided cousin of Jaccard): find
     * documents that CONTAIN a query document's shingles, however much
@@ -159,72 +308,49 @@ object Dedup {
         col("n_common"), col("containment"))
   }
 
+  /** Near-duplicate pairs by word-n-gram Jaccard similarity, with
+    * PPJoin-style PREFIX FILTERING for candidate generation (Bayardo
+    * et al. WWW'07 "Scaling Up All Pairs"; Xiao et al. PPJoin): order
+    * every doc's shingles by a global (document-frequency asc, gram)
+    * order and join only each doc's first `len - ceil(t*len) + 1`
+    * shingles. Any pair with Jaccard ≥ t shares ≥ ceil(t*len) shingles
+    * per side, so by pigeonhole the prefixes of both sides must
+    * intersect — no qualifying pair is missed. Candidates are then
+    * verified with the EXACT Jaccard over the full surviving shingle
+    * sets, so output is identical to the naive share-any-shingle join
+    * while the candidate join touches a fraction of the occurrences
+    * (and the rarest-first order keeps hot grams out of prefixes).
+    *
+    * `maxDocFreq > 0` removes shingles whose document frequency
+    * exceeds the cap from the VOCABULARY — candidate generation AND
+    * scoring (per-doc sets are recomputed over surviving shingles, so
+    * numerator and denominator stay consistent). This is the standard
+    * hot-shingle bound: one boilerplate phrase shared by 10k docs
+    * would alone fan out 5·10⁷ candidate pairs. With the cap above
+    * every actual df, output is bit-identical to uncapped.
+    *
+    * Edge case, handled: a doc whose shingles are ALL above the cap
+    * drops out of the capped vocabulary entirely. Such orphans are
+    * rescued through a whole-document bucket (hash of the full sorted
+    * shingle multiset): orphans with IDENTICAL shingle sets — e.g.
+    * bit-identical pure-boilerplate docs — still pair, at their true
+    * Jaccard of 1.0. Orphans that differ get no pair (their mutual
+    * similarity is boilerplate-only by construction); pair with
+    * [[exact]] if byte-identical fallback coverage must be total.
+    */
   def ngramJaccard(docs: DataFrame, idCol: String, textCol: String,
                    n: Int = 3, threshold: Double = 0.8,
                    maxDocFreq: Int = 0): DataFrame = {
-    val sh = Par.widen(docs.select(col(idCol), col(textCol)), idCol)
-      .select(col(idCol).as("id"), Text.shingles(col(textCol), n).as("sh"))
-    // every gram is hashed to a LONG once at explode time: df counting,
-    // the prefix join, and set intersection all run on 8-byte keys
-    // instead of ~30-byte strings (measured 2× on the whole operator;
-    // 64-bit collisions are vanishingly rare and only perturb one
-    // pair's count). Shingles are distinct per doc, so the hashes are
-    // too (w.h.p.) and count-per-hash = document frequency.
-    val base = Par.persistTracked(sh.select(col("id"),
-      explode(col("sh")).as("g")).select(col("id"), xxhash64(col("g")).as("gram")))
+    val base = ngramOccurrences(docs, idCol, textCol, n)
     // df from a groupBy (map-side partial agg): a window over gram
     // would funnel every occurrence of a hot gram through one reducer.
-    val dfs = base.groupBy(col("gram")).agg(count(lit(1)).as("__df"))
-    val vocab = if (maxDocFreq > 0) dfs.filter(col("__df") <= maxDocFreq) else dfs
-    // surviving occurrences with their gram's global df attached
-    // (shuffle on gram — the same key the old candidate self-join
-    // shuffled on, but this table is read once, not squared). NOT
-    // persisted: `sets` is its only consumer — the orphan path reads
-    // surviving IDS from `sets` (one row per doc already).
-    val kept = base.join(vocab, Seq("gram"))
-    // ONE per-doc aggregation produces BOTH sides: `grams` sorted by
-    // value for the merge-walk rescore (codegen'd SortedIntersectCount
-    // — no per-pair hash set) AND the PPJoin prefix — (df, gram)
-    // structs array_sorted rarest-first in-group, sliced to the first
-    // (len - ceil(t*len) + 1) entries. The former window-function
-    // prefix pass re-shuffled and re-sorted the whole occurrence
-    // table; folding it here rides the shuffle the set build already
-    // pays, and the in-group array_sort is bounded by doc size.
-    val sets = Par.persistTracked(kept.groupBy(col("id"))
-      .agg(sort_array(collect_list(col("gram"))).as("grams"),
-        count(lit(1)).as("cnt"),
-        sort_array(collect_list(struct(col("__df"), col("gram")))).as("__dg"))
-      .withColumn("__plen",
-        (col("cnt") - ceil(col("cnt") * lit(threshold)) + 1).cast("int"))
-      .withColumn("prefix",
-        transform(slice(col("__dg"), lit(1), col("__plen")), _.getField("gram")))
-      .drop("__dg", "__plen"))
+    val dfs = base.groupBy(col("gram")).agg(count(lit(1)).as("df"))
+    val vocab = if (maxDocFreq > 0) dfs.filter(col("df") <= maxDocFreq) else dfs
+    // the orphan path reads surviving IDS from the persisted `sets`
+    val sets = ngramSets(base, vocab, threshold)
     val prefix = sets.select(col("id"), explode(col("prefix")).as("gram"))
-    // explicit keyed repartition before the pair-distinct: the
-    // candidate join's INPUT is small, so AQE would otherwise coalesce
-    // the pair-space (join output) down to one task; a user
-    // repartition pins the width and distinct + the rescore joins
-    // reuse the partitioning
-    val width = docs.sparkSession.conf.getOption("spark.sql.shuffle.partitions")
-      .map(_.toInt).getOrElse(docs.sparkSession.sparkContext.defaultParallelism)
-    val cand = prefix.select(col("gram"), col("id").as("id_a"))
-      .join(prefix.select(col("gram"), col("id").as("id_b")), Seq("gram"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .repartition(width, col("id_a"), col("id_b"))
-      .distinct()
-    val scored = cand
-      .join(sets.select(col("id").as("id_a"), col("grams").as("g_a"),
-        col("cnt").as("cnt_a")), Seq("id_a"))
-      .join(sets.select(col("id").as("id_b"), col("grams").as("g_b"),
-        col("cnt").as("cnt_b")), Seq("id_b"))
-      .withColumn("common",
-        graft.functions.Vectors.sortedIntersectCount(col("g_a"), col("g_b")))
-      .withColumn("jaccard",
-        col("common").cast("double") /
-          (col("cnt_a") + col("cnt_b") - col("common")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+    val scored = intra(jaccardPairs(Seq("gram"), threshold),
+      Frames(prefix, prefix, Some(_ => sets.select(col("id"), col("hs")))))
     if (maxDocFreq <= 0) scored
     else {
       // whole-doc-hash rescue bucket for all-hot-shingle orphans;
@@ -241,12 +367,40 @@ object Dedup {
     }
   }
 
-  /** Persistent n-gram Jaccard index frames (see
-    * [[ngramJaccardIncremental]]): `occ` = per-doc distinct hashed
-    * gram occurrences (store bucketed on BOTH gram and id copies for
-    * probe-only joins), `dfs` = per-gram document frequency, `meta` =
-    * per-doc whole-set hash + orphan flag under the index's own cap.
+  /** Per-doc n-gram sets (id, hs, prefix) over the occurrences
+    * (id, gram) whose gram is in `vocab` (gram, df), persisted; docs
+    * with no surviving gram get no row. ONE per-doc aggregation
+    * produces BOTH sides: `hs` sorted by value for the merge-walk
+    * verify, and the PPJoin prefix — (df, gram) structs array_sorted
+    * rarest-first in-group, sliced to the first
+    * (len - ceil(t*len) + 1) entries. A separate window-function
+    * prefix pass would re-shuffle and re-sort the whole occurrence
+    * table; folding it here rides the shuffle the set build already
+    * pays, and the in-group array_sort is bounded by doc size.
+    *
+    * The df attaches by a LEFT join, whose broadcast build side can
+    * only be `vocab`: the occurrences then stream on their id
+    * partitioning straight into the per-doc aggregation. With an
+    * inner join AQE broadcast whichever small side reported
+    * statistics first, and when that was the occurrences the
+    * aggregation paid one more shuffle — a job count that changed
+    * from run to run on the same input. Over-cap grams come out with
+    * a null df, which the aggregates skip.
     */
+  private def ngramSets(occ: DataFrame, vocab: DataFrame, threshold: Double): DataFrame = {
+    val kept = col("df").isNotNull
+    Par.persistTracked(occ.join(vocab, Seq("gram"), "left").groupBy(col("id"))
+      .agg(sort_array(collect_list(when(kept, col("gram")))).as("hs"),
+        count(col("df")).as("cnt"),
+        sort_array(collect_list(when(kept, struct(col("df"), col("gram"))))).as("__dg"))
+      .filter(col("cnt") > 0)
+      .withColumn("__plen",
+        (col("cnt") - ceil(col("cnt") * lit(threshold)) + 1).cast("int"))
+      .withColumn("prefix",
+        transform(slice(col("__dg"), lit(1), col("__plen")), _.getField("gram")))
+      .drop("__dg", "__plen", "cnt"))
+  }
+
   /** Persistent n-gram index frames. `occ` (id, gram) is probed BY
     * GRAM in the incremental candidate join — store it bucketed on
     * `gram`. The incremental path also FETCHES candidate docs' full
@@ -266,11 +420,7 @@ object Dedup {
     */
   def ngramIndexFrames(docs: DataFrame, idCol: String, textCol: String,
                        n: Int = 3, maxDocFreq: Int = 0): NgramIndex = {
-    val base = Par.persistTracked(
-      Par.widen(docs.select(col(idCol), col(textCol)), idCol)
-        .select(col(idCol).as("id"),
-          explode(Text.shingles(col(textCol), n)).as("g"))
-        .select(col("id"), xxhash64(col("g")).as("gram")))
+    val base = ngramOccurrences(docs, idCol, textCol, n)
     val dfs = base.groupBy(col("gram")).agg(count(lit(1)).as("df"))
     val whole = base.groupBy(col("id"))
       .agg(xxhash64(sort_array(collect_list(col("gram")))).as("wh"))
@@ -285,6 +435,22 @@ object Dedup {
       }
     NgramIndex(base, dfs, meta)
   }
+
+  /** Persisted hashed-gram occurrences (id, gram) of a corpus. Every
+    * gram is hashed to a LONG once at explode time: df counting, the
+    * prefix join, and set intersection all run on 8-byte keys instead
+    * of ~30-byte strings (measured 2× on the whole operator; 64-bit
+    * collisions are vanishingly rare and only perturb one pair's
+    * count). Shingles are distinct per doc, so the hashes are too
+    * (w.h.p.) and count-per-hash = document frequency.
+    */
+  private def ngramOccurrences(docs: DataFrame, idCol: String, textCol: String,
+                               n: Int): DataFrame =
+    Par.persistTracked(
+      Par.widen(docs.select(col(idCol), col(textCol)), idCol)
+        .select(col(idCol).as("id"), Text.shingles(col(textCol), n).as("sh"))
+        .select(col("id"), explode(col("sh")).as("g"))
+        .select(col("id"), xxhash64(col("g")).as("gram")))
 
   /** Incremental n-gram Jaccard — the daily-delta form of
     * [[ngramJaccard]], with EXACT merged-corpus semantics: document
@@ -307,20 +473,22 @@ object Dedup {
     * occurrences by the batch's surviving grams, set rescoring
     * fetches candidate index docs only, and the df merge is
     * vocabulary-sized. Batch ids must be disjoint from index ids.
+    *
+    * SINGLE-SIDED prefix: a pair with J ≥ t has |a∩b| ≥ ⌈t·|a|⌉ for
+    * the BATCH doc a alone, so if b misses all of a's first
+    * |a|−⌈t·|a|⌉+1 rarest grams the overlap fits in a's suffix of
+    * size ⌈t·|a|⌉−1 — contradiction. Probing the index's full
+    * postings with batch PREFIXES only is therefore lossless, and
+    * needs no stored index-side prefixes (the global df order moves
+    * as the corpus grows; batch prefixes use the merged df computed
+    * this run).
     */
   def ngramJaccardIncremental(index: NgramIndex, batch: DataFrame,
                               idCol: String, textCol: String,
                               n: Int = 3, threshold: Double = 0.8,
                               maxDocFreq: Int = 0,
                               includeIntraBatch: Boolean = false): DataFrame = {
-    val spark = batch.sparkSession
-    val width = spark.conf.getOption("spark.sql.shuffle.partitions")
-      .map(_.toInt).getOrElse(spark.sparkContext.defaultParallelism)
-    val bbase = Par.persistTracked(
-      Par.widen(batch.select(col(idCol), col(textCol)), idCol)
-        .select(col(idCol).as("id"),
-          explode(Text.shingles(col(textCol), n)).as("g"))
-        .select(col("id"), xxhash64(col("g")).as("gram")))
+    val bbase = ngramOccurrences(batch, idCol, textCol, n)
     val bdfs = bbase.groupBy(col("gram")).agg(count(lit(1)).as("bdf"))
     val merged = Par.persistTracked(
       index.dfs.join(bdfs, Seq("gram"), "full_outer")
@@ -328,72 +496,21 @@ object Dedup {
           (coalesce(col("df"), lit(0L)) + coalesce(col("bdf"), lit(0L))).as("df")))
     val vocab =
       if (maxDocFreq > 0) merged.filter(col("df") <= maxDocFreq) else merged
-    // batch surviving occurrences under the MERGED vocabulary, with
-    // the merged df kept for the prefix order
-    val survB = Par.persistTracked(bbase.join(vocab, Seq("gram")))
-    // per-batch-doc sets + SINGLE-SIDED PPJoin prefix: a pair with
-    // J ≥ t has |a∩b| ≥ ⌈t·|a|⌉ for the BATCH doc a alone, so if b
-    // misses all of a's first |a|−⌈t·|a|⌉+1 rarest grams the overlap
-    // fits in a's suffix of size ⌈t·|a|⌉−1 — contradiction. Probing
-    // the index with batch PREFIXES only is therefore lossless, and
-    // needs no stored index-side prefixes (the global df order moves
-    // as the corpus grows; batch prefixes use the merged df computed
-    // this run). Same fused-aggregation shape as [[ngramJaccard]].
-    val bsets = Par.persistTracked(survB.groupBy(col("id"))
-      .agg(sort_array(collect_list(col("gram"))).as("grams"),
-        count(lit(1)).as("cnt"),
-        sort_array(collect_list(struct(col("df"), col("gram")))).as("__dg"))
-      .withColumn("__plen",
-        (col("cnt") - ceil(col("cnt") * lit(threshold)) + 1).cast("int"))
-      .withColumn("prefix",
-        transform(slice(col("__dg"), lit(1), col("__plen")), _.getField("gram")))
-      .drop("__dg", "__plen"))
+    // batch sets under the MERGED vocabulary, the merged df ordering
+    // each prefix
+    val bsets = ngramSets(bbase, vocab, threshold)
     val bprefix = bsets.select(col("id"), explode(col("prefix")).as("gram"))
-    // cross candidates: index postings probed by the batch's prefix
-    // grams (sub-cap is a GLOBAL property, so the gram survives for
-    // the index doc too)
-    val cand = bprefix.select(col("gram"), col("id").as("id_n"))
-      .join(index.occ.select(col("gram"), col("id").as("id_i")), Seq("gram"))
-      .select(col("id_i"), col("id_n"))
-      .repartition(width, col("id_i"), col("id_n"))
-      .distinct()
-    // surviving sets for CANDIDATE index docs only, under merged
-    // vocab — an id-keyed fetch, so it reads the id-bucketed copy
+    // surviving sets for CANDIDATE index docs only, under the merged
+    // vocab (sub-cap is a GLOBAL property) — an id-keyed fetch, so it
+    // reads the id-bucketed copy
     val occById = index.occById.getOrElse(index.occ)
-    val isets = occById
-      .join(cand.select(col("id_i").as("id")).distinct(), Seq("id"))
+    val occ = index.occ.select(col("id"), col("gram"))
+    val stored = Frames(occ, occ, Some(ids => occById.join(ids, Seq("id"))
       .join(vocab.select(col("gram")), Seq("gram"))
-      .groupBy(col("id"))
-      .agg(sort_array(collect_list(col("gram"))).as("grams"),
-        count(lit(1)).as("cnt"))
-    def score(pairs: DataFrame, setsA: DataFrame, setsB: DataFrame): DataFrame =
-      pairs
-        .join(setsA.select(col("id").as("__pa"), col("grams").as("g_a"),
-          col("cnt").as("cnt_a")), col("__pa") === col("id_i"))
-        .join(setsB.select(col("id").as("__pb"), col("grams").as("g_b"),
-          col("cnt").as("cnt_b")), col("__pb") === col("id_n"))
-        .withColumn("common",
-          graft.functions.Vectors.sortedIntersectCount(col("g_a"), col("g_b")))
-        .withColumn("jaccard",
-          col("common").cast("double") /
-            (col("cnt_a") + col("cnt_b") - col("common")).cast("double"))
-        .filter(col("jaccard") >= threshold)
-        .select(least(col("id_i"), col("id_n")).as("id_a"),
-          greatest(col("id_i"), col("id_n")).as("id_b"), col("jaccard"))
-    val crossScored = score(cand, isets, bsets)
-    val intraScored =
-      if (!includeIntraBatch) crossScored.limit(0)
-      else {
-        // both-sides prefix filter, exactly the full operator's shape
-        val intra = bprefix.select(col("gram"), col("id").as("id_i"))
-          .join(bprefix.select(col("gram"), col("id").as("id_n")), Seq("gram"))
-          .filter(col("id_i") < col("id_n"))
-          .select(col("id_i"), col("id_n"))
-          .repartition(width, col("id_i"), col("id_n"))
-          .distinct()
-        score(intra, bsets, bsets)
-      }
-    val scored = crossScored.unionByName(intraScored)
+      .groupBy(col("id")).agg(sort_array(collect_list(col("gram"))).as("hs"))))
+    val scored = incremental(jaccardPairs(Seq("gram"), threshold), stored,
+      Frames(bprefix, bprefix, Some(_ => bsets.select(col("id"), col("hs")))),
+      includeIntraBatch)
     if (maxDocFreq <= 0) scored
     else {
       // --- orphan rescue under the merged cap ---
@@ -418,23 +535,16 @@ object Dedup {
         .join(bOrphan.select(col("wh"), col("id").as("id_n")), Seq("wh"))
         .select(least(col("id_i"), col("id_n")).as("id_a"),
           greatest(col("id_i"), col("id_n")).as("id_b"), lit(1.0).as("jaccard"))
-      val rescueIntra =
-        if (!includeIntraBatch) rescueCross.limit(0)
-        else bOrphan.select(col("wh"), col("id").as("id_a"))
+      val rescued =
+        if (!includeIntraBatch) rescueCross
+        else rescueCross.unionByName(bOrphan.select(col("wh"), col("id").as("id_a"))
           .join(bOrphan.select(col("wh"), col("id").as("id_b")), Seq("wh"))
           .filter(col("id_a") < col("id_b"))
-          .select(col("id_a"), col("id_b"), lit(1.0).as("jaccard"))
-      scored.unionByName(rescueCross).unionByName(rescueIntra)
+          .select(col("id_a"), col("id_b"), lit(1.0).as("jaccard")))
+      scored.unionByName(rescued)
     }
   }
 
-  /** MinHash signature + banded LSH candidates, verified with true
-    * Jaccard. `numHashes` hash functions are xxhash64(shingle, seed i)
-    * minimized per doc; signatures are split into `bands` bands —
-    * docs colliding on any full band become candidates
-    * (standard MinHash-LSH banding; Broder '97 / MMDS ch.3).
-    * Only candidates get the exact-Jaccard rescoring join.
-    */
   /** Shared MinHash machinery: per-doc sorted shingle-hash arrays
     * (`sh`: id, hs) and banded signature keys (`banded`: id, band,
     * bucket), both persisted — the reusable INDEX frames of the
@@ -481,35 +591,28 @@ object Dedup {
     (sh, banded)
   }
 
-  /** Exact-Jaccard verify over candidate id pairs (merge-walk
-    * intersection; |A ∪ B| = |A| + |B| − |A ∩ B|). `shA`/`shB` supply
-    * each side's sorted hashed-shingle arrays.
+  /** One corpus's MinHash frames for the candidate core: bands probe
+    * bands, the verifier reads the shingle-hash arrays.
     */
-  private def jaccardVerify(candidates: DataFrame, shA: DataFrame,
-                            shB: DataFrame, threshold: Double): DataFrame =
-    candidates
-      .join(shA.select(col("id").as("id_a"), col("hs").as("hs_a")), Seq("id_a"))
-      .join(shB.select(col("id").as("id_b"), col("hs").as("hs_b")), Seq("id_b"))
-      .withColumn("common",
-        graft.functions.Vectors.sortedIntersectCount(col("hs_a"), col("hs_b")))
-      .withColumn("jaccard",
-        col("common").cast("double") /
-          (size(col("hs_a")) + size(col("hs_b")) - col("common")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+  private def minHashSide(sh: DataFrame, banded: DataFrame): Frames = {
+    val keys = banded.select(col("id"), col("band"), col("bucket"))
+    Frames(keys, keys, Some(_ => sh.select(col("id"), col("hs"))))
+  }
 
+  /** MinHash signature + banded LSH candidates, verified with true
+    * Jaccard. `numHashes` hash functions are xxhash64(shingle, seed i)
+    * minimized per doc; signatures are split into `bands` bands —
+    * docs colliding on any full band become candidates
+    * (standard MinHash-LSH banding; Broder '97 / MMDS ch.3).
+    * Only candidates get the exact-Jaccard rescoring join.
+    */
   def minHashLsh(docs: DataFrame, idCol: String, textCol: String,
                  n: Int = 3, numHashes: Int = 32, bands: Int = 8,
                  threshold: Double = 0.8,
                  shingleHash: Column => Column = xxhash64(_)): DataFrame = {
     val (sh, banded) = minHashFrames(docs, idCol, textCol, n, numHashes,
       bands, shingleHash)
-    val l = banded.select(col("band"), col("bucket"), col("id").as("id_a"))
-    val r = banded.select(col("band"), col("bucket"), col("id").as("id_b"))
-    val candidates = l.join(r, Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b")).distinct()
-    jaccardVerify(candidates, sh, sh, threshold)
+    intra(jaccardPairs(Seq("band", "bucket"), threshold), minHashSide(sh, banded))
   }
 
   /** Persistent MinHash index frames for [[minHashLshIncremental]]:
@@ -529,13 +632,14 @@ object Dedup {
     * a new batch is checked against the EXISTING corpus index (the
     * frames of [[minHashIndexFrames]], same n/numHashes/bands/hash)
     * without recomputing anything corpus-sized. Returns
-    * (id_a = index doc, id_b = batch doc, jaccard ≥ threshold) pairs;
-    * `includeIntraBatch = true` adds batch-internal pairs (both ids
-    * new) so a batch with its own dups doesn't slip through.
+    * (id_a, id_b, jaccard ≥ threshold) pairs with id_a < id_b, each
+    * pairing an index doc with a batch doc; `includeIntraBatch = true`
+    * adds batch-internal pairs (both ids new) so a batch with its own
+    * dups doesn't slip through.
     *
     * Identical answers to running [[minHashLsh]] over index ∪ batch
-    * and keeping the cross pairs — same hashes, same banding — at
-    * delta cost: only the batch is shingled/signed, the candidate
+    * and keeping the batch-touching pairs — same hashes, same banding —
+    * at delta cost: only the batch is shingled/signed, the candidate
     * join touches index rows only through their (band, bucket) keys,
     * and the verify fetches index shingle arrays for candidates only.
     */
@@ -547,39 +651,11 @@ object Dedup {
                             shingleHash: Column => Column = xxhash64(_)): DataFrame = {
     val (bsh, bbanded) = minHashFrames(batch, idCol, textCol, n, numHashes,
       bands, shingleHash)
-    val cross = indexBanded
-      .select(col("band"), col("bucket"), col("id").as("id_a"))
-      .join(bbanded.select(col("band"), col("bucket"), col("id").as("id_b")),
-        Seq("band", "bucket"))
-      .filter(col("id_a") =!= col("id_b"))
-      .select(col("id_a"), col("id_b")).distinct()
-    val crossPairs = jaccardVerify(cross, indexShingles, bsh, threshold)
-    if (!includeIntraBatch) crossPairs
-    else {
-      val l = bbanded.select(col("band"), col("bucket"), col("id").as("id_a"))
-      val r = bbanded.select(col("band"), col("bucket"), col("id").as("id_b"))
-      val intra = l.join(r, Seq("band", "bucket"))
-        .filter(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b")).distinct()
-      crossPairs.unionByName(jaccardVerify(intra, bsh, bsh, threshold))
-    }
+    incremental(jaccardPairs(Seq("band", "bucket"), threshold),
+      minHashSide(indexShingles, indexBanded), minHashSide(bsh, bbanded),
+      includeIntraBatch)
   }
 
-  /** 64-bit SimHash (Charikar '02): sign-aggregate the per-shingle
-    * hash bits, weight +1/-1, then near-dups are pairs within
-    * `maxHamming` bits. Blocking: split the 64-bit key into
-    * (maxHamming+1) blocks — by pigeonhole, any pair within
-    * maxHamming matches exactly on at least one block, so candidate
-    * generation is an equi-join on (block index, block value).
-    *
-    * The signature is computed PER ROW from the doc's shingle array
-    * with array higher-order functions — no explode, no 64-column
-    * aggregation (the previous 64-flat-sum formulation was measured
-    * at 9.8 s / 27% of the sf0.1 bench; this one avoids the wide
-    * hash-agg buffer entirely and keeps the work in one pass over
-    * the shingle array). Each shingle is hashed ONCE; per-bit votes
-    * accumulate in a 64-slot array folded over the hash array.
-    */
   /** Shared SimHash machinery: the persisted blocked frame
     * (id, simhash, blk, blkval) — one row per pigeonhole block.
     * The reusable INDEX frame of [[simHashIncremental]].
@@ -617,26 +693,40 @@ object Dedup {
       .select(col("id"), col("simhash"), col("bk.blk"), col("bk.blkval")))
   }
 
-  /** Hamming verify over block-collision candidates carrying both
-    * signatures as (id_a, h_a, id_b, h_b).
+  /** SimHash for the candidate core: blocks probe blocks, each row
+    * carries its signature, and the verifier is the Hamming budget.
     */
-  private def hammingVerify(cand: DataFrame, maxHamming: Int): DataFrame =
-    cand.select(col("id_a"), col("id_b"),
-        bit_count(col("h_a").bitwiseXOR(col("h_b"))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
+  private def simHashPairs(maxHamming: Int): PairMethod =
+    PairMethod(Seq("blk", "blkval"), _
+      .select(col("id_a"), col("id_b"),
+        bit_count(col("simhash_a").bitwiseXOR(col("simhash_b"))).as("hamming"))
+      .filter(col("hamming") <= maxHamming))
 
+  private def simHashSide(blocked: DataFrame): Frames = {
+    val keys = blocked.select(col("id"), col("simhash"), col("blk"), col("blkval"))
+    Frames(keys, keys)
+  }
+
+  /** 64-bit SimHash (Charikar '02): sign-aggregate the per-shingle
+    * hash bits, weight +1/-1, then near-dups are pairs within
+    * `maxHamming` bits. Blocking: split the 64-bit key into
+    * (maxHamming+1) blocks — by pigeonhole, any pair within
+    * maxHamming matches exactly on at least one block, so candidate
+    * generation is an equi-join on (block index, block value).
+    *
+    * The signature is computed PER ROW from the doc's shingle array
+    * with array higher-order functions — no explode, no 64-column
+    * aggregation (the previous 64-flat-sum formulation was measured
+    * at 9.8 s / 27% of the sf0.1 bench; this one avoids the wide
+    * hash-agg buffer entirely and keeps the work in one pass over
+    * the shingle array). Each shingle is hashed ONCE; per-bit votes
+    * accumulate in a 64-slot array folded over the hash array.
+    */
   def simHash(docs: DataFrame, idCol: String, textCol: String,
               n: Int = 3, maxHamming: Int = 3,
-              shingleHash: Column => Column = xxhash64(_)): DataFrame = {
-    val blocked = simHashBlocked(docs, idCol, textCol, n, maxHamming + 1,
-      shingleHash)
-    val l = blocked.select(col("blk"), col("blkval"), col("id").as("id_a"), col("simhash").as("h_a"))
-    val r = blocked.select(col("blk"), col("blkval"), col("id").as("id_b"), col("simhash").as("h_b"))
-    hammingVerify(
-      l.join(r, Seq("blk", "blkval")).filter(col("id_a") < col("id_b")),
-      maxHamming)
-  }
+              shingleHash: Column => Column = xxhash64(_)): DataFrame =
+    intra(simHashPairs(maxHamming), simHashSide(
+      simHashBlocked(docs, idCol, textCol, n, maxHamming + 1, shingleHash)))
 
   /** Persistent SimHash index frame for [[simHashIncremental]]:
     * (id, simhash, blk, blkval) — write it BUCKETED on
@@ -653,34 +743,21 @@ object Dedup {
     * [[simHash]]: a new batch's signatures check against the existing
     * corpus index frame at delta cost (only the batch is shingled and
     * signed; index rows join by (blk, blkval) carrying their stored
-    * signature — no index recompute). Returns (id_a = index doc,
-    * id_b = batch doc, hamming ≤ maxHamming); `includeIntraBatch`
-    * adds batch-internal pairs. Same signatures + same pigeonhole
-    * blocks ⇒ identical to the full run's batch-touching pairs.
+    * signature — no index recompute). Returns (id_a, id_b,
+    * hamming ≤ maxHamming) with id_a < id_b, each pairing an index doc
+    * with a batch doc; `includeIntraBatch` adds batch-internal pairs.
+    * Same signatures + same pigeonhole blocks ⇒ identical to the full
+    * run's batch-touching pairs.
     */
   def simHashIncremental(indexBlocked: DataFrame, batch: DataFrame,
                          idCol: String, textCol: String,
                          n: Int = 3, maxHamming: Int = 3,
                          includeIntraBatch: Boolean = false,
-                         shingleHash: Column => Column = xxhash64(_)): DataFrame = {
-    val bblocked = simHashBlocked(batch, idCol, textCol, n, maxHamming + 1,
-      shingleHash)
-    val idx = indexBlocked.select(col("blk"), col("blkval"),
-      col("id").as("id_a"), col("simhash").as("h_a"))
-    val bat = bblocked.select(col("blk"), col("blkval"),
-      col("id").as("id_b"), col("simhash").as("h_b"))
-    val cross = hammingVerify(
-      idx.join(bat, Seq("blk", "blkval")).filter(col("id_a") =!= col("id_b")),
-      maxHamming)
-    if (!includeIntraBatch) cross
-    else {
-      val l = bblocked.select(col("blk"), col("blkval"), col("id").as("id_a"), col("simhash").as("h_a"))
-      val intra = hammingVerify(
-        l.join(bat, Seq("blk", "blkval")).filter(col("id_a") < col("id_b")),
-        maxHamming)
-      cross.unionByName(intra)
-    }
-  }
+                         shingleHash: Column => Column = xxhash64(_)): DataFrame =
+    incremental(simHashPairs(maxHamming), simHashSide(indexBlocked),
+      simHashSide(simHashBlocked(batch, idCol, textCol, n, maxHamming + 1,
+        shingleHash)),
+      includeIntraBatch)
 
   /** Eval-set decontamination: flag eval documents whose n-gram
     * overlap with ANY training document reaches `minCommon` shingles —
@@ -857,18 +934,15 @@ object Dedup {
     * [[ngramJaccard]] (one hot license header must not fan out d²).
     *
     * Output: (id_a, id_b, n_shared) — pairs ranked by how many
-    * distinct selected hashes they share. The keyed `repartition`
-    * before the pair aggregation pins the pair-space width (the AQE
-    * input-sized-coalescing trap, §5 round 3).
+    * distinct selected hashes they share, counted in the candidate
+    * core on its keyed repartition.
     */
   def sharedRuns(docs: DataFrame, idCol: String, textCol: String,
                  k: Int = 5, w: Int = 4, minShared: Int = 2,
                  maxDocFreq: Int = 1000,
                  hashFn: Column => Column = xxhash64(_)): DataFrame = {
     val fp = Par.persistTracked(
-      Par.widen(docs.select(col(idCol), col(textCol)), idCol)
-        .select(col(idCol).as("id"),
-          explode(Text.winnow(col(textCol), k, w, hashFn)).as("fp")))
+      sharedRunsIndexFrame(docs, idCol, textCol, k, w, hashFn))
     val dfs = fp.groupBy(col("fp")).agg(count(lit(1)).as("__df"))
     // persisted: `kept` feeds BOTH sides of the pair self-join below,
     // and Spark has no cross-branch CSE (§5 round 1) — without this
@@ -878,16 +952,14 @@ object Dedup {
     val kept = Par.persistTracked(
       fp.join(dfs.filter(col("__df") <= maxDocFreq).select(col("fp")),
         Seq("fp")))
-    val width = docs.sparkSession.conf.getOption("spark.sql.shuffle.partitions")
-      .map(_.toInt).getOrElse(docs.sparkSession.sparkContext.defaultParallelism)
-    kept.select(col("fp"), col("id").as("id_a"))
-      .join(kept.select(col("fp"), col("id").as("id_b")), Seq("fp"))
-      .filter(col("id_a") < col("id_b"))
-      .repartition(width, col("id_a"), col("id_b"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
+    intra(sharedRunPairs(minShared), Frames(kept, kept))
   }
+
+  /** Shared runs for the candidate core: fingerprints probe
+    * fingerprints, and pairs sharing `minShared` of them survive.
+    */
+  private def sharedRunPairs(minShared: Int): PairMethod =
+    PairMethod(Seq("fp"), identity, minShared = Some(minShared))
 
   /** The persisted winnowing-fingerprint frame `(id, fp)` of a
     * corpus — the index [[sharedRunsIncremental]] maintains between
@@ -914,8 +986,8 @@ object Dedup {
     * computable for exactly the fp set that matters by probing index
     * occurrences with the batch's fps — delta-driven, like the
     * [[ngramJaccardIncremental]] cap rule. Output = the full run on
-    * index ∪ batch RESTRICTED to pairs whose LATER doc is in the
-    * batch (batch ids must order after index ids — the standard
+    * index ∪ batch RESTRICTED to pairs that touch the batch (batch
+    * ids must be disjoint from index ids — the standard
     * incremental-dedup contract; index-index pairs, including any
     * whose fp crossed the cap this batch, are not revisited).
     */
@@ -937,33 +1009,11 @@ object Dedup {
     // persisted: feeds the candidate join's BOTH batch sides (no
     // cross-branch CSE — the sharedRuns discipline)
     val keptB = Par.persistTracked(bfp.join(keptFps, Seq("fp")))
-    val width = batch.sparkSession.conf
-      .getOption("spark.sql.shuffle.partitions")
-      .map(_.toInt).getOrElse(batch.sparkSession.sparkContext.defaultParallelism)
-    keptB.select(col("fp"), col("id").as("id_b"))
-      .join(indexFp.join(keptFps, Seq("fp"))
-          .select(col("fp"), col("id").as("id_a"))
-        .unionByName(keptB.select(col("fp"), col("id").as("id_a"))), Seq("fp"))
-      .filter(col("id_a") < col("id_b"))
-      .repartition(width, col("id_a"), col("id_b"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
+    val keptI = indexFp.select(col("id"), col("fp")).join(keptFps, Seq("fp"))
+    incremental(sharedRunPairs(minShared), Frames(keptI, keptI),
+      Frames(keptB, keptB), withIntra = true, oneJoin = true)
   }
 
-  /** Embedding near-dup: pairs with cosine ≥ threshold. Candidates
-    * come from multi-table random-hyperplane LSH buckets (Charikar
-    * '02; same planes as Similarity.lshTopK) so every join is
-    * bucket-local — never all-pairs — and candidates are verified
-    * with the exact cosine (no false positives; recall is the only
-    * approximation). Per-table collision probability for a pair at
-    * angle θ is (1-θ/π)^planes; `tables` independent tables lift
-    * recall to 1-(1-p)^tables. Tune planes UP for high thresholds
-    * (strong pruning: at 0.95 cosine, 12 planes keep p≈0.28/table)
-    * and DOWN with more tables for mid thresholds.
-    * `exhaustive=true` scores all pairs — the correctness baseline
-    * for bounded inputs, never the scale path.
-    */
   /** Shared embedding-LSH machinery: the persisted normalized-vector
     * frame (id, vec, nrm) and the bucket KEY frame (id, table,
     * bucket) — the reusable INDEX frames of
@@ -987,61 +1037,41 @@ object Dedup {
     (base, keys)
   }
 
+  /** One corpus's embedding frames for the candidate core: the bucket
+    * join moves bare (table, bucket, id) keys, never vectors; vectors
+    * are fetched for surviving candidates only.
+    */
+  private def embeddingSide(vecs: DataFrame, keys: DataFrame): Frames = {
+    val k = keys.select(col("id"), col("table"), col("bucket"))
+    Frames(k, k, Some(_ => vecs.select(col("id"), col("vec"), col("nrm"))))
+  }
+
+  /** Embedding near-dup: pairs with cosine ≥ threshold. Candidates
+    * come from multi-table random-hyperplane LSH buckets (Charikar
+    * '02; same planes as Similarity.lshTopK) so every join is
+    * bucket-local — never all-pairs — and candidates are verified
+    * with the exact cosine (no false positives; recall is the only
+    * approximation). Per-table collision probability for a pair at
+    * angle θ is (1-θ/π)^planes; `tables` independent tables lift
+    * recall to 1-(1-p)^tables. Tune planes UP for high thresholds
+    * (strong pruning: at 0.95 cosine, 12 planes keep p≈0.28/table)
+    * and DOWN with more tables for mid thresholds. A pair colliding
+    * in several tables is scored once (measured at sf0.1: ~1.6M
+    * bucket-join hits collapse to ~1.1M unique pairs).
+    * `exhaustive=true` scores all pairs — the correctness baseline
+    * for bounded inputs, never the scale path.
+    */
   def embeddingCosine(embs: DataFrame, idCol: String, vecCol: String,
                       threshold: Double = 0.95,
                       exhaustive: Boolean = false,
                       planes: Int = 12, tables: Int = 4): DataFrame = {
-    // normalize each vector ONCE (persisted: both join sides read it);
-    // pair scoring is then a dot product, not dot + two norms per pair
-    val (base, lshKeys) = embeddingFrames(embs, idCol, vecCol, planes, tables)
-    def score(pairs: DataFrame): DataFrame = pairs
-      .withColumn("cosine", Vectors.dot(col("vec_a"), col("vec_b")) / (col("nrm_a") * col("nrm_b")))
-      .filter(col("cosine") >= threshold)
-      .select(col("id_a"), col("id_b"), col("cosine"))
+    val (base, keys) = embeddingFrames(embs, idCol, vecCol, planes, tables)
     if (exhaustive) {
       val a = base.select(col("id").as("id_a"), col("vec").as("vec_a"), col("nrm").as("nrm_a"))
       val b = base.select(col("id").as("id_b"), col("vec").as("vec_b"), col("nrm").as("nrm_b"))
-      score(a.join(b, col("id_a") < col("id_b")))
-    } else {
-      val spark = embs.sparkSession
-      // the bucket self-join shuffles bare (table, bucket, id)
-      // triples, never vectors
-      val keys = lshKeys
-      // SALT the join key: (table, bucket) has only tables·2^planes
-      // distinct values, so an unsalted join hands entire buckets to
-      // single reducers — and AQE, seeing tiny INPUT bytes, coalesces
-      // the pair-GENERATING join down to one task (measured at sf0.1:
-      // the whole candidate pipeline ran single-threaded, 16 s). Side
-      // a keeps one salt derived from its id; side b is replicated
-      // across all salts, so each pair still matches exactly once.
-      val salts = math.max(1, math.min(64, spark.sparkContext.defaultParallelism))
-      val a = keys.withColumn("salt", pmod(xxhash64(col("id")), lit(salts.toLong)))
-        .select(col("table"), col("bucket"), col("salt"), col("id").as("id_a"))
-      val b = keys.select(col("table"), col("bucket"), col("id").as("id_b"))
-        .withColumn("salt", explode(array((0 until salts).map(s => lit(s.toLong)): _*)))
-      // distinct BEFORE scoring: a pair colliding in several tables is
-      // scored once, not once per collision (measured at sf0.1: ~1.6M
-      // bucket-join hits collapse to ~1.1M unique pairs), and the
-      // distinct shuffle moves 16-byte id pairs. The explicit keyed
-      // repartition pins the pair-space parallelism (AQE honors a
-      // user repartition) — distinct and scoring reuse it, no extra
-      // shuffle.
-      val width = spark.conf.getOption("spark.sql.shuffle.partitions")
-        .map(_.toInt).getOrElse(spark.sparkContext.defaultParallelism)
-      val cand = a.join(b, Seq("table", "bucket", "salt"))
-        .filter(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"))
-        .repartition(width, col("id_a"), col("id_b"))
-        .distinct()
-      // fetch vectors for surviving pairs from the persisted base
-      // (small at test SF → AQE broadcasts; at scale it degrades to a
-      // hash join on id, never all-pairs)
-      score(cand
-        .join(base.select(col("id").as("id_a"), col("vec").as("vec_a"),
-          col("nrm").as("nrm_a")), Seq("id_a"))
-        .join(base.select(col("id").as("id_b"), col("vec").as("vec_b"),
-          col("nrm").as("nrm_b")), Seq("id_b")))
-    }
+      cosine(a.join(b, col("id_a") < col("id_b")), threshold)
+    } else intra(cosinePairs(Seq("table", "bucket"), threshold),
+      embeddingSide(base, keys))
   }
 
   /** Persistent embedding-LSH index frames for
@@ -1074,61 +1104,10 @@ object Dedup {
                                  threshold: Double = 0.95,
                                  planes: Int = 12, tables: Int = 4,
                                  includeIntraBatch: Boolean = false): DataFrame = {
-    val spark = batch.sparkSession
     val (bbase, bkeys) = embeddingFrames(batch, idCol, vecCol, planes, tables)
-    val salts = math.max(1, math.min(64, spark.sparkContext.defaultParallelism))
-    val ik = indexKeys
-      .withColumn("salt", pmod(xxhash64(col("id")), lit(salts.toLong)))
-      .select(col("table"), col("bucket"), col("salt"), col("id").as("id_i"))
-    val bk = bkeys.select(col("table"), col("bucket"), col("id").as("id_n"))
-      .withColumn("salt", explode(array((0 until salts).map(s => lit(s.toLong)): _*)))
-    val width = spark.conf.getOption("spark.sql.shuffle.partitions")
-      .map(_.toInt).getOrElse(spark.sparkContext.defaultParallelism)
-    val cross = ik.join(bk, Seq("table", "bucket", "salt"))
-      .filter(col("id_i") =!= col("id_n"))
-      .select(least(col("id_i"), col("id_n")).as("id_a"),
-        greatest(col("id_i"), col("id_n")).as("id_b"))
-      .repartition(width, col("id_a"), col("id_b"))
-      .distinct()
-    val vecs = indexVecs.unionByName(bbase)
-    val scored = cross
-      .join(vecs.select(col("id").as("id_a"), col("vec").as("vec_a"),
-        col("nrm").as("nrm_a")), Seq("id_a"))
-      .join(vecs.select(col("id").as("id_b"), col("vec").as("vec_b"),
-        col("nrm").as("nrm_b")), Seq("id_b"))
-      .withColumn("cosine",
-        Vectors.dot(col("vec_a"), col("vec_b")) / (col("nrm_a") * col("nrm_b")))
-      .filter(col("cosine") >= threshold)
-      .select(col("id_a"), col("id_b"), col("cosine"))
-    if (!includeIntraBatch) scored
-    else {
-      // intra-batch pairs from the ALREADY-BUILT batch frames (r16,
-      // guide §1.2 "don't compute things twice": delegating to
-      // embeddingCosine(batch, ...) re-ran embeddingFrames — a second
-      // widen+persist+normalize+bucket-hash pass over the batch whose
-      // output is deterministic and identical to (bbase, bkeys)).
-      // Same candidate shape as the full path: salted bucket
-      // self-join, keyed repartition, distinct, vector fetch, exact
-      // cosine — bit-identical output.
-      val ia = bkeys.withColumn("salt", pmod(xxhash64(col("id")), lit(salts.toLong)))
-        .select(col("table"), col("bucket"), col("salt"), col("id").as("id_a"))
-      val ib = bkeys.select(col("table"), col("bucket"), col("id").as("id_b"))
-        .withColumn("salt", explode(array((0 until salts).map(s => lit(s.toLong)): _*)))
-      val intra = ia.join(ib, Seq("table", "bucket", "salt"))
-        .filter(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"))
-        .repartition(width, col("id_a"), col("id_b"))
-        .distinct()
-        .join(bbase.select(col("id").as("id_a"), col("vec").as("vec_a"),
-          col("nrm").as("nrm_a")), Seq("id_a"))
-        .join(bbase.select(col("id").as("id_b"), col("vec").as("vec_b"),
-          col("nrm").as("nrm_b")), Seq("id_b"))
-        .withColumn("cosine",
-          Vectors.dot(col("vec_a"), col("vec_b")) / (col("nrm_a") * col("nrm_b")))
-        .filter(col("cosine") >= threshold)
-        .select(col("id_a"), col("id_b"), col("cosine"))
-      scored.unionByName(intra)
-    }
+    incremental(cosinePairs(Seq("table", "bucket"), threshold),
+      embeddingSide(indexVecs, indexKeys), embeddingSide(bbase, bkeys),
+      includeIntraBatch)
   }
 
   /** Connected components over a near-dup PAIR graph: label every id
@@ -1392,27 +1371,40 @@ object Dedup {
   def editDistance(docs: DataFrame, idCol: String, strCol: String,
                    maxDist: Int): DataFrame = {
     require(maxDist >= 0, "maxDist must be non-negative")
-    val d = maxDist
-    val k = d + 1
-    val base = Par.persistTracked(
+    intra(editPairs(maxDist), editSide(editBase(docs, idCol, strCol), maxDist))
+  }
+
+  /** Persisted (id, s, len) rows of a string corpus. */
+  private def editBase(docs: DataFrame, idCol: String, strCol: String): DataFrame =
+    Par.persistTracked(
       Par.widen(docs.select(col(idCol), col(strCol)), idCol)
         .select(col(idCol).as("id"), col(strCol).as("s"))
         .withColumn("len", length(col("s"))))
-    val long = base.filter(col("len") >= k)
-    // self-join probes only length classes ≤ the prober's own (the
-    // pair is still found once: the longer partner probes this row's
-    // class), so longerClasses = false
-    val candLong = edSegments(long, d)
-      .join(edProbes(long, d, longerClasses = false), Seq("l", "i", "sub"))
-      .filter(col("id_x") =!= col("id_y"))
-      .select(least(col("id_x"), col("id_y")).as("id_a"),
-        greatest(col("id_x"), col("id_y")).as("id_b"))
-    // strings too short to segment: ed ≤ d forces |len diff| ≤ d, so
-    // the (tiny by construction) short side explodes over its ≤ 2d+1
-    // candidate partner lengths and EQUI-joins on length — a hash
-    // join, never a nested loop over the corpus
-    val shorts = base.filter(col("len") < k)
-    val shortProbe = shorts.select(col("id").as("id_x"),
+
+  /** Edit distance for the candidate core: probe substrings meet
+    * segments on (length-class, segment-idx, text), and the verifier
+    * is the banded O(d·len) threshold levenshtein.
+    */
+  private def editPairs(d: Int): PairMethod =
+    PairMethod(Seq("l", "i", "sub"), _
+      .withColumn("dist", levenshtein(col("s_a"), col("s_b"), d))
+      .filter(col("dist") >= 0)
+      .select(col("id_a"), col("id_b"), col("dist")))
+
+  /** One corpus's edit-distance frames over its (id, s, len) rows:
+    * its long strings' probes against their segments — probing only
+    * length classes ≤ the prober's own (the pair is still found once:
+    * the longer partner probes this row's class) — plus the
+    * short-string band as extra candidates. Strings too short to
+    * segment: ed ≤ d forces |len diff| ≤ d, so the (tiny by
+    * construction) short side explodes over its ≤ 2d+1 candidate
+    * partner lengths and EQUI-joins on length — a hash join, never a
+    * nested loop over the corpus.
+    */
+  private def editSide(base: DataFrame, d: Int): Frames = {
+    val long = base.filter(col("len") >= d + 1)
+    val shortProbe = base.filter(col("len") < d + 1)
+      .select(col("id").as("id_x"),
         explode(sequence(greatest(lit(0), col("len").cast("int") - d),
           col("len").cast("int") + d)).as("len"))
     val candShort = broadcast(shortProbe)
@@ -1421,15 +1413,9 @@ object Dedup {
       .filter(col("id_x") =!= col("id_y"))
       .select(least(col("id_x"), col("id_y")).as("id_a"),
         greatest(col("id_x"), col("id_y")).as("id_b"))
-    val width = docs.sparkSession.conf.getOption("spark.sql.shuffle.partitions")
-      .map(_.toInt).getOrElse(docs.sparkSession.sparkContext.defaultParallelism)
-    val cand = candLong.unionByName(candShort)
-      .repartition(width, col("id_a"), col("id_b"))
-      .distinct()
-    val strs = base.select(col("id"), col("s"))
-    edRescore(cand,
-      strs.select(col("id").as("id_a"), col("s").as("__sa")),
-      strs.select(col("id").as("id_b"), col("s").as("__sb")), d)
+    Frames(edProbes(long, d, longerClasses = false),
+      edSegments(long, d).withColumnRenamed("id_x", "id"),
+      Some(_ => base.select(col("id"), col("s"))), Some(candShort))
   }
 
   /** Segment geometry of a length-l string under k = d+1 segments:
@@ -1475,7 +1461,7 @@ object Dedup {
     val k = d + 1
     val hi = if (longerClasses) col("len").cast("int") + d
              else col("len").cast("int")
-    long.select(col("id").as("id_y"),
+    long.select(col("id"),
         explode(flatten(transform(
           sequence(greatest(lit(k), col("len").cast("int") - d), hi),
           l => flatten(transform(sequence(lit(0), lit(d)), i => {
@@ -1488,23 +1474,11 @@ object Dedup {
                   col("s").substr(q + 1, w).as("sub"))))
               .otherwise(array().cast("array<struct<l:int,i:int,sub:string>>"))
           }))))).as("p"))
-      .select(col("id_y"), col("p.l").as("l"), col("p.i").as("i"),
+      .select(col("id"), col("p.l").as("l"), col("p.i").as("i"),
         col("p.sub").as("sub"))
   }
 
-  /** Banded-levenshtein verify of candidate pairs: `strsA`/`strsB`
-    * supply (id_a, __sa) / (id_b, __sb).
-    */
-  private def edRescore(cand: DataFrame, strsA: DataFrame,
-                        strsB: DataFrame, d: Int): DataFrame =
-    cand
-      .join(strsA, Seq("id_a"))
-      .join(strsB, Seq("id_b"))
-      .withColumn("dist", levenshtein(col("__sa"), col("__sb"), d))
-      .filter(col("dist") >= 0)
-      .select(col("id_a"), col("id_b"), col("dist"))
-
-  /** Persistent edit-distance index frames: `segs` (l, i, sub, id) is
+  /** Persistent edit-distance index frames: `segs` (l, i, sub, id_x) is
     * probed by (l, i, sub) in the incremental candidate join — store
     * it bucketed on those keys; `strs` (id, s, len) feeds the verify
     * fetch BY ID — store it bucketed on id (the dual-copy posting
@@ -1539,9 +1513,10 @@ object Dedup {
     * classes on BOTH sides of their own length (`longerClasses`),
     * since the index never probes back. Cross pairs where either side
     * is shorter than d+1 chars have both lengths ≤ 2d (length-band
-    * broadcast of the delta); batch-internal pairs run the plain
-    * [[editDistance]] on the delta alone. Assumes batch ids are new
-    * (disjoint from index ids), as the other incremental forms do.
+    * broadcast of the delta); batch-internal pairs are the
+    * [[editDistance]] frames of the same persisted batch rows.
+    * Assumes batch ids are new (disjoint from index ids), as the
+    * other incremental forms do.
     */
   def editDistanceIncremental(index: EditIndex, batch: DataFrame,
                               idCol: String, strCol: String,
@@ -1549,15 +1524,7 @@ object Dedup {
                               includeBatchPairs: Boolean = true): DataFrame = {
     require(maxDist >= 0, "maxDist must be non-negative")
     val d = maxDist
-    val k = d + 1
-    val b = Par.persistTracked(
-      Par.widen(batch.select(col(idCol), col(strCol)), idCol)
-        .select(col(idCol).as("id"), col(strCol).as("s"))
-        .withColumn("len", length(col("s"))))
-    val candCross = index.segs
-      .join(edProbes(b.filter(col("len") >= k), d, longerClasses = true),
-        Seq("l", "i", "sub"))
-      .select(col("id_x").as("id_a"), col("id_y").as("id_b"))
+    val b = editBase(batch, idCol, strCol)
     // pairs with a sub-segment-length member: both sides ≤ 2d chars;
     // the delta side explodes over its ≤ 2d+1 candidate partner
     // lengths and equi-joins on length (hash join, no nested loop)
@@ -1569,22 +1536,16 @@ object Dedup {
       .join(index.strs.filter(col("len") <= 2 * d)
           .select(col("id").as("id_a"), col("len").cast("int").as("len_a")),
         Seq("len_a"))
-      .filter(col("len_a") < k || col("len_b") < k)
+      .filter(col("len_a") < d + 1 || col("len_b") < d + 1)
       .select(col("id_a"), col("id_b"))
-    val width = batch.sparkSession.conf.getOption("spark.sql.shuffle.partitions")
-      .map(_.toInt).getOrElse(batch.sparkSession.sparkContext.defaultParallelism)
-    val cand = candCross.unionByName(candShort)
-      .repartition(width, col("id_a"), col("id_b"))
-      .distinct()
-    // rescore with sides as (index, batch), then canonicalize to the
-    // id_a < id_b contract of [[editDistance]]
-    val cross = edRescore(cand,
-      index.strs.select(col("id").as("id_a"), col("s").as("__sa")),
-      b.select(col("id").as("id_b"), col("s").as("__sb")), d)
-      .select(least(col("id_a"), col("id_b")).as("id_a"),
-        greatest(col("id_a"), col("id_b")).as("id_b"), col("dist"))
-    if (!includeBatchPairs) cross
-    else cross.unionByName(editDistance(b, "id", "s", d))
+    val segs = index.segs.select(col("l"), col("i"), col("sub"), col("id_x").as("id"))
+    // a batch that only probes passes its probes as both key frames
+    val probes = edProbes(b.filter(col("len") >= d + 1), d, longerClasses = true)
+    val crossPairs = cross(editPairs(d),
+      Frames(segs, segs, Some(_ => index.strs.select(col("id"), col("s")))),
+      Frames(probes, probes, Some(_ => b.select(col("id"), col("s"))), Some(candShort)))
+    if (!includeBatchPairs) crossPairs
+    else crossPairs.unionByName(intra(editPairs(d), editSide(b, d)))
   }
 
   /** SemDeDup-style semantic near-dup pairs (r8-w4): cluster the
@@ -1603,19 +1564,16 @@ object Dedup {
     * Same argmin cell assignment as [[Similarity.ivfTopKWith]]
     * (codegen'd least() over (dist, cell) structs — deterministic,
     * oracle-replayable with literal centroids). The within-cell
-    * self-join follows the keys-only + salt discipline of
-    * [[embeddingCosine]]: bare (cell, id) rows join (cells are few,
-    * so an unsalted join hands whole cells to single reducers and AQE
-    * coalesces the tiny-input pair join to one task); vectors are
-    * fetched once, for surviving pairs only.
+    * self-join is the candidate core's salted join over bare
+    * (cell, id) keys, exactly as [[embeddingCosine]]'s buckets (cells
+    * are few); vectors are fetched once, for surviving pairs only.
     */
   def semanticDedup(embs: DataFrame, idCol: String, vecCol: String,
                     centroids: Seq[(Int, Seq[Double])],
                     threshold: Double = 0.95): DataFrame = {
     require(centroids.nonEmpty, "semanticDedup needs at least one centroid")
-    val spark = embs.sparkSession
-    val base = graft.Par.persistTracked(
-      graft.Par.widen(embs.select(col(idCol), col(vecCol)), idCol)
+    val base = Par.persistTracked(
+      Par.widen(embs.select(col(idCol), col(vecCol)), idCol)
         .select(col(idCol).as("id"), Vectors.toDouble(col(vecCol)).as("vec"))
         .withColumn("nrm", Vectors.norm(col("vec"))))
     def selfDot(v: Seq[Double]): Double = {
@@ -1628,32 +1586,9 @@ object Dedup {
         struct((-Vectors.dot(vec, typedLit(cv)) * 2 + lit(selfDot(cv))).as("d"),
           lit(cell).as("c"))
       }: _*).getField("c")
-    // keys-only: the cell join moves bare (cell, salt, id) rows
-    val keys = graft.Par.persistTracked(
+    val keys = Par.persistTracked(
       base.select(col("id"), nearestCell(col("vec")).as("cell")))
-    val salts = math.max(1, math.min(64, spark.sparkContext.defaultParallelism))
-    val a = keys.withColumn("salt", pmod(xxhash64(col("id")), lit(salts.toLong)))
-      .select(col("cell"), col("salt"), col("id").as("id_a"))
-    val b = keys.select(col("cell"), col("id").as("id_b"))
-      .withColumn("salt", explode(array((0 until salts).map(s => lit(s.toLong)): _*)))
-    val width = spark.conf.getOption("spark.sql.shuffle.partitions")
-      .map(_.toInt).getOrElse(spark.sparkContext.defaultParallelism)
-    // one cell per id → each (a, b) pair meets exactly once: no
-    // distinct needed; the keyed repartition pins pair-space width
-    // against AQE's input-sized coalescing (§5)
-    val pairs = a.join(b, Seq("cell", "salt"))
-      .filter(col("id_a") < col("id_b"))
-      .repartition(width, col("id_a"), col("id_b"))
-      .select(col("id_a"), col("id_b"))
-    pairs
-      .join(base.select(col("id").as("id_a"), col("vec").as("vec_a"),
-        col("nrm").as("nrm_a")), Seq("id_a"))
-      .join(base.select(col("id").as("id_b"), col("vec").as("vec_b"),
-        col("nrm").as("nrm_b")), Seq("id_b"))
-      .withColumn("cosine",
-        Vectors.dot(col("vec_a"), col("vec_b")) / (col("nrm_a") * col("nrm_b")))
-      .filter(col("cosine") >= threshold)
-      .select(col("id_a"), col("id_b"), col("cosine"))
+    intra(cosinePairs(Seq("cell"), threshold), Frames(keys, keys, Some(_ => base)))
   }
 
   /** Segment-level exact dedup — the sub-document analog of CCNet's

@@ -594,8 +594,9 @@ private[graft] object QueriesShard2 {
     }),
 
     // bucketed fact + dim on the join key: the join itself must plan
-    // with ZERO exchanges (broadcast disabled while checking — AQE
-    // would otherwise hide the shuffle question at small SF)
+    // with ZERO exchanges. The check asks for a sort-merge join by a
+    // per-join hint (a broadcast would otherwise hide the shuffle
+    // question at small SF) and leaves the session conf untouched.
     "bucketed_join" -> ((s, d) => {
       val tag = java.util.UUID.randomUUID().toString.replace("-", "")
       val factT = s"bj_fact_$tag"; val dimT = s"bj_dim_$tag"
@@ -605,15 +606,11 @@ private[graft] object QueriesShard2 {
         col("c_mktsegment"))
       graft.sources.Sink.bucketedTable(o, factT, "o_custkey", 8)
       graft.sources.Sink.bucketedTable(c, dimT, "c_custkey", 8)
-      val prev = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val j = s.table(factT)
-          .join(s.table(dimT), col("o_custkey") === col("c_custkey"))
-        val plan = j.queryExecution.executedPlan.toString
-        require(!plan.contains("Exchange"),
-          s"bucketed join still plans an exchange:\n$plan")
-      } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+      val j = s.table(factT).hint("merge")
+        .join(s.table(dimT), col("o_custkey") === col("c_custkey"))
+      val plan = j.queryExecution.executedPlan.toString
+      require(!plan.contains("Exchange"),
+        s"bucketed join still plans an exchange:\n$plan")
       s.table(factT).join(s.table(dimT), col("o_custkey") === col("c_custkey"))
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n_orders"),

@@ -847,8 +847,8 @@ private[graft] object QueriesShard4 {
       // pk-sampled subgraph (¼ of parts, pushed to the scan): the
       // full co-purchase graph is DENSE (avg degree >100 at sf0.1 →
       // ~140M wedges); the graded census runs the identical operator
-      // on a bounded-density slice, and StressR8d-style scaling is
-      // argued on the operator doc (out-degree O(√E) by orientation)
+      // on a bounded-density slice; its scaling is argued on the
+      // operator doc (out-degree O(√E) by orientation)
       Graph.triangleStats(coPurchaseEdges(s, d), "pa", "pb")
     }),
     // neighbor-Jaccard link prediction (r11) on the same bounded-

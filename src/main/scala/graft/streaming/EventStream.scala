@@ -534,7 +534,10 @@ object EventStream {
             else
               Dedup.minHashLsh(fresh, idCol, textCol, n, numHashes,
                 bands, threshold, shingleHash = shingleHash)
-          val losers = pairs.select(col("id_b").as(idCol)).distinct()
+          // a pair's higher id loses if fresh, else its fresh partner
+          val losers = pairs
+            .join(fresh.select(col(idCol).as("id_b"), lit(true).as("__f")), Seq("id_b"), "left")
+            .select(when(col("__f"), col("id_b")).otherwise(col("id_a")).as(idCol)).distinct()
           val survivors = fresh.join(losers, Seq(idCol), "left_anti")
           if (!survivors.isEmpty) {
             val (sh, bd) = Dedup.minHashIndexFrames(survivors, idCol,

@@ -9,9 +9,11 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** The file tables record what each write produced, so reading them
-  * back, or learning a staged batch's rows and watermark, costs no
-  * Spark job beyond the write itself. */
+/** Spark job counts that must hold exactly. The file tables record
+  * what each write produced, so reading them back, or learning a
+  * staged batch's rows and watermark, costs no Spark job beyond the
+  * write itself; and an operator's job count does not change from run
+  * to run on the same input. */
 class JobCountSpec extends SparkSuite {
   import spark.implicits._
 
@@ -82,5 +84,16 @@ class JobCountSpec extends SparkSuite {
       assert(m === Staging.readManifest(spark, dir, id))
       assert(Staging.readStaged(spark, dir, id).count() === 0L)
     }
+  }
+
+  test("dedup_ngram_jaccard runs the same number of jobs on every run") {
+    // an inner join of its per-doc sets' two small inputs lets AQE
+    // broadcast whichever reports statistics first; about one run in
+    // three then pays an extra shuffle job, so six runs show it
+    val build = SparkEntry.queries("dedup_ngram_jaccard")
+    val counts = (1 to 6).map { _ =>
+      jobs { build(spark, "/root/testdata/sf0.01").queryExecution.toRdd.count(); Par.release() }
+    }
+    assert(counts.distinct.size === 1, s"job counts differ between runs: $counts")
   }
 }
