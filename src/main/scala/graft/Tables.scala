@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 
 /** Parquet table readers for the driver-generated star schema
   * (see /root/repo/TESTDATA.md).
@@ -24,31 +24,27 @@ object Tables {
   def lineitem(s: SparkSession, d: String): DataFrame = read(s, d, "lineitem")
   /** events.parquet's `ts` arrives in one of two physical encodings
     * depending on the generator vintage: parquet TIMESTAMP(NANOS)
-    * (readable only as int64 via the legacy `nanosAsLong` conf — no
-    * Spark timestamp type holds nanos) or TIMESTAMP(MICROS,
-    * isAdjustedToUTC=false) (Spark-native TimestampNTZType).
-    * `eventsRaw` returns the STORED column unconverted in either
-    * case — build cutoff predicates with [[eventCutoffNanos]] /
-    * [[eventWatermark]] against it so they push down to the parquet
-    * scan (filtering the CONVERTED column would scan the full table:
-    * Catalyst won't push through `timestamp_micros`), then
-    * [[convertEventTs]].
+    * (readable only as int64 — no Spark timestamp type holds nanos) or
+    * TIMESTAMP(MICROS, isAdjustedToUTC=false) (Spark-native
+    * TimestampNTZType). `eventsRaw` returns the STORED column
+    * unconverted in either case — build cutoff predicates with
+    * [[eventCutoffNanos]] / [[eventWatermark]] against it so they push
+    * down to the parquet scan (filtering the CONVERTED column would
+    * scan the full table: Catalyst won't push through
+    * `timestamp_micros`), then [[convertEventTs]].
+    *
+    * µs files take the plain read. Schema inference rejects NANOS
+    * unless `nanosAsLong` is on, so a legacy file's schema is inferred
+    * in a session this read owns ([[Sessions.own]]), never by flipping
+    * the caller's conf, and the file is read in the caller's session
+    * under that schema: given `ts` as a long, Spark reads the int64
+    * nanos exactly.
     */
   def eventsRaw(s: SparkSession, d: String): DataFrame =
     try read(s, d, "events")
-    catch { case _: Exception =>
-      // legacy TIMESTAMP(NANOS) files: schema inference rejects the
-      // type without the conf, so retry scoped (save/restore — the
-      // inferred LongType is baked into the relation at read() time,
-      // so restoring immediately is safe for later execution)
-      val key = "spark.sql.legacy.parquet.nanosAsLong"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "true")
-      try read(s, d, "events")
-      finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None    => s.conf.unset(key)
-      }
+    catch { case e: AnalysisException if e.getCondition == "PARQUET_TYPE_ILLEGAL" =>
+      val legacy = Sessions.own(s, "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+      s.read.schema(read(legacy, d, "events").schema).parquet(s"$d/events.parquet")
     }
 
   import org.apache.spark.sql.Column

@@ -514,31 +514,40 @@ object Dedup {
     if (maxDocFreq <= 0) scored
     else {
       // --- orphan rescue under the merged cap ---
+      // Its joins that only keep or drop rows are semi joins and its
+      // pairing joins left joins, so each can build only its right
+      // side: an inner join of two small inputs lets AQE build
+      // whichever side reports statistics first, and the job count then
+      // changes from run to run on the same input.
       val bwhole = bbase.groupBy(col("id"))
         .agg(xxhash64(sort_array(collect_list(col("gram")))).as("wh"))
       val bOrphan = Par.persistTracked(
         bwhole.join(bsets.select(col("id")), Seq("id"), "left_anti"))
       // grams that CROSSED the cap with this batch (⊆ batch grams)
       val crossing = index.dfs.filter(col("df") <= maxDocFreq).select(col("gram"))
-        .join(merged.filter(col("df") > maxDocFreq).select(col("gram")), Seq("gram"))
+        .join(merged.filter(col("df") > maxDocFreq).select(col("gram")), Seq("gram"),
+          "left_semi")
       // previously non-orphan index docs touched by a crossing gram...
-      val affected = index.occ.join(crossing, Seq("gram")).select(col("id")).distinct()
-        .join(index.meta.filter(!col("orphan")).select(col("id")), Seq("id"))
+      val affected = index.occ.join(crossing, Seq("gram"), "left_semi")
+        .select(col("id")).distinct()
+        .join(index.meta.filter(!col("orphan")).select(col("id")), Seq("id"), "left_semi")
       // ...that now have ZERO surviving grams (id-keyed fetch again)
-      val stillAlive = occById.join(affected, Seq("id"))
-        .join(vocab.select(col("gram")), Seq("gram"))
+      val stillAlive = occById.join(affected, Seq("id"), "left_semi")
+        .join(vocab.select(col("gram")), Seq("gram"), "left_semi")
         .select(col("id")).distinct()
       val newOrphans = affected.join(stillAlive, Seq("id"), "left_anti")
       val iOrphan = index.meta.filter(col("orphan")).select(col("id"), col("wh"))
-        .unionByName(newOrphans.join(index.meta.select(col("id"), col("wh")), Seq("id")))
+        .unionByName(index.meta.select(col("id"), col("wh"))
+          .join(newOrphans, Seq("id"), "left_semi"))
       val rescueCross = iOrphan.select(col("wh"), col("id").as("id_i"))
-        .join(bOrphan.select(col("wh"), col("id").as("id_n")), Seq("wh"))
+        .join(bOrphan.select(col("wh"), col("id").as("id_n")), Seq("wh"), "left")
+        .filter(col("id_n").isNotNull)
         .select(least(col("id_i"), col("id_n")).as("id_a"),
           greatest(col("id_i"), col("id_n")).as("id_b"), lit(1.0).as("jaccard"))
       val rescued =
         if (!includeIntraBatch) rescueCross
         else rescueCross.unionByName(bOrphan.select(col("wh"), col("id").as("id_a"))
-          .join(bOrphan.select(col("wh"), col("id").as("id_b")), Seq("wh"))
+          .join(bOrphan.select(col("wh"), col("id").as("id_b")), Seq("wh"), "left")
           .filter(col("id_a") < col("id_b"))
           .select(col("id_a"), col("id_b"), lit(1.0).as("jaccard")))
       scored.unionByName(rescued)

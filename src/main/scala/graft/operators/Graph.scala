@@ -729,10 +729,10 @@ object Graph {
     * instead of Jaccard's flat count. The score that ranks "both
     * bought this niche part" over "both bought the bestseller".
     *
-    * Portability discipline: deg c ≥ 2 for any wedge center by
-    * construction (it has two distinct neighbors), so ln(deg) ≥
-    * ln 2 > 0 and every term is finite; each term is ONE libm ln +
-    * one division, rounded to 6 and 1e6-scaled to a long (the chi2
+    * Portability discipline: only centers with deg c ≥ 2 enter the
+    * wedge join (a wedge center has two distinct neighbors), so
+    * ln(deg) ≥ ln 2 > 0 and every term is finite; each term is ONE
+    * libm ln + one division, rounded to 6 and 1e6-scaled to a long (the chi2
     * r6-scaling trick), and the pair score is the ORDER-FREE integer
     * sum of its wedge terms — hash-stable in any engine, off the
     * true score by < common·5e-7.
@@ -753,8 +753,12 @@ object Graph {
       .unionByName(e.select(col("b").as("n"), col("a").as("nbr")))
     val deg = adj.groupBy(col("n")).agg(count(lit(1)).as("d"))
     // center degree joined BEFORE wedge enumeration: one nbr-keyed
-    // join on the adjacency frame instead of one per wedge
-    val adjD = adj.join(deg.select(col("n").as("nbr"), col("d")), Seq("nbr"))
+    // join on the adjacency frame instead of one per wedge. Only
+    // centers of degree ≥ 2 join: a leaf centers no wedge, and its
+    // 1/ln 1 would divide by zero wherever the plan evaluates the
+    // term before the wedge filter drops the row.
+    val adjD = adj.join(deg.filter(col("d") >= 2).select(col("n").as("nbr"), col("d")),
+        Seq("nbr"))
       .withColumn("__t6",
         round(lit(1.0) / log(col("d").cast("double")) * lit(1000000.0))
           .cast("long"))

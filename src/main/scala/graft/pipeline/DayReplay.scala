@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   *     with an atomic manifest ([[Staging.stage]]);
   *  2. `extract_events` — watermark-incremental extract from the
   *     event log: day 1 stages the backfill, day 2 stages only rows
-  *     PAST DAY 1'S MANIFEST WATERMARK ([[Sources.incremental]]) —
+  *     PAST DAY 1'S MANIFEST WATERMARK ([[Cdc.incrementalFilter]]) —
   *     exactly-once across the two loads;
   *  3. `load_staging` — [[Staging.loadStaged]] drains the pending
   *     queue into [[Versioned]] warehouse tables (snapshot replace
@@ -205,7 +205,7 @@ object DayReplay {
               // the is_incremental() loop: last manifest's watermark
               val wm = Staging.readManifest(spark, stagingEv, "events_d1")
                 .watermark.get
-              Sources.incremental(raw, "ts", Tables.eventWatermark(raw, wm))
+              Cdc.incrementalFilter(raw, "ts", Tables.eventWatermark(raw, wm))
             }
           Staging.stage(delta, stagingEv, f"events_d$day", trackingCol = Some("ts"))
           ()

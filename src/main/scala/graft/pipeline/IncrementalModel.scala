@@ -1,8 +1,8 @@
 package graft.pipeline
 
 import graft.operators.Cdc
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit, max}
 
 /** dbt-style incremental materialization, end to end — the
   * reference's core loop as one callable (reference:
@@ -54,28 +54,11 @@ object IncrementalModel {
                       targetPath: String, trackingCol: String,
                       keyCols: Seq[String]): Long = {
     require(keyCols.nonEmpty, "delete+insert needs a unique key")
-    val fs = new org.apache.hadoop.fs.Path(targetPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(targetPath))) {
-      val n = source.count()
-      source.write.mode(SaveMode.ErrorIfExists).parquet(targetPath)
-      n
-    } else {
-      val target = spark.read.parquet(targetPath)
-      val last = target
-        .agg(org.apache.spark.sql.functions.max(col(trackingCol))).head.get(0)
-      val delta =
-        if (last == null) source
-        else Cdc.incrementalFilter(source, trackingCol,
-          org.apache.spark.sql.functions.lit(last))
-      val n = delta.count()
-      if (n > 0) {
-        val keys = delta.select(keyCols.map(col): _*).distinct()
-        val kept = target.join(keys, keyCols, "left_anti")
-        graft.sources.Sink.replaceTable(spark, targetPath,
-          kept.unionByName(delta.select(target.columns.map(col).toIndexedSeq: _*)))
-      }
-      n
+    pass(spark, source, targetPath, trackingCol) { (target, delta) =>
+      val keys = delta.select(keyCols.map(col): _*).distinct()
+      val kept = target.join(keys, keyCols, "left_anti")
+      graft.sources.Sink.replaceTable(spark, targetPath,
+        kept.unionByName(delta.select(target.columns.map(col).toIndexedSeq: _*)))
     }
   }
 
@@ -83,27 +66,35 @@ object IncrementalModel {
     * (or fully loaded on bootstrap).
     */
   def run(spark: SparkSession, source: DataFrame, targetPath: String,
-          trackingCol: String): Long = {
-    val fs = new org.apache.hadoop.fs.Path(targetPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(targetPath))) {
-      val n = source.count()
-      source.write.mode(SaveMode.ErrorIfExists).parquet(targetPath)
-      n
+          trackingCol: String): Long =
+    pass(spark, source, targetPath, trackingCol) { (_, delta) =>
+      delta.write.mode(SaveMode.Append).parquet(targetPath)
+    }
+
+  /** The pass both strategies share. A missing target gets the whole
+    * source, its rows counted by an observation on that one write.
+    * Otherwise the delta is the source beyond the target's
+    * max(trackingCol) (all of it when the target is empty); one count
+    * decides it, and only a non-empty delta reaches `load`, so an
+    * idle pass writes nothing.
+    */
+  private def pass(spark: SparkSession, source: DataFrame, targetPath: String,
+                   trackingCol: String)(load: (DataFrame, DataFrame) => Unit): Long = {
+    val path = new org.apache.hadoop.fs.Path(targetPath)
+    if (!path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)) {
+      val loaded = Observation()
+      source.observe(loaded, count(lit(1)).as("rows"))
+        .write.mode(SaveMode.ErrorIfExists).parquet(targetPath)
+      loaded.get("rows").asInstanceOf[Long]
     } else {
-      val last = spark.read.parquet(targetPath)
-        .agg(org.apache.spark.sql.functions.max(col(trackingCol))).head.get(0)
-      if (last == null) { // empty bootstrap write: append everything
-        val n = source.count()
-        source.write.mode(SaveMode.Append).parquet(targetPath)
-        n
-      } else {
-        val delta = Cdc.incrementalFilter(source, trackingCol,
-          org.apache.spark.sql.functions.lit(last))
-        val n = delta.count()
-        if (n > 0) delta.write.mode(SaveMode.Append).parquet(targetPath)
-        n
-      }
+      val target = spark.read.parquet(targetPath)
+      val last = target.agg(max(col(trackingCol))).head.get(0)
+      val delta =
+        if (last == null) source
+        else Cdc.incrementalFilter(source, trackingCol, lit(last))
+      val n = delta.count()
+      if (n > 0) load(target, delta)
+      n
     }
   }
 }

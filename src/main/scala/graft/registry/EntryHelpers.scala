@@ -29,24 +29,6 @@ private[graft] object EntryHelpers {
       "__sentinel", 0.0)).toDF("user_id", "event_id", "ts", "event_type", "value")
   }
 
-  /** Run `body` with `spark.sql.shuffle.partitions` pinned to `n`,
-    * restoring the session value after. The streaming graded queries
-    * use this: a stateful streaming op instantiates one STATE STORE
-    * per shuffle partition per microbatch, so the session's
-    * batch-sized width (32 here) pays ~32 store open/commit cycles
-    * per stateful op per batch for state that is tiny — a fixed
-    * overhead the watermark logic never amortizes. The stream picks
-    * its width from the conf at CHECKPOINT CREATION (each graded run
-    * uses a fresh temp checkpoint, so the pin applies); on a real
-    * deployment this is the `spark.sql.shuffle.partitions` you set
-    * for the streaming job, sized to state volume, not batch width.
-    */
-  def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
   /** Snapshot a Derby in-memory warehouse table to a tracked temp
     * parquet dir and DROP the database before returning the graded
     * read-back (r10 verdict: per-invocation `jdbc:derby:memory` DBs

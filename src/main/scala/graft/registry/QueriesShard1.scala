@@ -596,17 +596,16 @@ private[graft] object QueriesShard1 {
       val cutoff = lit(CdcCutoff).cast("timestamp")
       graft.StreamFixtures.land(s"ev_le_cutoff:$d",
         ev.filter(col("ts") <= cutoff), inDir)
-      withShufflePartitions(s, 4) {
-        val q = graft.streaming.EventStream.applyUpserts(
-          graft.streaming.EventStream.read(s, inDir),
-          target, ckpt, Seq("user_id"), "ts", Seq("event_id"))
-        try {
-          q.processAllAvailable() // microbatch 1: bootstrap load
-          graft.StreamFixtures.land(s"ev_gt_cutoff:$d",
-            ev.filter(col("ts") > cutoff), inDir)
-          q.processAllAvailable() // microbatch 2: upsert the delta
-        } finally q.stop()
-      }
+      val ss = Sessions.own(s, "spark.sql.shuffle.partitions" -> "4")
+      val q = graft.streaming.EventStream.applyUpserts(
+        graft.streaming.EventStream.read(ss, inDir),
+        target, ckpt, Seq("user_id"), "ts", Seq("event_id"))
+      try {
+        q.processAllAvailable() // microbatch 1: bootstrap load
+        graft.StreamFixtures.land(s"ev_gt_cutoff:$d",
+          ev.filter(col("ts") > cutoff), inDir)
+        q.processAllAvailable() // microbatch 2: upsert the delta
+      } finally q.stop()
       s.read.parquet(target)
         .select(col("user_id"), col("event_id"), col("ts"),
           col("event_type"), col("value"))
@@ -634,32 +633,31 @@ private[graft] object QueriesShard1 {
       val cutoff = lit(CdcCutoff).cast("timestamp")
       graft.StreamFixtures.land(s"ev_le_cutoff:$d",
         ev.filter(col("ts") <= cutoff), inDir)
-      withShufflePartitions(s, 4) {
-        def start(ckpt: String) = graft.streaming.EventStream
-          .applyUpsertsJdbcExactlyOnce(
-            graft.streaming.EventStream.read(s, inDir), url, table,
-            ckpt, Seq("user_id"), "ts", Seq("event_id"))
-        val q = start(s"$base/ckpt1")
-        try {
-          q.processAllAvailable() // batch 0: bootstrap load
-          graft.StreamFixtures.land(s"ev_gt_cutoff:$d",
-            ev.filter(col("ts") > cutoff), inDir)
-          q.processAllAvailable() // batch 1: staged merge + ledger mark
-        } finally q.stop()
-        // redelivery: fresh checkpoint ⇒ every file replays as batch 0
-        // again, now including a poison row newer than everything —
-        // applying it would win the latest-per-key merge and corrupt
-        // the graded output; the ledger row for batch 0 must skip it
-        graft.StreamFixtures.land(s"ev_poison:$d", {
-          import s.implicits._
-          Seq((-999L, -999L,
-              new java.sql.Timestamp(maxEventTs(s, d).getTime + 3600000L),
-              "__poison", -1.0))
-            .toDF("user_id", "event_id", "ts", "event_type", "value")
-        }, inDir)
-        val q2 = start(s"$base/ckpt2")
-        try q2.processAllAvailable() finally q2.stop()
-      }
+      val ss = Sessions.own(s, "spark.sql.shuffle.partitions" -> "4")
+      def start(ckpt: String) = graft.streaming.EventStream
+        .applyUpsertsJdbcExactlyOnce(
+          graft.streaming.EventStream.read(ss, inDir), url, table,
+          ckpt, Seq("user_id"), "ts", Seq("event_id"))
+      val q = start(s"$base/ckpt1")
+      try {
+        q.processAllAvailable() // batch 0: bootstrap load
+        graft.StreamFixtures.land(s"ev_gt_cutoff:$d",
+          ev.filter(col("ts") > cutoff), inDir)
+        q.processAllAvailable() // batch 1: staged merge + ledger mark
+      } finally q.stop()
+      // redelivery: fresh checkpoint ⇒ every file replays as batch 0
+      // again, now including a poison row newer than everything —
+      // applying it would win the latest-per-key merge and corrupt
+      // the graded output; the ledger row for batch 0 must skip it
+      graft.StreamFixtures.land(s"ev_poison:$d", {
+        import s.implicits._
+        Seq((-999L, -999L,
+            new java.sql.Timestamp(maxEventTs(s, d).getTime + 3600000L),
+            "__poison", -1.0))
+          .toDF("user_id", "event_id", "ts", "event_type", "value")
+      }, inDir)
+      val q2 = start(s"$base/ckpt2")
+      try q2.processAllAvailable() finally q2.stop()
       derbySnapshotAndDrop(s, url, dbName, table, "graft_jx_")
         .select(col("user_id"), col("event_id"), col("ts"),
           col("event_type"), col("value"))
@@ -678,21 +676,20 @@ private[graft] object QueriesShard1 {
       val inDir = s"$base/in"; val outDir = s"$base/out"; val ckpt = s"$base/ckpt"
       val ev = eventCols(Tables.events(s, d))
       graft.StreamFixtures.land(s"ev_all:$d", ev, inDir)
-      withShufflePartitions(s, 4) {
-        val q = graft.streaming.EventStream
-          .hourlyCounts(graft.streaming.EventStream.read(s, inDir))
-          .writeStream.format("parquet").option("path", outDir)
-          .option("checkpointLocation", ckpt).outputMode("append").start()
-        try {
-          q.processAllAvailable() // batch 1: all real events, wm = 0
-          graft.StreamFixtures.land(s"ev_sentinel_4h:$d",
-            eventSentinel(s, d, 4L * 3600 * 1000), inDir)
-          q.processAllAvailable() // batch 2: wm = maxTs - 2h
-          graft.StreamFixtures.land(s"ev_sentinel_4h60s:$d",
-            eventSentinel(s, d, 4L * 3600 * 1000 + 60000), inDir)
-          q.processAllAvailable() // batch 3: wm = maxTs + 2h → all real windows out
-        } finally q.stop()
-      }
+      val ss = Sessions.own(s, "spark.sql.shuffle.partitions" -> "4")
+      val q = graft.streaming.EventStream
+        .hourlyCounts(graft.streaming.EventStream.read(ss, inDir))
+        .writeStream.format("parquet").option("path", outDir)
+        .option("checkpointLocation", ckpt).outputMode("append").start()
+      try {
+        q.processAllAvailable() // batch 1: all real events, wm = 0
+        graft.StreamFixtures.land(s"ev_sentinel_4h:$d",
+          eventSentinel(s, d, 4L * 3600 * 1000), inDir)
+        q.processAllAvailable() // batch 2: wm = maxTs - 2h
+        graft.StreamFixtures.land(s"ev_sentinel_4h60s:$d",
+          eventSentinel(s, d, 4L * 3600 * 1000 + 60000), inDir)
+        q.processAllAvailable() // batch 3: wm = maxTs + 2h → all real windows out
+      } finally q.stop()
       s.read.parquet(outDir)
         .filter(col("event_type") =!= "__sentinel")
         .orderBy(col("hour_ts"), col("event_type"))
@@ -707,21 +704,20 @@ private[graft] object QueriesShard1 {
       val inDir = s"$base/in"; val outDir = s"$base/out"; val ckpt = s"$base/ckpt"
       val ev = eventCols(Tables.events(s, d))
       graft.StreamFixtures.land(s"ev_all:$d", ev, inDir)
-      withShufflePartitions(s, 4) {
-        val q = graft.streaming.EventStream
-          .sessionCounts(graft.streaming.EventStream.read(s, inDir))
-          .writeStream.format("parquet").option("path", outDir)
-          .option("checkpointLocation", ckpt).outputMode("append").start()
-        try {
-          q.processAllAvailable() // batch 1: all real events, wm = 0
-          graft.StreamFixtures.land(s"ev_sentinel_4h:$d",
-            eventSentinel(s, d, 4L * 3600 * 1000), inDir)
-          q.processAllAvailable() // batch 2: wm = maxTs - 2h
-          graft.StreamFixtures.land(s"ev_sentinel_4h60s:$d",
-            eventSentinel(s, d, 4L * 3600 * 1000 + 60000), inDir)
-          q.processAllAvailable() // batch 3: wm > all session ends
-        } finally q.stop()
-      }
+      val ss = Sessions.own(s, "spark.sql.shuffle.partitions" -> "4")
+      val q = graft.streaming.EventStream
+        .sessionCounts(graft.streaming.EventStream.read(ss, inDir))
+        .writeStream.format("parquet").option("path", outDir)
+        .option("checkpointLocation", ckpt).outputMode("append").start()
+      try {
+        q.processAllAvailable() // batch 1: all real events, wm = 0
+        graft.StreamFixtures.land(s"ev_sentinel_4h:$d",
+          eventSentinel(s, d, 4L * 3600 * 1000), inDir)
+        q.processAllAvailable() // batch 2: wm = maxTs - 2h
+        graft.StreamFixtures.land(s"ev_sentinel_4h60s:$d",
+          eventSentinel(s, d, 4L * 3600 * 1000 + 60000), inDir)
+        q.processAllAvailable() // batch 3: wm > all session ends
+      } finally q.stop()
       s.read.parquet(outDir)
         .filter(col("user_id") =!= -1L)
         .orderBy(col("user_id"), col("session_start"))
@@ -741,19 +737,18 @@ private[graft] object QueriesShard1 {
       graft.StreamFixtures.land(s"ev_all:$d", ev, inDir)
       graft.StreamFixtures.land(s"ev_user_mod10:$d",
         ev.filter(col("user_id") % 10 === 0), inDir)
-      withShufflePartitions(s, 4) {
-        val q = graft.streaming.EventStream
-          .dedup(graft.streaming.EventStream.read(s, inDir))
-          .writeStream.format("parquet").option("path", outDir)
-          .option("checkpointLocation", ckpt).outputMode("append").start()
-        try {
-          q.processAllAvailable() // batch 1: originals + same-batch dupes
-          graft.StreamFixtures.land(s"ev_lasthour:$d",
-            ev.filter(col("ts") > lit(new java.sql.Timestamp(
-              maxEventTs(s, d).getTime - 3600 * 1000))), inDir)
-          q.processAllAvailable() // batch 2: cross-batch redelivery
-        } finally q.stop()
-      }
+      val ss = Sessions.own(s, "spark.sql.shuffle.partitions" -> "4")
+      val q = graft.streaming.EventStream
+        .dedup(graft.streaming.EventStream.read(ss, inDir))
+        .writeStream.format("parquet").option("path", outDir)
+        .option("checkpointLocation", ckpt).outputMode("append").start()
+      try {
+        q.processAllAvailable() // batch 1: originals + same-batch dupes
+        graft.StreamFixtures.land(s"ev_lasthour:$d",
+          ev.filter(col("ts") > lit(new java.sql.Timestamp(
+            maxEventTs(s, d).getTime - 3600 * 1000))), inDir)
+        q.processAllAvailable() // batch 2: cross-batch redelivery
+      } finally q.stop()
       s.read.parquet(outDir)
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"))
@@ -774,21 +769,20 @@ private[graft] object QueriesShard1 {
       val hist = Scd2.historyFromLog(ev, Seq("user_id"), "ts", Seq("event_id"))
         .select(col("user_id"), col("event_id"), col("event_type"),
           col("valid_from"), col("valid_to"))
-      withShufflePartitions(s, 4) {
-        val q = graft.streaming.EventStream.enrichAsOf(
-            graft.streaming.EventStream.read(s, inDir), hist, Seq("user_id"), "ts")
-          .select(col("event_id"), col("user_id"), col("ts"),
-            col("dim_event_id").as("version_id"),
-            col("dim_event_type").as("state_at_event"))
-          .writeStream.format("parquet").option("path", outDir)
-          .option("checkpointLocation", ckpt).outputMode("append").start()
-        try {
-          q.processAllAvailable() // batch 1
-          graft.StreamFixtures.land(s"ev_gt_cutoff:$d",
-            ev.filter(col("ts") > cutoff), inDir)
-          q.processAllAvailable() // batch 2: dim side re-planned
-        } finally q.stop()
-      }
+      val ss = Sessions.own(s, "spark.sql.shuffle.partitions" -> "4")
+      val q = graft.streaming.EventStream.enrichAsOf(
+          graft.streaming.EventStream.read(ss, inDir), hist, Seq("user_id"), "ts")
+        .select(col("event_id"), col("user_id"), col("ts"),
+          col("dim_event_id").as("version_id"),
+          col("dim_event_type").as("state_at_event"))
+        .writeStream.format("parquet").option("path", outDir)
+        .option("checkpointLocation", ckpt).outputMode("append").start()
+      try {
+        q.processAllAvailable() // batch 1
+        graft.StreamFixtures.land(s"ev_gt_cutoff:$d",
+          ev.filter(col("ts") > cutoff), inDir)
+        q.processAllAvailable() // batch 2: dim side re-planned
+      } finally q.stop()
       s.read.parquet(outDir).orderBy(col("event_id"))
     }),
 
@@ -808,28 +802,27 @@ private[graft] object QueriesShard1 {
       val cutoff = lit(CdcCutoff).cast("timestamp")
       graft.StreamFixtures.land(s"ev_le_cutoff:$d",
         ev.filter(col("ts") <= cutoff), inDir)
-      withShufflePartitions(s, 4) {
-        val src = graft.streaming.EventStream.read(s, inDir)
-        val purchases = src.filter(col("event_type") === "purchase")
-          .select(col("user_id"), col("event_id").as("purchase_id"),
-            col("ts").as("purchase_ts"))
-        val views = src.filter(col("event_type") === "view")
-          .select(col("user_id"), col("event_id").as("view_id"),
-            col("ts").as("view_ts"))
-        val q = graft.streaming.EventStream.correlate(purchases, views,
-            Seq("user_id"), "purchase_ts", "view_ts",
-            withinSeconds = 6L * 3600)
-          .select(col("user_id"), col("purchase_id"), col("purchase_ts"),
-            col("view_id"), col("view_ts"))
-          .writeStream.format("parquet").option("path", outDir)
-          .option("checkpointLocation", ckpt).outputMode("append").start()
-        try {
-          q.processAllAvailable() // batch 1: both sides <= cutoff
-          graft.StreamFixtures.land(s"ev_gt_cutoff:$d",
-            ev.filter(col("ts") > cutoff), inDir)
-          q.processAllAvailable() // batch 2: cross-batch matches
-        } finally q.stop()
-      }
+      val ss = Sessions.own(s, "spark.sql.shuffle.partitions" -> "4")
+      val src = graft.streaming.EventStream.read(ss, inDir)
+      val purchases = src.filter(col("event_type") === "purchase")
+        .select(col("user_id"), col("event_id").as("purchase_id"),
+          col("ts").as("purchase_ts"))
+      val views = src.filter(col("event_type") === "view")
+        .select(col("user_id"), col("event_id").as("view_id"),
+          col("ts").as("view_ts"))
+      val q = graft.streaming.EventStream.correlate(purchases, views,
+          Seq("user_id"), "purchase_ts", "view_ts",
+          withinSeconds = 6L * 3600)
+        .select(col("user_id"), col("purchase_id"), col("purchase_ts"),
+          col("view_id"), col("view_ts"))
+        .writeStream.format("parquet").option("path", outDir)
+        .option("checkpointLocation", ckpt).outputMode("append").start()
+      try {
+        q.processAllAvailable() // batch 1: both sides <= cutoff
+        graft.StreamFixtures.land(s"ev_gt_cutoff:$d",
+          ev.filter(col("ts") > cutoff), inDir)
+        q.processAllAvailable() // batch 2: cross-batch matches
+      } finally q.stop()
       s.read.parquet(outDir).orderBy(col("purchase_id"), col("view_id"))
     }),
   )

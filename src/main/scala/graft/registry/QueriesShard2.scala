@@ -27,18 +27,17 @@ private[graft] object QueriesShard2 {
       val docs = Tables.documents(s, d).select(col("doc_id"), col("lang"))
       graft.StreamFixtures.land(s"docsDL_lt250:$d",
         docs.filter(col("doc_id") < 250), inDir)
-      withShufflePartitions(s, 4) {
-        val stream = s.readStream.schema(docs.schema).parquet(inDir)
-        val q = graft.streaming.EventStream.sampleTopN(stream, "doc_id", "lang", n = 100)
-          .writeStream.format("parquet").option("path", outDir)
-          .option("checkpointLocation", ckpt).outputMode("append").start()
-        try {
-          q.processAllAvailable() // day 1
-          graft.StreamFixtures.land(s"docsDL_ge250:$d",
-            docs.filter(col("doc_id") >= 250), inDir)
-          q.processAllAvailable() // day 2
-        } finally q.stop()
-      }
+      val ss = Sessions.own(s, "spark.sql.shuffle.partitions" -> "4")
+      val stream = ss.readStream.schema(docs.schema).parquet(inDir)
+      val q = graft.streaming.EventStream.sampleTopN(stream, "doc_id", "lang", n = 100)
+        .writeStream.format("parquet").option("path", outDir)
+        .option("checkpointLocation", ckpt).outputMode("append").start()
+      try {
+        q.processAllAvailable() // day 1
+        graft.StreamFixtures.land(s"docsDL_ge250:$d",
+          docs.filter(col("doc_id") >= 250), inDir)
+        q.processAllAvailable() // day 2
+      } finally q.stop()
       val out = s.read.parquet(outDir)
       val mx = out.groupBy(col("stratum")).agg(max(col("version")).as("version"))
       out.join(mx, Seq("stratum", "version"))
@@ -58,19 +57,18 @@ private[graft] object QueriesShard2 {
         .select(col("doc_id"), col("lang"), col("n_chars"))
       graft.StreamFixtures.land(s"docsDLN_lt250:$d",
         docs.filter(col("doc_id") < 250), inDir)
-      withShufflePartitions(s, 4) {
-        val stream = s.readStream.schema(docs.schema).parquet(inDir)
-        val q = graft.streaming.EventStream.sampleWeightedTopN(stream,
-            "doc_id", "lang", "n_chars", n = 50)
-          .writeStream.format("parquet").option("path", outDir)
-          .option("checkpointLocation", ckpt).outputMode("append").start()
-        try {
-          q.processAllAvailable() // day 1
-          graft.StreamFixtures.land(s"docsDLN_ge250:$d",
-            docs.filter(col("doc_id") >= 250), inDir)
-          q.processAllAvailable() // day 2
-        } finally q.stop()
-      }
+      val ss = Sessions.own(s, "spark.sql.shuffle.partitions" -> "4")
+      val stream = ss.readStream.schema(docs.schema).parquet(inDir)
+      val q = graft.streaming.EventStream.sampleWeightedTopN(stream,
+          "doc_id", "lang", "n_chars", n = 50)
+        .writeStream.format("parquet").option("path", outDir)
+        .option("checkpointLocation", ckpt).outputMode("append").start()
+      try {
+        q.processAllAvailable() // day 1
+        graft.StreamFixtures.land(s"docsDLN_ge250:$d",
+          docs.filter(col("doc_id") >= 250), inDir)
+        q.processAllAvailable() // day 2
+      } finally q.stop()
       val out = s.read.parquet(outDir)
       val mx = out.groupBy(col("stratum")).agg(max(col("version")).as("version"))
       out.join(mx, Seq("stratum", "version"))
@@ -93,19 +91,18 @@ private[graft] object QueriesShard2 {
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       graft.StreamFixtures.land(s"docsDT_lt250:$d",
         docs.filter(col("doc_id") < 250), inDir)
-      withShufflePartitions(s, 4) {
-        val stream = s.readStream.schema(docs.schema).parquet(inDir)
-        val q = graft.streaming.EventStream.nearDupGate(stream, root,
-          s"$base/ckpt", "doc_id", "text", n = 3, numHashes = 32,
-          bands = 16, threshold = 0.5,
-          shingleHash = functions.Text.portableHash60)
-        try {
-          q.processAllAvailable() // day 1: bootstrap commit
-          graft.StreamFixtures.land(s"docsDT_ge250:$d",
-            docs.filter(col("doc_id") >= 250), inDir)
-          q.processAllAvailable() // day 2: checked against the index
-        } finally q.stop()
-      }
+      val ss = Sessions.own(s, "spark.sql.shuffle.partitions" -> "4")
+      val stream = ss.readStream.schema(docs.schema).parquet(inDir)
+      val q = graft.streaming.EventStream.nearDupGate(stream, root,
+        s"$base/ckpt", "doc_id", "text", n = 3, numHashes = 32,
+        bands = 16, threshold = 0.5,
+        shingleHash = functions.Text.portableHash60)
+      try {
+        q.processAllAvailable() // day 1: bootstrap commit
+        graft.StreamFixtures.land(s"docsDT_ge250:$d",
+          docs.filter(col("doc_id") >= 250), inDir)
+        q.processAllAvailable() // day 2: checked against the index
+      } finally q.stop()
       graft.sources.VersionedGroup.read(s, root, "docs")
         .orderBy(col("doc_id"))
     }),
@@ -126,17 +123,16 @@ private[graft] object QueriesShard2 {
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       graft.StreamFixtures.land(s"docsDT_lt250:$d",
         docs.filter(col("doc_id") < 250), inDir)
-      withShufflePartitions(s, 4) {
-        val stream = s.readStream.schema(docs.schema).parquet(inDir)
-        val q = graft.streaming.EventStream.segmentDedupGate(stream, root,
-          s"$base/ckpt", "doc_id", "text", window = 20)
-        try {
-          q.processAllAvailable() // day 1: bootstrap commit
-          graft.StreamFixtures.land(s"docsDT_ge250:$d",
-            docs.filter(col("doc_id") >= 250), inDir)
-          q.processAllAvailable() // day 2: deduped against the index
-        } finally q.stop()
-      }
+      val ss = Sessions.own(s, "spark.sql.shuffle.partitions" -> "4")
+      val stream = ss.readStream.schema(docs.schema).parquet(inDir)
+      val q = graft.streaming.EventStream.segmentDedupGate(stream, root,
+        s"$base/ckpt", "doc_id", "text", window = 20)
+      try {
+        q.processAllAvailable() // day 1: bootstrap commit
+        graft.StreamFixtures.land(s"docsDT_ge250:$d",
+          docs.filter(col("doc_id") >= 250), inDir)
+        q.processAllAvailable() // day 2: deduped against the index
+      } finally q.stop()
       graft.sources.VersionedGroup.read(s, root, "docs")
         .orderBy(col("doc_id"))
     }),
@@ -158,17 +154,16 @@ private[graft] object QueriesShard2 {
         .select(col("vec_id"), col("embedding"))
       graft.StreamFixtures.land(s"embU_lt250:$d",
         unlabeled.filter(col("vec_id") < 250), inDir)
-      withShufflePartitions(s, 4) {
-        val stream = s.readStream.schema(unlabeled.schema).parquet(inDir)
-        val q = graft.streaming.EventStream.knnLabelDoor(stream, labeled,
-          root, s"$base/ckpt", "vec_id", "embedding", "label", k = 10)
-        try {
-          q.processAllAvailable() // day 1
-          graft.StreamFixtures.land(s"embU_ge250:$d",
-            unlabeled.filter(col("vec_id") >= 250), inDir)
-          q.processAllAvailable() // day 2: same static seed corpus
-        } finally q.stop()
-      }
+      val ss = Sessions.own(s, "spark.sql.shuffle.partitions" -> "4")
+      val stream = ss.readStream.schema(unlabeled.schema).parquet(inDir)
+      val q = graft.streaming.EventStream.knnLabelDoor(stream, labeled,
+        root, s"$base/ckpt", "vec_id", "embedding", "label", k = 10)
+      try {
+        q.processAllAvailable() // day 1
+        graft.StreamFixtures.land(s"embU_ge250:$d",
+          unlabeled.filter(col("vec_id") >= 250), inDir)
+        q.processAllAvailable() // day 2: same static seed corpus
+      } finally q.stop()
       graft.sources.VersionedGroup.read(s, root, "labels")
         .orderBy(col("vec_id"))
     }),
@@ -183,18 +178,17 @@ private[graft] object QueriesShard2 {
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       graft.StreamFixtures.land(s"docsDT_lt250:$d",
         docs.filter(col("doc_id") < 250), inDir)
-      withShufflePartitions(s, 4) {
-        val stream = s.readStream.schema(docs.schema).parquet(inDir)
-        val q = graft.streaming.EventStream.phraseGate(stream,
-          Seq(Seq("table", "table"), Seq("value", "table")),
-          root, s"$base/ckpt", "doc_id", "text")
-        try {
-          q.processAllAvailable() // day 1: bootstrap commit
-          graft.StreamFixtures.land(s"docsDT_ge250:$d",
-            docs.filter(col("doc_id") >= 250), inDir)
-          q.processAllAvailable() // day 2: same fixed phrase list
-        } finally q.stop()
-      }
+      val ss = Sessions.own(s, "spark.sql.shuffle.partitions" -> "4")
+      val stream = ss.readStream.schema(docs.schema).parquet(inDir)
+      val q = graft.streaming.EventStream.phraseGate(stream,
+        Seq(Seq("table", "table"), Seq("value", "table")),
+        root, s"$base/ckpt", "doc_id", "text")
+      try {
+        q.processAllAvailable() // day 1: bootstrap commit
+        graft.StreamFixtures.land(s"docsDT_ge250:$d",
+          docs.filter(col("doc_id") >= 250), inDir)
+        q.processAllAvailable() // day 2: same fixed phrase list
+      } finally q.stop()
       graft.sources.VersionedGroup.read(s, root, "docs")
         .orderBy(col("doc_id"))
     }),
@@ -230,17 +224,16 @@ private[graft] object QueriesShard2 {
       val evalIdx = s.read.parquet(s"$base/evalidx")
       graft.StreamFixtures.land(s"docsTrain_lt250:$d",
         train.filter(col("doc_id") < 250), inDir)
-      withShufflePartitions(s, 4) {
-        val stream = s.readStream.schema(docs.schema).parquet(inDir)
-        val q = graft.streaming.EventStream.decontamGate(stream, evalIdx,
-          root, s"$base/ckpt", "doc_id", "text", n = 3, minCommon = 3)
-        try {
-          q.processAllAvailable() // day 1: bootstrap commit
-          graft.StreamFixtures.land(s"docsTrain_ge250:$d",
-            train.filter(col("doc_id") >= 250), inDir)
-          q.processAllAvailable() // day 2: checked against the same index
-        } finally q.stop()
-      }
+      val ss = Sessions.own(s, "spark.sql.shuffle.partitions" -> "4")
+      val stream = ss.readStream.schema(docs.schema).parquet(inDir)
+      val q = graft.streaming.EventStream.decontamGate(stream, evalIdx,
+        root, s"$base/ckpt", "doc_id", "text", n = 3, minCommon = 3)
+      try {
+        q.processAllAvailable() // day 1: bootstrap commit
+        graft.StreamFixtures.land(s"docsTrain_ge250:$d",
+          train.filter(col("doc_id") >= 250), inDir)
+        q.processAllAvailable() // day 2: checked against the same index
+      } finally q.stop()
       graft.sources.VersionedGroup.read(s, root, "docs")
         .orderBy(col("doc_id"))
     }),

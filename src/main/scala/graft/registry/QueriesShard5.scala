@@ -607,17 +607,16 @@ private[graft] object QueriesShard5 {
       val cutoff = lit(CdcCutoff).cast("timestamp")
       graft.StreamFixtures.land(s"evUTV_le_cutoff:$d",
         ev.filter(col("ts") <= cutoff).drop("ts"), inDir)
-      withShufflePartitions(s, 4) {
-        val q = graft.streaming.EventStream.maintainAggVersioned(
-          s.readStream.schema(s.read.parquet(inDir).schema).parquet(inDir),
-          root, ckpt, Seq("user_id", "event_type"), "value")
-        try {
-          q.processAllAvailable()
-          graft.StreamFixtures.land(s"evUTV_gt_cutoff:$d",
-            ev.filter(col("ts") > cutoff).drop("ts"), inDir)
-          q.processAllAvailable()
-        } finally q.stop()
-      }
+      val ss = Sessions.own(s, "spark.sql.shuffle.partitions" -> "4")
+      val q = graft.streaming.EventStream.maintainAggVersioned(
+        ss.readStream.schema(s.read.parquet(inDir).schema).parquet(inDir),
+        root, ckpt, Seq("user_id", "event_type"), "value")
+      try {
+        q.processAllAvailable()
+        graft.StreamFixtures.land(s"evUTV_gt_cutoff:$d",
+          ev.filter(col("ts") > cutoff).drop("ts"), inDir)
+        q.processAllAvailable()
+      } finally q.stop()
       IncrementalAgg.finalize(graft.sources.Versioned.read(s, root))
         .select(col("user_id"), col("event_type"), col("n_rows"),
           col("sum_value"), col("min_value"), col("max_value"), col("avg_value"))
@@ -644,20 +643,19 @@ private[graft] object QueriesShard5 {
       val cutoff = lit(CdcCutoff).cast("timestamp")
       graft.StreamFixtures.land(s"ev_le_cutoff:$d",
         ev.filter(col("ts") <= cutoff), inDir)
-      withShufflePartitions(s, 4) {
-        val q = graft.streaming.EventStream.funnel(
-            graft.streaming.EventStream.read(s, inDir),
-            Seq("view", "click", "purchase"))
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .format("parquet").option("path", outDir).start()
-        try {
-          q.processAllAvailable()
-          graft.StreamFixtures.land(s"ev_gt_cutoff:$d",
-            ev.filter(col("ts") > cutoff), inDir)
-          q.processAllAvailable()
-        } finally q.stop()
-      }
+      val ss = Sessions.own(s, "spark.sql.shuffle.partitions" -> "4")
+      val q = graft.streaming.EventStream.funnel(
+          graft.streaming.EventStream.read(ss, inDir),
+          Seq("view", "click", "purchase"))
+        .writeStream.outputMode("append")
+        .option("checkpointLocation", ckpt)
+        .format("parquet").option("path", outDir).start()
+      try {
+        q.processAllAvailable()
+        graft.StreamFixtures.land(s"ev_gt_cutoff:$d",
+          ev.filter(col("ts") > cutoff), inDir)
+        q.processAllAvailable()
+      } finally q.stop()
       val out = s.read.parquet(outDir)
       val mx = out.groupBy(col("user_id")).agg(max(col("version")).as("version"))
       out.join(mx, Seq("user_id", "version"))
@@ -671,20 +669,19 @@ private[graft] object QueriesShard5 {
       val cutoff = lit(CdcCutoff).cast("timestamp")
       graft.StreamFixtures.land(s"ev_le_cutoff:$d",
         ev.filter(col("ts") <= cutoff), inDir)
-      withShufflePartitions(s, 4) {
-        val q = graft.streaming.EventStream.debounce(
-            graft.streaming.EventStream.read(s, inDir),
-            gapSeconds = 21600L)
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .format("parquet").option("path", outDir).start()
-        try {
-          q.processAllAvailable()
-          graft.StreamFixtures.land(s"ev_gt_cutoff:$d",
-            ev.filter(col("ts") > cutoff), inDir)
-          q.processAllAvailable()
-        } finally q.stop()
-      }
+      val ss = Sessions.own(s, "spark.sql.shuffle.partitions" -> "4")
+      val q = graft.streaming.EventStream.debounce(
+          graft.streaming.EventStream.read(ss, inDir),
+          gapSeconds = 21600L)
+        .writeStream.outputMode("append")
+        .option("checkpointLocation", ckpt)
+        .format("parquet").option("path", outDir).start()
+      try {
+        q.processAllAvailable()
+        graft.StreamFixtures.land(s"ev_gt_cutoff:$d",
+          ev.filter(col("ts") > cutoff), inDir)
+        q.processAllAvailable()
+      } finally q.stop()
       s.read.parquet(outDir)
         .select(col("user_id"), col("event_id"), col("ts"))
         .orderBy(col("user_id"), col("ts"), col("event_id"))
@@ -696,19 +693,18 @@ private[graft] object QueriesShard5 {
       val cutoff = lit(CdcCutoff).cast("timestamp")
       graft.StreamFixtures.land(s"ev_le_cutoff:$d",
         ev.filter(col("ts") <= cutoff), inDir)
-      withShufflePartitions(s, 4) {
-        val q = graft.streaming.EventStream.ewma(
-            graft.streaming.EventStream.read(s, inDir), alpha = 0.5)
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .format("parquet").option("path", outDir).start()
-        try {
-          q.processAllAvailable()
-          graft.StreamFixtures.land(s"ev_gt_cutoff:$d",
-            ev.filter(col("ts") > cutoff), inDir)
-          q.processAllAvailable()
-        } finally q.stop()
-      }
+      val ss = Sessions.own(s, "spark.sql.shuffle.partitions" -> "4")
+      val q = graft.streaming.EventStream.ewma(
+          graft.streaming.EventStream.read(ss, inDir), alpha = 0.5)
+        .writeStream.outputMode("append")
+        .option("checkpointLocation", ckpt)
+        .format("parquet").option("path", outDir).start()
+      try {
+        q.processAllAvailable()
+        graft.StreamFixtures.land(s"ev_gt_cutoff:$d",
+          ev.filter(col("ts") > cutoff), inDir)
+        q.processAllAvailable()
+      } finally q.stop()
       s.read.parquet(outDir)
         .select(col("user_id"), col("event_id"), col("ts"),
           col("value"), col("ewma"))
@@ -724,19 +720,18 @@ private[graft] object QueriesShard5 {
       val cutoff = lit(CdcCutoff).cast("timestamp")
       graft.StreamFixtures.land(s"ev_le_cutoff:$d",
         ev.filter(col("ts") <= cutoff), inDir)
-      withShufflePartitions(s, 4) {
-        val q = graft.streaming.EventStream.holtWinters(
-            graft.streaming.EventStream.read(s, inDir))
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .format("parquet").option("path", outDir).start()
-        try {
-          q.processAllAvailable()
-          graft.StreamFixtures.land(s"ev_gt_cutoff:$d",
-            ev.filter(col("ts") > cutoff), inDir)
-          q.processAllAvailable()
-        } finally q.stop()
-      }
+      val ss = Sessions.own(s, "spark.sql.shuffle.partitions" -> "4")
+      val q = graft.streaming.EventStream.holtWinters(
+          graft.streaming.EventStream.read(ss, inDir))
+        .writeStream.outputMode("append")
+        .option("checkpointLocation", ckpt)
+        .format("parquet").option("path", outDir).start()
+      try {
+        q.processAllAvailable()
+        graft.StreamFixtures.land(s"ev_gt_cutoff:$d",
+          ev.filter(col("ts") > cutoff), inDir)
+        q.processAllAvailable()
+      } finally q.stop()
       s.read.parquet(outDir)
         .select(col("user_id"), col("event_id"), col("ts"), col("value"),
           col("level"), col("trend"))
@@ -760,19 +755,18 @@ private[graft] object QueriesShard5 {
       val cutoff = lit(CdcCutoff).cast("timestamp")
       graft.StreamFixtures.land(s"hsgrid_le_cutoff:$d",
         grid.filter(col("bucket") <= cutoff), inDir)
-      withShufflePartitions(s, 4) {
-        val stream = s.readStream.schema(grid.schema).parquet(inDir)
-        val q = graft.streaming.EventStream.holtWintersSeasonal(stream, 24)
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .format("parquet").option("path", outDir).start()
-        try {
-          q.processAllAvailable()
-          graft.StreamFixtures.land(s"hsgrid_gt_cutoff:$d",
-            grid.filter(col("bucket") > cutoff), inDir)
-          q.processAllAvailable()
-        } finally q.stop()
-      }
+      val ss = Sessions.own(s, "spark.sql.shuffle.partitions" -> "4")
+      val stream = ss.readStream.schema(grid.schema).parquet(inDir)
+      val q = graft.streaming.EventStream.holtWintersSeasonal(stream, 24)
+        .writeStream.outputMode("append")
+        .option("checkpointLocation", ckpt)
+        .format("parquet").option("path", outDir).start()
+      try {
+        q.processAllAvailable()
+        graft.StreamFixtures.land(s"hsgrid_gt_cutoff:$d",
+          grid.filter(col("bucket") > cutoff), inDir)
+        q.processAllAvailable()
+      } finally q.stop()
       s.read.parquet(outDir)
         .select(col("event_type"), col("bucket"), col("slot"), col("x"),
           col("level"), col("trend"), col("seasonal"))
@@ -789,20 +783,19 @@ private[graft] object QueriesShard5 {
       val cutoff = lit(CdcCutoff).cast("timestamp")
       graft.StreamFixtures.land(s"ev_le_cutoff:$d",
         ev.filter(col("ts") <= cutoff), inDir)
-      withShufflePartitions(s, 4) {
-        val q = graft.streaming.EventStream.cusum(
-            graft.streaming.EventStream.read(s, inDir),
-            target = 100.0, slack = 25.0, h = 200.0)
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .format("parquet").option("path", outDir).start()
-        try {
-          q.processAllAvailable()
-          graft.StreamFixtures.land(s"ev_gt_cutoff:$d",
-            ev.filter(col("ts") > cutoff), inDir)
-          q.processAllAvailable()
-        } finally q.stop()
-      }
+      val ss = Sessions.own(s, "spark.sql.shuffle.partitions" -> "4")
+      val q = graft.streaming.EventStream.cusum(
+          graft.streaming.EventStream.read(ss, inDir),
+          target = 100.0, slack = 25.0, h = 200.0)
+        .writeStream.outputMode("append")
+        .option("checkpointLocation", ckpt)
+        .format("parquet").option("path", outDir).start()
+      try {
+        q.processAllAvailable()
+        graft.StreamFixtures.land(s"ev_gt_cutoff:$d",
+          ev.filter(col("ts") > cutoff), inDir)
+        q.processAllAvailable()
+      } finally q.stop()
       s.read.parquet(outDir)
         .select(col("user_id"), col("event_id"), col("ts"), col("value"),
           col("cusum_pos"), col("cusum_neg"), col("breach"))
@@ -819,20 +812,19 @@ private[graft] object QueriesShard5 {
       val cutoff = lit(CdcCutoff).cast("timestamp")
       graft.StreamFixtures.land(s"ev_le_cutoff:$d",
         ev.filter(col("ts") <= cutoff), inDir)
-      withShufflePartitions(s, 4) {
-        val q = graft.streaming.EventStream.attribution(
-            graft.streaming.EventStream.read(s, inDir),
-            touchTypes = Seq("click", "view"), convType = "purchase")
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .format("parquet").option("path", outDir).start()
-        try {
-          q.processAllAvailable() // microbatch 1: ≤ cutoff
-          graft.StreamFixtures.land(s"ev_gt_cutoff:$d",
-            ev.filter(col("ts") > cutoff), inDir)
-          q.processAllAvailable() // microbatch 2: the rest
-        } finally q.stop()
-      }
+      val ss = Sessions.own(s, "spark.sql.shuffle.partitions" -> "4")
+      val q = graft.streaming.EventStream.attribution(
+          graft.streaming.EventStream.read(ss, inDir),
+          touchTypes = Seq("click", "view"), convType = "purchase")
+        .writeStream.outputMode("append")
+        .option("checkpointLocation", ckpt)
+        .format("parquet").option("path", outDir).start()
+      try {
+        q.processAllAvailable() // microbatch 1: ≤ cutoff
+        graft.StreamFixtures.land(s"ev_gt_cutoff:$d",
+          ev.filter(col("ts") > cutoff), inDir)
+        q.processAllAvailable() // microbatch 2: the rest
+      } finally q.stop()
       s.read.parquet(outDir)
         .select(col("user_id"), col("conv_id"), col("conv_ts"),
           col("touch_id"), col("touch_ts"))
@@ -874,21 +866,20 @@ private[graft] object QueriesShard5 {
       val cutoff = lit("1995-01-01 00:00:00").cast("timestamp")
       graft.StreamFixtures.land(s"crogrid_le_cutoff:$d",
         grid.filter(col("month_start") <= cutoff), inDir)
-      withShufflePartitions(s, 4) {
-        val q = graft.streaming.EventStream.croston(
-            s.readStream.schema(
-              "part BIGINT, month_start TIMESTAMP, qty BIGINT")
-              .parquet(inDir))
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .format("parquet").option("path", outDir).start()
-        try {
-          q.processAllAvailable()
-          graft.StreamFixtures.land(s"crogrid_gt_cutoff:$d",
-            grid.filter(col("month_start") > cutoff), inDir)
-          q.processAllAvailable()
-        } finally q.stop()
-      }
+      val ss = Sessions.own(s, "spark.sql.shuffle.partitions" -> "4")
+      val q = graft.streaming.EventStream.croston(
+          ss.readStream.schema(
+            "part BIGINT, month_start TIMESTAMP, qty BIGINT")
+            .parquet(inDir))
+        .writeStream.outputMode("append")
+        .option("checkpointLocation", ckpt)
+        .format("parquet").option("path", outDir).start()
+      try {
+        q.processAllAvailable()
+        graft.StreamFixtures.land(s"crogrid_gt_cutoff:$d",
+          grid.filter(col("month_start") > cutoff), inDir)
+        q.processAllAvailable()
+      } finally q.stop()
       s.read.parquet(outDir)
         .select(col("part"), col("month_start"), col("qty"),
           col("z_size"), col("p_interval"), col("croston"), col("sba"))
@@ -991,20 +982,19 @@ private[graft] object QueriesShard5 {
       }.longValue / 2)
       graft.StreamFixtures.land(s"evID_le_half:$d",
         ev.filter(col("event_id") <= cut), inDir)
-      withShufflePartitions(s, 4) {
-        val q = graft.streaming.EventStream.sprt(
-            graft.streaming.EventStream.read(s, inDir),
-            p0 = 0.18, p1 = 0.22, convType = "purchase")
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .format("parquet").option("path", outDir).start()
-        try {
-          q.processAllAvailable()
-          graft.StreamFixtures.land(s"evID_gt_half:$d",
-            ev.filter(col("event_id") > cut), inDir)
-          q.processAllAvailable()
-        } finally q.stop()
-      }
+      val ss = Sessions.own(s, "spark.sql.shuffle.partitions" -> "4")
+      val q = graft.streaming.EventStream.sprt(
+          graft.streaming.EventStream.read(ss, inDir),
+          p0 = 0.18, p1 = 0.22, convType = "purchase")
+        .writeStream.outputMode("append")
+        .option("checkpointLocation", ckpt)
+        .format("parquet").option("path", outDir).start()
+      try {
+        q.processAllAvailable()
+        graft.StreamFixtures.land(s"evID_gt_half:$d",
+          ev.filter(col("event_id") > cut), inDir)
+        q.processAllAvailable()
+      } finally q.stop()
       s.read.parquet(outDir)
         .select(col("variant"), col("decision"), col("n_obs"),
           col("successes"), col("llr"))

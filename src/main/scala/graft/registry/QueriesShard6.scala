@@ -309,18 +309,17 @@ private[graft] object QueriesShard6 {
         .select(col("event_type"), col("user_id"), col("event_id"))
       graft.StreamFixtures.land(s"evTUE_even:$d",
         ev.filter(col("event_id") % 2 === 0), inDir)
-      EntryHelpers.withShufflePartitions(s, 4) {
-        val stream = s.readStream.schema(ev.schema).parquet(inDir)
-        val q = graft.streaming.EventStream.srmMonitor(stream, root,
-          s"$base/ckpt", "event_type", "user_id",
-          pmod(col("user_id"), lit(2)).cast("string"))
-        try {
-          q.processAllAvailable() // day 1: even event ids
-          graft.StreamFixtures.land(s"evTUE_odd:$d",
-            ev.filter(col("event_id") % 2 =!= 0), inDir)
-          q.processAllAvailable() // day 2: odd event ids
-        } finally q.stop()
-      }
+      val ss = Sessions.own(s, "spark.sql.shuffle.partitions" -> "4")
+      val stream = ss.readStream.schema(ev.schema).parquet(inDir)
+      val q = graft.streaming.EventStream.srmMonitor(stream, root,
+        s"$base/ckpt", "event_type", "user_id",
+        pmod(col("user_id"), lit(2)).cast("string"))
+      try {
+        q.processAllAvailable() // day 1: even event ids
+        graft.StreamFixtures.land(s"evTUE_odd:$d",
+          ev.filter(col("event_id") % 2 =!= 0), inDir)
+        q.processAllAvailable() // day 2: odd event ids
+      } finally q.stop()
       Quality.sampleRatioMismatch(
           graft.sources.VersionedGroup.read(s, root, "units")
             .withColumnRenamed("k", "event_type"),
@@ -423,18 +422,17 @@ private[graft] object QueriesShard6 {
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       graft.StreamFixtures.land(s"docsDT_even:$d",
         docs.filter(col("doc_id") % 2 === 0), inDir)
-      EntryHelpers.withShufflePartitions(s, 4) {
-        val stream = s.readStream.schema(docs.schema).parquet(inDir)
-        val q = graft.streaming.EventStream.qualityGate(stream, root,
-          s"$base/ckpt", "doc_id", "text", minWords = 20L,
-          maxWords = 1000L, minDistinctRatio = 0.4, maxTopWordFrac = 0.12)
-        try {
-          q.processAllAvailable() // day 1
-          graft.StreamFixtures.land(s"docsDT_odd:$d",
-            docs.filter(col("doc_id") % 2 =!= 0), inDir)
-          q.processAllAvailable() // day 2
-        } finally q.stop()
-      }
+      val ss = Sessions.own(s, "spark.sql.shuffle.partitions" -> "4")
+      val stream = ss.readStream.schema(docs.schema).parquet(inDir)
+      val q = graft.streaming.EventStream.qualityGate(stream, root,
+        s"$base/ckpt", "doc_id", "text", minWords = 20L,
+        maxWords = 1000L, minDistinctRatio = 0.4, maxTopWordFrac = 0.12)
+      try {
+        q.processAllAvailable() // day 1
+        graft.StreamFixtures.land(s"docsDT_odd:$d",
+          docs.filter(col("doc_id") % 2 =!= 0), inDir)
+        q.processAllAvailable() // day 2
+      } finally q.stop()
       graft.sources.VersionedGroup.read(s, root, "docs")
         .orderBy(col("doc_id"))
     }),

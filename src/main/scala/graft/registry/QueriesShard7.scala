@@ -320,17 +320,16 @@ private[graft] object QueriesShard7 {
           .otherwise(col("text")).as("text"))
       graft.StreamFixtures.land(s"docsMoji_even:$d",
         docs.filter(col("doc_id") % 2 === 0), inDir)
-      EntryHelpers.withShufflePartitions(s, 4) {
-        val stream = s.readStream.schema(docs.schema).parquet(inDir)
-        val q = graft.streaming.EventStream.mojibakeGate(stream, root,
-          s"$base/ckpt", "doc_id", "text")
-        try {
-          q.processAllAvailable() // day 1
-          graft.StreamFixtures.land(s"docsMoji_odd:$d",
-            docs.filter(col("doc_id") % 2 =!= 0), inDir)
-          q.processAllAvailable() // day 2
-        } finally q.stop()
-      }
+      val ss = Sessions.own(s, "spark.sql.shuffle.partitions" -> "4")
+      val stream = ss.readStream.schema(docs.schema).parquet(inDir)
+      val q = graft.streaming.EventStream.mojibakeGate(stream, root,
+        s"$base/ckpt", "doc_id", "text")
+      try {
+        q.processAllAvailable() // day 1
+        graft.StreamFixtures.land(s"docsMoji_odd:$d",
+          docs.filter(col("doc_id") % 2 =!= 0), inDir)
+        q.processAllAvailable() // day 2
+      } finally q.stop()
       graft.sources.VersionedGroup.read(s, root, "docs")
         .orderBy(col("doc_id"))
     }),
@@ -478,17 +477,16 @@ private[graft] object QueriesShard7 {
           .as("url_raw"))
       graft.StreamFixtures.land(s"docsUrl_lt250:$d",
         docs.filter(col("doc_id") < 250), inDir)
-      EntryHelpers.withShufflePartitions(s, 4) {
-        val stream = s.readStream.schema(docs.schema).parquet(inDir)
-        val q = graft.streaming.EventStream.urlGate(stream, root,
-          s"$base/ckpt", "doc_id", "url_raw")
-        try {
-          q.processAllAvailable() // frontier prefix 1
-          graft.StreamFixtures.land(s"docsUrl_ge250:$d",
-            docs.filter(col("doc_id") >= 250), inDir)
-          q.processAllAvailable() // frontier prefix 2
-        } finally q.stop()
-      }
+      val ss = Sessions.own(s, "spark.sql.shuffle.partitions" -> "4")
+      val stream = ss.readStream.schema(docs.schema).parquet(inDir)
+      val q = graft.streaming.EventStream.urlGate(stream, root,
+        s"$base/ckpt", "doc_id", "url_raw")
+      try {
+        q.processAllAvailable() // frontier prefix 1
+        graft.StreamFixtures.land(s"docsUrl_ge250:$d",
+          docs.filter(col("doc_id") >= 250), inDir)
+        q.processAllAvailable() // frontier prefix 2
+      } finally q.stop()
       graft.sources.VersionedGroup.read(s, root, "docs")
         .select(col("doc_id"), col("url_canon"))
         .orderBy(col("doc_id"))
@@ -678,22 +676,21 @@ private[graft] object QueriesShard7 {
       val inDir = s"$base/in"; val outDir = s"$base/out"; val ckpt = s"$base/ckpt"
       val ev = eventCols(Tables.events(s, d))
       graft.StreamFixtures.land(s"ev_all:$d", ev, inDir)
-      withShufflePartitions(s, 4) {
-        val q = graft.streaming.EventStream
-          .sessions(graft.streaming.EventStream.read(s, inDir),
-            gapSeconds = 1800L)
-          .writeStream.format("parquet").option("path", outDir)
-          .option("checkpointLocation", ckpt).outputMode("append").start()
-        try {
-          q.processAllAvailable() // batch 1: all real events, wm = 0
-          graft.StreamFixtures.land(s"ev_sentinel_4h:$d",
-            eventSentinel(s, d, 4L * 3600 * 1000), inDir)
-          q.processAllAvailable() // batch 2: wm = maxTs - 1h
-          graft.StreamFixtures.land(s"ev_sentinel_4h60s:$d",
-            eventSentinel(s, d, 4L * 3600 * 1000 + 60000), inDir)
-          q.processAllAvailable() // batch 3: wm = maxTs + 3h → tails time out
-        } finally q.stop()
-      }
+      val ss = Sessions.own(s, "spark.sql.shuffle.partitions" -> "4")
+      val q = graft.streaming.EventStream
+        .sessions(graft.streaming.EventStream.read(ss, inDir),
+          gapSeconds = 1800L)
+        .writeStream.format("parquet").option("path", outDir)
+        .option("checkpointLocation", ckpt).outputMode("append").start()
+      try {
+        q.processAllAvailable() // batch 1: all real events, wm = 0
+        graft.StreamFixtures.land(s"ev_sentinel_4h:$d",
+          eventSentinel(s, d, 4L * 3600 * 1000), inDir)
+        q.processAllAvailable() // batch 2: wm = maxTs - 1h
+        graft.StreamFixtures.land(s"ev_sentinel_4h60s:$d",
+          eventSentinel(s, d, 4L * 3600 * 1000 + 60000), inDir)
+        q.processAllAvailable() // batch 3: wm = maxTs + 3h → tails time out
+      } finally q.stop()
       s.read.parquet(outDir).filter(col("user_id") =!= -1L)
         .select(col("user_id"),
           row_number().over(org.apache.spark.sql.expressions.Window
@@ -725,21 +722,20 @@ private[graft] object QueriesShard7 {
         col("c_custkey").as("user_id"),
         col("c_name").as("customer_name"),
         col("c_mktsegment").as("market_segment"))
-      withShufflePartitions(s, 4) {
-        val q = graft.streaming.EventStream.enrich(
-            graft.streaming.EventStream.read(s, inDir), dim, Seq("user_id"))
-          .select(col("event_id"), col("user_id"), col("ts"),
-            col("event_type"), col("value"), col("customer_name"),
-            col("market_segment"))
-          .writeStream.format("parquet").option("path", outDir)
-          .option("checkpointLocation", ckpt).outputMode("append").start()
-        try {
-          q.processAllAvailable() // batch 1: events <= cutoff
-          graft.StreamFixtures.land(s"ev_gt_cutoff:$d",
-            ev.filter(col("ts") > cutoff), inDir)
-          q.processAllAvailable() // batch 2: the rest
-        } finally q.stop()
-      }
+      val ss = Sessions.own(s, "spark.sql.shuffle.partitions" -> "4")
+      val q = graft.streaming.EventStream.enrich(
+          graft.streaming.EventStream.read(ss, inDir), dim, Seq("user_id"))
+        .select(col("event_id"), col("user_id"), col("ts"),
+          col("event_type"), col("value"), col("customer_name"),
+          col("market_segment"))
+        .writeStream.format("parquet").option("path", outDir)
+        .option("checkpointLocation", ckpt).outputMode("append").start()
+      try {
+        q.processAllAvailable() // batch 1: events <= cutoff
+        graft.StreamFixtures.land(s"ev_gt_cutoff:$d",
+          ev.filter(col("ts") > cutoff), inDir)
+        q.processAllAvailable() // batch 2: the rest
+      } finally q.stop()
       s.read.parquet(outDir).orderBy(col("event_id"))
     }),
 
@@ -758,19 +754,18 @@ private[graft] object QueriesShard7 {
       val cutoff = lit(CdcCutoff).cast("timestamp")
       graft.StreamFixtures.land(s"ev_le_cutoff:$d",
         ev.filter(col("ts") <= cutoff), inDir)
-      withShufflePartitions(s, 4) {
-        val q = graft.streaming.EventStream.read(s, inDir)
-          .select(col("event_id"), col("ts"), col("user_id"),
-            col("event_type"), col("value"))
-          .writeStream.format("parquet").option("path", outDir)
-          .option("checkpointLocation", ckpt).outputMode("append").start()
-        try {
-          q.processAllAvailable() // batch 1: pre-cutoff files only
-          graft.StreamFixtures.land(s"ev_gt_cutoff:$d",
-            ev.filter(col("ts") > cutoff), inDir)
-          q.processAllAvailable() // batch 2: only the new files
-        } finally q.stop()
-      }
+      val ss = Sessions.own(s, "spark.sql.shuffle.partitions" -> "4")
+      val q = graft.streaming.EventStream.read(ss, inDir)
+        .select(col("event_id"), col("ts"), col("user_id"),
+          col("event_type"), col("value"))
+        .writeStream.format("parquet").option("path", outDir)
+        .option("checkpointLocation", ckpt).outputMode("append").start()
+      try {
+        q.processAllAvailable() // batch 1: pre-cutoff files only
+        graft.StreamFixtures.land(s"ev_gt_cutoff:$d",
+          ev.filter(col("ts") > cutoff), inDir)
+        q.processAllAvailable() // batch 2: only the new files
+      } finally q.stop()
       s.read.parquet(outDir).orderBy(col("event_id"))
     }),
 

@@ -215,20 +215,19 @@ private[graft] object QueriesShard8 {
           when(col("customer_id") % 10 === 0, tU).otherwise(t0))
         .withColumn("snap_ts", a2)
       graft.StreamFixtures.land(s"s2_day1:$d", day1, inDir)
-      withShufflePartitions(s, 4) {
-        val q = graft.streaming.EventStream.applyScd2(
-          s.readStream.schema(day1.schema).parquet(inDir),
-          tbl, ckpt, Seq("customer_id"), "updated_at", "snap_ts")
-        try {
-          q.processAllAvailable() // batch 1: bootstrap fold
-          graft.StreamFixtures.land(s"s2_day2:$d", day2, inDir)
-          q.processAllAvailable() // batch 2: the day-2 fold
-          // REDELIVERY files must be NEW paths (the file source skips
-          // already-seen files) — land a second physical copy
-          graft.StreamFixtures.land(s"s2_day2b:$d", day2, inDir)
-          q.processAllAvailable() // batch 3: REDELIVERY — must no-op
-        } finally q.stop()
-      }
+      val ss = Sessions.own(s, "spark.sql.shuffle.partitions" -> "4")
+      val q = graft.streaming.EventStream.applyScd2(
+        ss.readStream.schema(day1.schema).parquet(inDir),
+        tbl, ckpt, Seq("customer_id"), "updated_at", "snap_ts")
+      try {
+        q.processAllAvailable() // batch 1: bootstrap fold
+        graft.StreamFixtures.land(s"s2_day2:$d", day2, inDir)
+        q.processAllAvailable() // batch 2: the day-2 fold
+        // REDELIVERY files must be NEW paths (the file source skips
+        // already-seen files) — land a second physical copy
+        graft.StreamFixtures.land(s"s2_day2b:$d", day2, inDir)
+        q.processAllAvailable() // batch 3: REDELIVERY — must no-op
+      } finally q.stop()
       graft.sources.Versioned.read(s, tbl)
         .orderBy(col("customer_id"), col("valid_from"))
     }),

@@ -49,25 +49,18 @@ object Sink {
     * that isn't partition-aligned with the batch.
     */
   def upsert(spark: SparkSession, targetPath: String, updates: DataFrame,
-             key: Seq[String], trackingCol: String, tieBreak: Seq[String] = Nil): Unit = {
-    val target = spark.read.parquet(targetPath)
-    val merged = graft.operators.Cdc.upsert(target, updates, key, trackingCol, tieBreak)
-    // parquet has no transactional rewrite: stage, rename the live dir
-    // ASIDE (not delete — a crash between steps must never lose the
-    // table), swap staged into place, then drop the old copy. The
-    // FileSystem is resolved FROM the target path so non-default
-    // schemes (s3a://, hdfs://...) work.
-    val dst = new Path(targetPath)
-    val fs  = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(targetPath + "__staged")
-    merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    swapInto(fs, tmp, dst)
-  }
+             key: Seq[String], trackingCol: String, tieBreak: Seq[String] = Nil): Unit =
+    replaceTable(spark, targetPath, graft.operators.Cdc.upsert(
+      spark.read.parquet(targetPath), updates, key, trackingCol, tieBreak))
 
-  /** Atomically replace the parquet table at `targetPath` with `df`:
-    * stage to a sibling dir, then the same checked-rename promote as
-    * [[upsert]]. `df` MAY read from the live table — the stage write
-    * completes before anything moves.
+  /** Atomically replace the parquet table at `targetPath` with `df`.
+    * Parquet has no transactional rewrite: stage to a sibling dir,
+    * rename the live dir ASIDE (not delete — a crash between steps
+    * must never lose the table), swap the staged copy into place, then
+    * drop the old copy. The FileSystem is resolved FROM the target
+    * path so non-default schemes (s3a://, hdfs://...) work. `df` MAY
+    * read from the live table — the stage write completes before
+    * anything moves.
     */
   def replaceTable(spark: SparkSession, targetPath: String, df: DataFrame): Unit = {
     val dst = new Path(targetPath)
@@ -107,7 +100,7 @@ object Sink {
     * ~`targetBytes` files via `coalesce` (narrow — no shuffle, each
     * output task just concatenates input splits) and swaps the
     * compacted copy in through the same checked-rename dance as
-    * [[upsert]]. No-op when the layout is already at-or-below the
+    * [[replaceTable]]. No-op when the layout is already at-or-below the
     * target file count. Returns the resulting data-file count.
     */
   def compact(spark: SparkSession, path: String,

@@ -74,15 +74,6 @@ object Sources {
     (good, quarantine)
   }
 
-  /** Incremental extract from any source: rows with tracking column
-    * beyond the watermark (reference postgres_loader.py builds
-    * `WHERE tracking_column > last_value`). The predicate reaches the
-    * scan for columnar sources — see Tables.eventsRaw for the
-    * stored-column rule.
-    */
-  def incremental(df: DataFrame, trackingCol: String, lastValue: Column): DataFrame =
-    graft.operators.Cdc.incrementalFilter(df, trackingCol, lastValue)
-
   /** Partitioned JDBC read — the reference's ACTUAL extract side
     * (reference: dagster_code/clickhouse_load_tool/postgres_loader.py
     * `extract_data`, which pages a Postgres table with

@@ -73,6 +73,30 @@ class RegistrySpec extends AnyFunSuite {
       s"shards over the 1200-line ceiling: $over — open the next shard")
   }
 
+  // graft never writes a conf on a session it is handed: a conf one
+  // operation needs lives in a session it owns (`Sessions.own`, the
+  // only writer), and the mains set theirs through the session
+  // builder's `.config`
+  test("src/main writes session confs only in the one isolation helper") {
+    val write = """\bconf\.(set|unset)\(|\bsetConf\(""".r
+    val root = java.nio.file.Paths.get("src/main")
+    assert(java.nio.file.Files.isDirectory(root),
+      s"src/main missing from the test working dir: ${root.toAbsolutePath}")
+    val files = java.nio.file.Files.walk(root).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.endsWith(".scala"))
+    val hits = files.flatMap { p =>
+      scala.jdk.CollectionConverters.ListHasAsScala(
+        java.nio.file.Files.readAllLines(p)).asScala.zipWithIndex.collect {
+        case (line, i) if write.findFirstIn(line).isDefined &&
+            !line.trim.startsWith("//") && !line.trim.startsWith("*") =>
+          s"${root.relativize(p)}:${i + 1}"
+      }
+    }
+    assert(hits.map(_.takeWhile(_ != ':')) === Seq("scala/graft/Sessions.scala"),
+      s"session conf writes outside Sessions.own: ${hits.mkString(", ")}")
+  }
+
   // SURVEY §2 coverage hygiene (r12 verdict ask #5): every graded
   // query key must grep in SURVEY.md's §2 inventory — the judge
   // checks §2 line by line, so a key graded in CORRECTNESS but

@@ -1054,4 +1054,20 @@ class W6OpsSpec extends SparkSuite {
       (1L, 5L, 0.721348, 3)))
     Par.release()
   }
+
+  test("adamicAdar: a sort-merge plan never evaluates a leaf center's 1/ln 1") {
+    // without broadcast joins the degree term is computed on adjacency
+    // rows before the wedge filter drops leaf centers; the session is
+    // the test's own, so the shared one keeps its threshold
+    val own = spark.newSession()
+    own.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val g = own.createDataFrame(Seq((10L, 1L), (10L, 2L), (10L, 5L), (10L, 6L),
+      (20L, 3L), (20L, 4L))).toDF("x", "y")
+    val top = Graph.adamicAdar(g, "x", "y", topK = 3)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(3),
+        r.getInt(4))).toList
+    assert(top === List((3L, 4L, 1.442695, 1), (1L, 2L, 0.721348, 2),
+      (1L, 5L, 0.721348, 3)))
+    Par.release()
+  }
 }
