@@ -52,11 +52,18 @@ object Cdc {
     */
   def upsert(target: DataFrame, updates: DataFrame, key: Seq[String],
              trackingCol: String, tieBreak: Seq[String] = Nil): DataFrame = {
-    val cols  = target.columns.toSeq
-    val fresh = dedupLatestPerKey(updates.select(cols.map(col): _*), key, trackingCol, tieBreak)
-    val kept  = target.join(fresh.select(key.map(col): _*), key, "left_anti")
-    kept.unionByName(fresh)
+    val fresh = dedupLatestPerKey(updates.select(target.columns.toSeq.map(col): _*),
+      key, trackingCol, tieBreak)
+    replaceKeys(target, fresh, key)
   }
+
+  /** The delete+insert step of [[upsert]]: rows of `target` whose key
+    * is not in `latest`, plus all of `latest`, which already holds one
+    * row per key. [[graft.sources.Versioned]] reads a version with a
+    * delta segment as `replaceKeys(base, delta)`.
+    */
+  private[graft] def replaceKeys(target: DataFrame, latest: DataFrame, key: Seq[String]): DataFrame =
+    target.join(latest.select(key.map(col): _*), key, "left_anti").unionByName(latest)
 
   /** Keep the newest row per key (highest trackingCol; `tieBreak`
     * columns make the winner total-ordered and deterministic).

@@ -87,7 +87,9 @@ object IncrementalModel {
         .write.mode(SaveMode.ErrorIfExists).parquet(targetPath)
       loaded.get("rows").asInstanceOf[Long]
     } else {
-      val target = spark.read.parquet(targetPath)
+      // both strategies write only the source's rows, so the target
+      // reads under the source's schema, with no inference job
+      val target = spark.read.schema(source.schema).parquet(targetPath)
       val last = target.agg(max(col(trackingCol))).head.get(0)
       val delta =
         if (last == null) source

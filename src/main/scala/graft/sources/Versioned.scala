@@ -1,9 +1,12 @@
 package graft.sources
 
+import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.JsonNode
+import graft.operators.Cdc
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit, max, min, when}
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -22,6 +25,14 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *     d-<uuid>/part-*.parquet    // immutable data segments
   * }}}
   *
+  * A version is BASE segments plus at most one DELTA segment. The
+  * delta holds the latest row of every key [[upsert]]ed since the
+  * last fold, and a read is `base left_anti delta-keys ∪ delta`
+  * ([[graft.operators.Cdc.replaceKeys]], the same delete+insert step
+  * [[graft.operators.Cdc.upsert]] applies): one equi anti-join that
+  * Spark broadcasts while the delta is small. A daily upsert thus
+  * writes the delta, not the table.
+  *
   * Protocol:
   *  - a WRITE lands its parquet segment under a fresh `d-<uuid>/`
   *    directory — invisible until referenced; a crash mid-write
@@ -31,20 +42,34 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    so two racing committers collide on the same version name and
   *    the loser RETRIES against the new head — optimistic concurrency
   *    without a lock service, as strong as the filesystem's rename.
-  *    Same contract every log-based table format carries;
+  *    Same contract every log-based table format carries. A segment
+  *    a lost attempt wrote is deleted, as is one the winning attempt
+  *    wrote but does not reference (a delta [[upsert]] then folded);
   *  - a READER resolves one manifest and reads only its segments,
   *    under the schema the manifest records: pinned, repeatable,
   *    immune to concurrent commits, and no schema-inference job;
   *  - [[vacuum]] deletes segments no kept manifest references.
   *
   * A version's manifest, in the one [[Manifest]] format:
-  * `{"version": 3, "segments": ["d-<uuid>", ...], "schema": "<StructType JSON>"}`.
-  * Segments are root-relative or absolute ([[shallowClone]]). The
-  * schema is the segment's on a replace and the head's widened by the
-  * segment's ([[SchemaEvolution.evolve]]) on an append, so older
-  * segments null-fill added columns while time travel keeps each
-  * version's own schema; [[restore]] and [[shallowClone]] copy it. A
-  * manifest without one infers it (the empty schema if no segments).
+  * {{{
+  *   {"version": 3, "segments": ["d-<uuid>", ...], "rows": [8000, ...],
+  *    "schema": "<StructType JSON>",
+  *    "delta": {"segment": "d-<uuid>", "rows": 160, "key": ["plan_id"]}}
+  * }}}
+  * Segments are root-relative or absolute ([[shallowClone]]). `rows`
+  * holds each base segment's row count, observed on its write, and is
+  * what [[upsert]]'s fold rule reads, so the rule runs no job. Writes
+  * inside the commit loop count their rows ([[upsert]], [[compact]],
+  * [[mergeInto]]); a [[commit]] or [[writeAuditPublish]] segment is
+  * not counted, and a version holding one has no `rows`.
+  * `delta` is absent when the version has none; a manifest written
+  * before deltas existed reads exactly as before. The schema is the
+  * segment's on a replace and the head's widened by the segment's
+  * ([[SchemaEvolution.evolve]]) on an append, so older segments
+  * null-fill added columns while time travel keeps each version's own
+  * schema; [[restore]] and [[shallowClone]] copy the whole manifest
+  * content. A manifest without a schema infers it (the empty schema if
+  * no segments).
   *
   * Scale notes: a manifest holds segment DIRECTORY names (not file
   * lists), so its size grows with commits, not files; `replace=false`
@@ -54,11 +79,37 @@ import org.apache.spark.sql.types.{DataType, StructType}
   */
 object Versioned {
 
+  /** The delta size, as a share of the base's rows, at which
+    * [[upsert]] folds the delta into the base. With a change rate of
+    * c·B rows a day on a base of B rows and this ratio r, the delta
+    * grows by about c·B a day for r/c days and the fold then rewrites
+    * B, so upserts write about B·(r/2 + c/r) a day (the fold day also
+    * writes its delta, c·B/2 a day more), against B a day for a
+    * rewrite per upsert. At r = 1/4 and c = 2% that is about 0.2·B; r
+    * balances the delta's growth (r/2) against the fold's rewrite
+    * (c/r), and r = √(2c) is the minimum. Reads pay an anti-join
+    * against at most r·B delta rows.
+    */
+  private val FoldRatio = 0.25
+
   private def versionsDir(path: String) = new Path(path, "_versions")
   private def newSegment() = s"d-${java.util.UUID.randomUUID()}"
 
-  /** A committed version: its segments and the schema they read as. */
-  private final case class Version(segments: Seq[String], schema: StructType)
+  /** A version's delta segment: the latest row of every key upserted
+    * on `key` since the last fold. */
+  private final case class Delta(segment: String, rows: Long, key: Seq[String])
+
+  /** A committed version: its base segments, their row counts when
+    * every base write recorded one, the schema they read as, and its
+    * delta. */
+  private final case class Version(segments: Seq[String], rows: Option[Seq[Long]],
+                                   schema: StructType, delta: Option[Delta] = None) {
+    def live: Seq[String] = segments ++ delta.map(_.segment)
+  }
+
+  /** A version of one freshly written segment. */
+  private def single(segment: (String, Long), schema: StructType): Version =
+    Version(Seq(segment._1), Some(Seq(segment._2)), schema)
 
   /** Latest committed version number, 0 if none. */
   def currentVersion(spark: SparkSession, path: String): Int =
@@ -70,47 +121,102 @@ object Versioned {
       (if (p.isAbsolute) p else new Path(path, s)).toString
     }
 
+  private def texts(j: JsonNode): Seq[String] = j.elements().asScala.map(_.asText).toSeq
+
   private def readVersion(spark: SparkSession, path: String, v: Int): Version = {
     val m = Manifest.read(Manifest.fs(spark, path), new Path(versionsDir(path), Manifest.name("v", v)))
-    val segments = m.path("segments").elements().asScala.map(_.asText).toSeq
+    val segments = texts(m.path("segments"))
     val schema = Option(m.get("schema"))
       .map(j => DataType.fromJson(j.asText).asInstanceOf[StructType])
       .getOrElse(
         if (segments.isEmpty) new StructType()
         else spark.read.parquet(segmentPaths(path, segments): _*).schema)
-    Version(segments, schema)
+    Version(segments, Option(m.get("rows")).map(_.elements().asScala.map(_.asLong).toSeq),
+      schema, Option(m.get("delta")).map(d =>
+        Delta(d.get("segment").asText, d.get("rows").asLong, texts(d.path("key")))))
+  }
+
+  private def readSegments(spark: SparkSession, path: String, schema: StructType,
+                           segments: Seq[String]): DataFrame =
+    spark.read.schema(schema).parquet(segmentPaths(path, segments): _*)
+
+  /** A version's rows: its base segments less the keys its delta
+    * replaces, plus the delta. */
+  private def scan(spark: SparkSession, path: String, v: Version): DataFrame = {
+    val base = readSegments(spark, path, v.schema, v.segments)
+    v.delta.fold(base)(d =>
+      Cdc.replaceKeys(base, readSegments(spark, path, v.schema, Seq(d.segment)), d.key))
+  }
+
+  /** Land `df` as a fresh segment under `path`. */
+  private def writeSegment(df: DataFrame, path: String): String = {
+    val seg = newSegment()
+    df.write.mode(SaveMode.ErrorIfExists).parquet(new Path(path, seg).toString)
+    seg
   }
 
   /** Commit the next version through the [[Manifest]] CAS loop;
-    * `next(head)` is the new version's content, re-derived after
-    * every lost race. */
-  private def commitVersion(spark: SparkSession, path: String,
-                            lost: () => Unit = () => ())(next: Int => Version): Int =
-    Manifest.commitNext(Manifest.fs(spark, path), versionsDir(path), "v", lost) { head =>
-      val v = next(head)
+    * `next(head, write)` is the new version's content, re-derived
+    * after every lost race. `write` lands a segment and returns it
+    * with its row count, observed on the write itself. Segments it
+    * lands belong to the attempt: a lost attempt deletes them all, the
+    * winning one those its version does not reference. A crash leaves
+    * them to [[vacuum]]. */
+  private def commitVersion(spark: SparkSession, path: String)
+                           (next: (Int, DataFrame => (String, Long)) => Version): Int = {
+    val f = Manifest.fs(spark, path)
+    val written = ArrayBuffer.empty[String]
+    def drop(keep: Set[String]): Unit = {
+      written.filterNot(keep).foreach(s => f.delete(new Path(path, s), true))
+      written.clear()
+    }
+    var committed: Version = null
+    val version = Manifest.commitNext(f, versionsDir(path), "v", () => drop(Set.empty)) { head =>
+      committed = next(head, df => {
+        val rows = Observation()
+        val seg = writeSegment(df.observe(rows, count(lit(1)).as("rows")), path)
+        written += seg
+        seg -> rows.get("rows").asInstanceOf[Long]
+      })
       val m = Manifest.obj().put("version", head + 1)
       val segments = m.putArray("segments")
-      v.segments.foreach(segments.add(_))
-      m.put("schema", v.schema.json)
+      committed.segments.foreach(segments.add(_))
+      committed.rows.foreach(rs => { val a = m.putArray("rows"); rs.foreach(a.add(_)) })
+      m.put("schema", committed.schema.json)
+      committed.delta.foreach { d =>
+        val key = m.putObject("delta").put("segment", d.segment).put("rows", d.rows).putArray("key")
+        d.key.foreach(key.add(_))
+      }
+      m
     }
+    drop(committed.live.toSet)
+    version
+  }
 
   /** Write `df` as a new segment and commit the next version.
     * `replace = true` makes the new version exactly this segment (the
     * atomic full-refresh swap); `replace = false` appends it to the
     * current head's segments, widening the head's schema by any
-    * columns the segment adds. Returns the committed version number.
+    * columns the segment adds. An append onto a head with a delta
+    * folds the delta first, so an appended row sharing a delta key
+    * stays visible. The segment's rows are not counted (an observation
+    * on every write costs task CPU on every commit), so the version
+    * records no `rows` and an [[upsert]] onto it folds.
+    * Returns the committed version number.
     * Retries the manifest CAS against a moved head — concurrent
     * appends serialize without locks.
     */
   def commit(df: DataFrame, path: String, replace: Boolean = false): Int = {
     val spark = df.sparkSession
-    val seg = newSegment()
-    df.write.mode(SaveMode.ErrorIfExists).parquet(new Path(path, seg).toString)
-    commitVersion(spark, path) { head =>
-      if (replace || head == 0) Version(Seq(seg), df.schema)
+    val seg = writeSegment(df, path)
+    commitVersion(spark, path) { (head, write) =>
+      if (replace || head == 0) Version(Seq(seg), None, df.schema)
       else {
-        val base = readVersion(spark, path, head)
-        Version(base.segments :+ seg, SchemaEvolution.evolve(base.schema, df.schema))
+        val h = readVersion(spark, path, head)
+        val base =
+          if (h.delta.isEmpty) h
+          else { val merged = scan(spark, path, h); single(write(merged), merged.schema) }
+        Version(base.segments :+ seg, None, SchemaEvolution.evolve(base.schema, df.schema))
       }
     }
   }
@@ -133,13 +239,12 @@ object Versioned {
   def writeAuditPublish(candidate: DataFrame, path: String,
                         audit: DataFrame => DataFrame): (Option[Int], DataFrame) = {
     val spark = candidate.sparkSession
-    val seg = newSegment()
-    candidate.write.mode(SaveMode.ErrorIfExists)
-      .parquet(new Path(path, seg).toString)
+    val seg = writeSegment(candidate, path)
     val staged = spark.read.schema(candidate.schema).parquet(new Path(path, seg).toString)
     val failures = graft.Par.persistTracked(audit(staged))
     if (failures.isEmpty)
-      (Some(commitVersion(spark, path)(_ => Version(Seq(seg), candidate.schema))), failures)
+      (Some(commitVersion(spark, path)((_, _) => Version(Seq(seg), None, candidate.schema))),
+        failures)
     else {
       // Materialize the failures OFF the staged files BEFORE deleting
       // them (r11 ADVICE): persist is lazy and isEmpty only ran the
@@ -163,14 +268,14 @@ object Versioned {
     * The read uses the version's recorded schema, so it runs no
     * schema-inference job; segments committed before an evolving
     * append null-fill its added columns, and a pre-evolution version
-    * keeps its ORIGINAL narrow schema.
+    * keeps its ORIGINAL narrow schema. A version with a delta reads
+    * its base less the delta's keys, plus the delta.
     */
   def read(spark: SparkSession, path: String,
            version: Option[Int] = None): DataFrame = {
     val v = version.getOrElse(currentVersion(spark, path))
     require(v >= 1, s"no committed version at $path")
-    val m = readVersion(spark, path, v)
-    spark.read.schema(m.schema).parquet(segmentPaths(path, m.segments): _*)
+    scan(spark, path, readVersion(spark, path, v))
   }
 
   /** Per-FILE min/max stats for a pinned version — Delta/Iceberg
@@ -182,17 +287,22 @@ object Versioned {
     * out, and versioning the stats means a later commit writes ITS
     * OWN manifest while time travel prunes with the stats true at
     * the pinned version. At 100 TB the stats pass reads only the
-    * stats columns and the manifest is one row per data file.
+    * stats columns and the manifest is one row per data file. The
+    * scan covers every row of every live file, base and delta, rows a
+    * delta replaced included: a file's range holds all it stores, and
+    * [[prunedRead]] applies the delta after pruning.
     * Returns the number of files profiled.
     */
   def writeStats(spark: SparkSession, path: String, cols: Seq[String],
                  version: Option[Int] = None): Int = {
     require(cols.nonEmpty, "writeStats needs at least one column")
     val v = version.getOrElse(currentVersion(spark, path))
+    require(v >= 1, s"no committed version at $path")
     val aggs = cols.flatMap(c =>
       Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"))) :+
       count(lit(1)).as("n_rows")
-    val stats = read(spark, path, Some(v))
+    val m = readVersion(spark, path, v)
+    val stats = readSegments(spark, path, m.schema, m.live)
       .select(col("_metadata.file_path").as("file") +: cols.map(col): _*)
       .groupBy(col("file"))
       .agg(aggs.head, aggs.tail: _*)
@@ -208,7 +318,9 @@ object Versioned {
     * the PINNED version. Null-stats files are kept — the residual
     * filter handles their rows — and the residual BETWEEN pushes to
     * the scan so row-group pruning still applies inside survivors.
-    * Requires [[writeStats]] to have run for the version.
+    * Requires [[writeStats]] to have run for the version. A version's
+    * delta is read whole: its keys must still hide the base rows they
+    * replace, in pruned files or not.
     */
   def prunedRead(spark: SparkSession, path: String, pruneCol: String,
                  lo: Any, hi: Any,
@@ -222,18 +334,18 @@ object Versioned {
         col(s"max_$pruneCol").isNull || col(s"min_$pruneCol").isNull ||
         !(col(s"max_$pruneCol") < lit(lo) || col(s"min_$pruneCol") > lit(hi)))
       .select(col("file")).collect().map(_.getString(0))
-    val full = read(spark, path, Some(v))
-    val base =
-      if (kept.isEmpty) full.filter(lit(false))
-      else spark.read.schema(full.schema).parquet(kept.toSeq: _*)
-    base.filter(col(pruneCol).between(lit(lo), lit(hi)))
+    val m = readVersion(spark, path, v)
+    val delta = m.delta.map(d => new Path(d.segment).getName)
+    val base = kept.toSeq.filterNot(f => delta.contains(new Path(f).getParent.getName))
+    scan(spark, path, m.copy(segments = base))
+      .filter(col(pruneCol).between(lit(lo), lit(hi)))
   }
 
   /** Zero-copy SHALLOW CLONE (the public Delta `SHALLOW CLONE` /
     * Iceberg snapshot-ref branching idea): publish at `dstPath` a
     * version whose manifest references the SOURCE's pinned segments
-    * by absolute path — a metadata-only branch: one tiny JSON write
-    * regardless of table size, so a 100 TB table branches in
+    * (its delta too) by absolute path — a metadata-only branch: one
+    * tiny JSON write regardless of table size, so a 100 TB table branches in
     * milliseconds for dev/test/what-if work. The clone is a full
     * Versioned table afterwards: appends/replaces/restores land new
     * segments under ITS OWN root and the source never sees the
@@ -255,11 +367,10 @@ object Versioned {
     require(v >= 1, s"no committed version to clone at $srcPath")
     val srcRoot = Manifest.fs(spark, srcPath).makeQualified(new Path(srcPath))
     val src = readVersion(spark, srcPath, v)
-    val segs = src.segments.map { s =>
-      val p = new Path(s)
-      if (p.isAbsolute) s else new Path(srcRoot, s).toString
-    }
-    commitVersion(spark, dstPath)(_ => Version(segs, src.schema))
+    def absolute(s: String) =
+      if (new Path(s).isAbsolute) s else new Path(srcRoot, s).toString
+    commitVersion(spark, dstPath)((_, _) => src.copy(segments = src.segments.map(absolute),
+      delta = src.delta.map(d => d.copy(segment = absolute(d.segment)))))
   }
 
   /** RESTORE TABLE TO VERSION (Delta's `RESTORE`, Iceberg's
@@ -269,12 +380,12 @@ object Versioned {
     * versions stay readable for the post-mortem and reclaimable by
     * [[vacuum]], and a restore is itself just another auditable
     * commit). METADATA-ONLY: the new manifest points at version
-    * `toVersion`'s existing segments — zero data moved at any table
-    * size, the same CAS race discipline as [[commit]].
+    * `toVersion`'s existing segments and delta — zero data moved at
+    * any table size, the same CAS race discipline as [[commit]].
     */
   def restore(spark: SparkSession, path: String, toVersion: Int): Int = {
     val target = readVersion(spark, path, toVersion) // validates existence
-    commitVersion(spark, path) { head =>
+    commitVersion(spark, path) { (head, _) =>
       require(toVersion >= 1 && toVersion <= head,
         s"version $toVersion not committed at $path (head $head)")
       target
@@ -339,43 +450,64 @@ object Versioned {
     * a crash leaves it for [[vacuum]].
     */
   private[graft] def commitRebase(spark: SparkSession, path: String)
-                                 (stateOf: Int => DataFrame): Int = {
-    var seg: Path = null
-    commitVersion(spark, path, lost = () => Manifest.fs(spark, path).delete(seg, true)) { head =>
-      seg = new Path(path, newSegment())
+                                 (stateOf: Int => DataFrame): Int =
+    commitVersion(spark, path) { (head, write) =>
       val state = stateOf(head)
-      state.write.mode(SaveMode.ErrorIfExists).parquet(seg.toString)
-      Version(Seq(seg.getName), state.schema)
+      single(write(state), state.schema)
     }
-  }
 
   /** Keyed upsert as a version commit: merge `updates` into the head
-    * (latest-wins per key via [[graft.operators.Cdc.upsert]]) and
-    * commit the merged state as the next version — the atomic,
-    * time-travelable form of the parquet upsert: readers mid-scan
-    * keep their pinned version, a crash before the manifest CAS
-    * leaves the head untouched, and yesterday's table stays
-    * queryable until vacuumed. First commit bootstraps from the
-    * batch. Returns the committed version.
+    * (latest-wins per key, the delete+insert of
+    * [[graft.operators.Cdc.upsert]]) and commit the result as the next
+    * version — the atomic, time-travelable form of the parquet
+    * upsert: readers mid-scan keep their pinned version, a crash
+    * before the manifest CAS leaves the head untouched, and
+    * yesterday's table stays queryable until vacuumed. First commit
+    * bootstraps from the batch. Returns the committed version.
     *
-    * The merge runs inside the CAS retry loop ([[commitRebase]]): a
-    * concurrent commit moves the head, the lost CAS discards the
-    * stale merge, and the retry re-merges against the winner — no
-    * lost updates under writer races.
+    * The upsert writes the head's DELTA, not the table: onto a head
+    * without one, the batch's latest row per key (projected to the
+    * head's columns); onto a head with one, `Cdc.upsert(delta,
+    * updates)`. The new version is the head's base segments plus that
+    * delta, so the old delta drops out. When the delta it wrote
+    * reaches [[FoldRatio]] of the base's rows (counts the manifest
+    * records, so the rule runs no job), the upsert FOLDS instead: it
+    * rewrites the rows that version would read, which are
+    * `Cdc.upsert(read(head), updates)`, as one base segment, the same
+    * rewrite [[compact]] does, and drops the delta. It folds straight
+    * away where a delta cannot carry the merge: the head's delta is
+    * keyed on other columns, the batch's column types differ from the
+    * head's, or the head's base rows are uncounted (its base was
+    * written by [[commit]], or before deltas existed). Either way
+    * reads see exactly the copy-on-write result.
     *
-    * This rewrites the merged state (one segment) — the right trade
-    * while a snapshot fits a commit; at copy-on-write pain, switch
-    * the merge to [[Sink.jdbcUpsert]]-style delta segments + a
-    * compaction pass.
+    * Everything runs inside the CAS retry loop: a concurrent commit
+    * moves the head, the lost attempt's segments are deleted, and the
+    * retry re-derives the delta against the winner — no lost updates
+    * under writer races.
     */
   def upsert(updates: DataFrame, path: String, key: Seq[String],
              trackingCol: String, tieBreak: Seq[String] = Nil): Int = {
     val spark = updates.sparkSession
-    commitRebase(spark, path) { head =>
-      if (head == 0)
-        graft.operators.Cdc.dedupLatestPerKey(updates, key, trackingCol, tieBreak)
-      else graft.operators.Cdc.upsert(read(spark, path, Some(head)), updates,
-        key, trackingCol, tieBreak)
+    commitVersion(spark, path) { (head, write) =>
+      def rewrite(state: DataFrame) = single(write(state), state.schema)
+      if (head == 0) rewrite(Cdc.dedupLatestPerKey(updates, key, trackingCol, tieBreak))
+      else {
+        val h = readVersion(spark, path, head)
+        val batch = updates.select(h.schema.fieldNames.toIndexedSeq.map(col): _*)
+        val deltaFits = h.rows.isDefined && h.delta.forall(_.key == key) &&
+          DataType.equalsStructurally(batch.schema, h.schema, ignoreNullability = true)
+        if (!deltaFits)
+          rewrite(Cdc.upsert(scan(spark, path, h), updates, key, trackingCol, tieBreak))
+        else {
+          val (seg, rows) = write(h.delta.fold(
+            Cdc.dedupLatestPerKey(batch, key, trackingCol, tieBreak))(d =>
+            Cdc.upsert(readSegments(spark, path, h.schema, Seq(d.segment)),
+              updates, key, trackingCol, tieBreak)))
+          val next = h.copy(delta = Some(Delta(seg, rows, key)))
+          if (rows < FoldRatio * h.rows.get.sum) next else rewrite(scan(spark, path, next))
+        }
+      }
     }
   }
 
@@ -411,8 +543,8 @@ object Versioned {
     }
   }
 
-  /** Rewrite the head's (possibly many) append segments as ONE
-    * segment committed as the next version — the maintenance pass a
+  /** Rewrite the head's (possibly many) append segments, and its
+    * delta, as ONE segment committed as the next version — the maintenance pass a
     * long-lived append table needs (every commit added a segment;
     * readers of the compacted head scan one). Old versions stay
     * time-travelable until [[vacuum]]. Runs inside the CAS retry loop
@@ -446,7 +578,7 @@ object Versioned {
     val head = currentVersion(spark, path)
     if (head == 0) return 0
     val keepFrom = math.max(1, head - keepVersions + 1)
-    val live = (keepFrom to head).flatMap(readVersion(spark, path, _).segments).toSet
+    val live = (keepFrom to head).flatMap(readVersion(spark, path, _).live).toSet
     val cutoff = System.currentTimeMillis() - retentionMs
     val removed = f.listStatus(new Path(path))
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("d-"))

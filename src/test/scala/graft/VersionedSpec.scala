@@ -373,4 +373,212 @@ class VersionedSpec extends SparkSuite {
       _.filter(col("k") < 0))
     check(wap, published.get, "writeAuditPublish")
   }
+
+  /** A committed manifest, parsed. */
+  private def manifest(dir: String, v: Int) =
+    new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File(dir, f"_versions/v$v%08d.json"))
+
+  private def segmentDirs(dir: String): Set[String] =
+    new java.io.File(dir).listFiles().filter(f => f.isDirectory && f.getName.startsWith("d-"))
+      .map(_.getName).toSet
+
+  private def kv(df: org.apache.spark.sql.DataFrame): Map[Long, String] =
+    df.select("k", "v").collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+
+  /** 40 base rows k = 1..40 with v = "b<k>" at ver 1, bootstrapped by
+    * an upsert, so version 1's base rows are counted. */
+  private def seeded(prefix: String): String = {
+    val dir = tmpDir(prefix) + "/t"
+    Versioned.upsert((1L to 40L).map(k => (k, s"b$k", 1L)).toDF("k", "v", "ver"), dir,
+      Seq("k"), "ver")
+    dir
+  }
+
+  test("upsert writes a delta segment; the next upsert replaces it; a big enough delta folds") {
+    // a committed base has no row counts: the first upsert onto it folds
+    val committed = tmpDir("ver-delta-commit") + "/t"
+    Versioned.commit((1L to 40L).map(k => (k, s"b$k", 1L)).toDF("k", "v", "ver"), committed)
+    assert(manifest(committed, 1).path("rows").isMissingNode)
+    Versioned.upsert(Seq((2L, "u2", 2L)).toDF("k", "v", "ver"), committed, Seq("k"), "ver")
+    assert(manifest(committed, 2).path("delta").isMissingNode)
+    assert(manifest(committed, 2).path("rows").get(0).asLong === 40L)
+    val dir = seeded("ver-delta")
+    def up(rows: (Long, String, Long)*) =
+      Versioned.upsert(rows.toDF("k", "v", "ver"), dir, Seq("k"), "ver")
+    assert(up((2L, "u2", 2L), (41L, "i41", 2L), (2L, "stale", 1L)) === 2)
+    val m2 = manifest(dir, 2)
+    assert(m2.path("segments").size === 1 && m2.path("rows").get(0).asLong === 40L)
+    assert(m2.path("delta").path("rows").asLong === 2L)
+    assert(m2.path("delta").path("key").get(0).asText === "k")
+    assert(kv(Versioned.read(spark, dir)) ===
+      (1L to 40L).map(k => k -> s"b$k").toMap ++ Map(2L -> "u2", 41L -> "i41"))
+    // the second delta merges the first: it carries k = 2 forward
+    assert(up((3L, "u3", 3L), (41L, "i41b", 3L)) === 3)
+    val m3 = manifest(dir, 3)
+    assert(m3.path("segments") === m2.path("segments"))
+    assert(m3.path("delta").path("rows").asLong === 3L)
+    assert(m3.path("delta").path("segment") != m2.path("delta").path("segment"))
+    val expected3 = (1L to 40L).map(k => k -> s"b$k").toMap ++
+      Map(2L -> "u2", 3L -> "u3", 41L -> "i41b")
+    assert(kv(Versioned.read(spark, dir)) === expected3)
+    // 10 delta rows reach a quarter of the 40 base rows: the upsert folds
+    assert(up((10L to 16L).map(k => (k, s"f$k", 4L)): _*) === 4)
+    val m4 = manifest(dir, 4)
+    assert(m4.path("delta").isMissingNode && m4.path("segments").size === 1)
+    assert(m4.path("rows").get(0).asLong === 41L)
+    assert(kv(Versioned.read(spark, dir)) === expected3 ++ (10L to 16L).map(k => k -> s"f$k"))
+    // time travel reads every version's own merge; the folded-away
+    // delta of the fold attempt was deleted, the committed ones stay
+    assert(kv(Versioned.read(spark, dir, Some(2)))(41L) === "i41")
+    assert(kv(Versioned.read(spark, dir, Some(3))) === expected3)
+    assert(segmentDirs(dir).size === 4)
+  }
+
+  test("writeStats and prunedRead on a version with a delta hide the rows the delta replaced") {
+    val dir = tmpDir("ver-delta-prune") + "/t"
+    Versioned.upsert((1L to 40L).map(k => (k, k, 1L)).toDF("k", "x", "ver"), dir,
+      Seq("k"), "ver")
+    // k = 5 moves out of [1, 10]; k = 30 moves in; k = 41 is new
+    val v = Versioned.upsert(Seq((5L, 500L, 2L), (30L, 7L, 2L), (41L, 9L, 2L))
+      .toDF("k", "x", "ver"), dir, Seq("k"), "ver")
+    assert(!manifest(dir, v).path("delta").isMissingNode)
+    assert(Versioned.writeStats(spark, dir, Seq("x")) >= 2)
+    val pruned = Versioned.prunedRead(spark, dir, "x", 1L, 10L)
+      .select("k", "x").as[(Long, Long)].collect().toSet
+    val full = Versioned.read(spark, dir).filter(col("x").between(1L, 10L))
+      .select("k", "x").as[(Long, Long)].collect().toSet
+    assert(pruned === full)
+    assert(pruned === ((1L to 10L).filterNot(_ == 5L).map(k => k -> k) ++
+      Seq(30L -> 7L, 41L -> 9L)).toSet)
+    // a range no file's stats reach still applies the delta: nothing
+    assert(Versioned.prunedRead(spark, dir, "x", 1000L, 2000L).count() === 0)
+  }
+
+  test("restore and shallowClone carry the delta; vacuum keeps the live delta only") {
+    val dir = seeded("ver-delta-rc")
+    val up = (k: Long, v: String, ver: Long) =>
+      Versioned.upsert(Seq((k, v, ver)).toDF("k", "v", "ver"), dir, Seq("k"), "ver")
+    up(1L, "a", 2L)                                              // v2: delta {1}
+    up(2L, "b", 3L)                                              // v3: delta {1, 2}
+    val v3 = kv(Versioned.read(spark, dir))
+    Versioned.commit(Seq((50L, "c", 4L)).toDF("k", "v", "ver"), dir, replace = true) // v4
+    assert(Versioned.restore(spark, dir, toVersion = 3) === 5)
+    assert(manifest(dir, 5).path("delta") === manifest(dir, 3).path("delta"))
+    assert(kv(Versioned.read(spark, dir)) === v3)
+    val clone = tmpDir("ver-delta-clone") + "/t"
+    assert(Versioned.shallowClone(spark, dir, clone) === 1)
+    val cloned = manifest(clone, 1).path("delta").path("segment").asText
+    assert(new org.apache.hadoop.fs.Path(cloned).isAbsolute)
+    assert(kv(Versioned.read(spark, clone)) === v3)
+    assert(segmentDirs(clone).isEmpty)
+    // the clone's own upsert writes its delta under its root
+    Versioned.upsert(Seq((3L, "c3", 5L)).toDF("k", "v", "ver"), clone, Seq("k"), "ver")
+    assert(kv(Versioned.read(spark, clone)) === v3 + (3L -> "c3"))
+    assert(segmentDirs(clone).size === 1)
+    // vacuum: v5's base and delta live on; v2's delta and v4's segment go
+    assert(Versioned.vacuum(spark, dir, keepVersions = 1, retentionMs = 0L) === 2)
+    assert(segmentDirs(dir).size === 2)
+    assert(kv(Versioned.read(spark, dir)) === v3)
+    assert(kv(Versioned.read(spark, clone)) === v3 + (3L -> "c3"))
+  }
+
+  test("changes, compact, mergeInto and an append read a delta head's merged rows") {
+    import graft.operators.Merge.{MatchedUpdate, NotMatchedInsert}
+    val dir = seeded("ver-delta-ops")
+    Versioned.upsert(Seq((1L, "a", 2L), (41L, "n", 2L)).toDF("k", "v", "ver"), dir,
+      Seq("k"), "ver")                                           // v2: delta {1, 41}
+    val feed = Versioned.changes(spark, dir, 1, 2, Seq("k"))
+      .select("k", "change_type", "v").as[(Long, String, String)].collect().toSet
+    assert(feed === Set((1L, "update", "a"), (41L, "insert", "n")))
+    // an appended row sharing a delta key stays visible: the append folds first
+    assert(Versioned.commit(Seq((1L, "dup", 3L)).toDF("k", "v", "ver"), dir) === 3)
+    assert(manifest(dir, 3).path("delta").isMissingNode)
+    assert(manifest(dir, 3).path("segments").size === 2)
+    val appended = Versioned.read(spark, dir).filter(col("k") === 1L)
+      .select("v").as[String].collect().toSet
+    assert(appended === Set("a", "dup"))
+    assert(Versioned.read(spark, dir).count() === 42)
+    // compact folds a delta into one segment
+    val dir2 = seeded("ver-delta-compact")
+    Versioned.upsert(Seq((1L, "a", 2L)).toDF("k", "v", "ver"), dir2, Seq("k"), "ver")
+    val before = kv(Versioned.read(spark, dir2))
+    val c = Versioned.compact(spark, dir2)
+    assert(manifest(dir2, c).path("delta").isMissingNode)
+    assert(manifest(dir2, c).path("segments").size === 1)
+    assert(kv(Versioned.read(spark, dir2)) === before)
+    // mergeInto stays copy-on-write over the merged head
+    Versioned.upsert(Seq((2L, "b", 3L)).toDF("k", "v", "ver"), dir2, Seq("k"), "ver")
+    val m = Versioned.mergeInto(Seq((2L, "B", 4L), (99L, "z", 4L)).toDF("k", "v", "ver"), dir2,
+      Seq("k"), matched = Seq(MatchedUpdate(Map("v" -> col("s.v")))),
+      notMatched = Seq(NotMatchedInsert()))
+    assert(manifest(dir2, m).path("delta").isMissingNode)
+    assert(kv(Versioned.read(spark, dir2)) === before ++ Map(2L -> "B", 99L -> "z"))
+  }
+
+  test("an upsert crashed after its delta write leaves the head as it was; vacuum reclaims it") {
+    val dir = seeded("ver-delta-crash")
+    Versioned.upsert(Seq((1L, "a", 2L)).toDF("k", "v", "ver"), dir, Seq("k"), "ver") // v2
+    val head = kv(Versioned.read(spark, dir))
+    val live = segmentDirs(dir)
+    // the next upsert's delta, landed as the upsert lands it, then no CAS
+    graft.operators.Cdc.upsert(Versioned.read(spark, dir).filter(lit(false)),
+        Seq((1L, "lost", 3L), (7L, "lost", 3L)).toDF("k", "v", "ver"), Seq("k"), "ver")
+      .write.parquet(s"$dir/d-${java.util.UUID.randomUUID()}")
+    assert(Versioned.currentVersion(spark, dir) === 2)
+    assert(kv(Versioned.read(spark, dir)) === head)
+    assert(Versioned.vacuum(spark, dir, keepVersions = 1) === 0) // young: maybe in flight
+    assert(Versioned.vacuum(spark, dir, keepVersions = 1, retentionMs = 0L) === 1)
+    assert(segmentDirs(dir) === live)
+    assert(kv(Versioned.read(spark, dir)) === head)
+  }
+
+  test("two racing upserts both land: the one that loses the CAS re-derives its delta") {
+    val dir = seeded("ver-delta-race")
+    Versioned.upsert(Seq((1L, "a", 2L)).toDF("k", "v", "ver"), dir, Seq("k"), "ver") // v2
+    VersionedRace.reset()
+    // A's delta write blocks until B has committed v3 over the head A read
+    val slow = Seq((2L, "A", 3L), (3L, "A", 3L)).toDF("k", "v", "ver")
+      .withColumn("v", udf((s: String) => VersionedRace.pause(s)).apply(col("v")))
+    val a = new Thread(() => {
+      VersionedRace.result = Versioned.upsert(slow, dir, Seq("k"), "ver")
+    })
+    a.start()
+    assert(VersionedRace.started.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    assert(Versioned.upsert(Seq((3L, "B", 4L), (4L, "B", 4L)).toDF("k", "v", "ver"), dir,
+      Seq("k"), "ver") === 3)
+    VersionedRace.committed.countDown()
+    a.join(120000)
+    assert(VersionedRace.result === 4)
+    // latest-wins by version order: A (committed last) overwrites B's k = 3
+    assert(kv(Versioned.read(spark, dir)) === (1L to 40L).map(k => k -> s"b$k").toMap ++
+      Map(1L -> "a", 2L -> "A", 3L -> "A", 4L -> "B"))
+    // the lost attempt's delta was deleted: base + v2, v3, v4 deltas
+    assert(segmentDirs(dir).size === 4)
+  }
+}
+
+/** Latches for the racing-upsert case; a UDF reaches them by name, not
+  * through a serialized closure. */
+object VersionedRace {
+  @volatile var started = new java.util.concurrent.CountDownLatch(1)
+  @volatile var committed = new java.util.concurrent.CountDownLatch(1)
+  @volatile var result = 0
+  private val first = new java.util.concurrent.atomic.AtomicBoolean(true)
+
+  def reset(): Unit = {
+    started = new java.util.concurrent.CountDownLatch(1)
+    committed = new java.util.concurrent.CountDownLatch(1)
+    result = 0
+    first.set(true)
+  }
+
+  /** Holds the first call until the racing commit has landed. */
+  def pause(s: String): String = {
+    if (first.compareAndSet(true, false)) {
+      started.countDown()
+      committed.await(60, java.util.concurrent.TimeUnit.SECONDS)
+    }
+    s
+  }
 }
