@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
-/** Parallelism guard for compute-heavy per-row operators.
+/** Partition widths and cache ownership for graft's operators.
   *
   * A small parquet file scans as ONE partition, so an operator doing
   * expensive per-row work (shingling, hashing, vector math) after such
@@ -20,6 +20,12 @@ import org.apache.spark.sql.functions.col
   * 4-6 s single-task stage returns). A hash repartition on the
   * grouping/join key is a distribution the planner must preserve —
   * and the downstream aggregation reuses it, saving its own shuffle.
+  *
+  * Iterative operators go the other way: their per-round state is
+  * small and must NOT run at the session width. Each loop takes one
+  * [[LoopState]], which owns the one width rule (partitions from the
+  * input's size, lifted once by the measured cache), the persists at
+  * that width, the keyed repartitions and the eager lineage cut.
   *
   * Cache lifecycle: every persist() issued by graft operators (here
   * and in Dedup/Similarity self-join intermediates) is TRACKED in a
@@ -92,85 +98,107 @@ object Par {
     */
   def release(): Unit = current.get().release()
 
-  /** Scale-adaptive partition count for a SMALL persisted / iterated
-    * state frame (graph node/edge tables, CC label tables, loop
-    * accumulators): ceil(plan leaf input bytes / bytesPerPartition),
-    * at least 1.
+  /** The width and lineage cut of one iterative operator's state —
+    * the one owner every graft loop (the Graph operators,
+    * [[graft.operators.Dedup.connectedComponents]]) builds its state
+    * through, so the width rule below lives in one place.
     *
-    * Why (r15, guide §2): an iterative operator whose per-round state
-    * is a few MB otherwise inherits the session's shuffle width (32
-    * locally) — every round then schedules 32-task stages whose cost
-    * is pure fixed overhead: profiled stacks during graph_pagerank_fixed
-    * showed the executor threads in shuffle-file open/mmap/delete and
-    * MemoryStore SizeEstimator walks, ~8 CPU-s per round for a 5k-node
-    * graph (150k edges), and coalescing the state to its size-derived
-    * width measured 9.5 s → 3.5 s for the identical 10-round loop.
-    *
-    * Scale honesty: the count derives from the INPUT size (plan leaf
-    * bytes — parquet relation sizes, materialized cache sizes), not
-    * from the local core count. At 100 TB leafBytes/64 MB far exceeds
+    * The width rule (r15, guide §2): `p = ceil(plan leaf bytes of
+    * input / 64 MB)`, at least 1. An iterative operator whose per-round
+    * state is a few MB otherwise inherits the session's shuffle width
+    * (32 locally) — every round then schedules 32-task stages whose
+    * cost is pure fixed overhead: profiled stacks during
+    * graph_pagerank_fixed showed the executor threads in shuffle-file
+    * open/mmap/delete and MemoryStore SizeEstimator walks, ~8 CPU-s per
+    * round for a 5k-node graph (150k edges), and coalescing the state
+    * to its size-derived width measured 9.5 s → 3.5 s for the
+    * identical 10-round loop. The width derives from the INPUT size,
+    * not the local core count: at 100 TB leafBytes/64 MB far exceeds
     * any upstream partition count and `coalesce(p)` degenerates to a
-    * no-op, so cluster runs keep their parallelism; only genuinely
-    * tiny state collapses. Unknown-size leaves (checkpointed RDDs)
-    * default to Long.MaxValue in Catalyst and saturate the sum — the
-    * fallback is again the no-op, never an over-collapse.
+    * no-op, so cluster runs keep their parallelism; only genuinely tiny
+    * state collapses. Unknown-size leaves (checkpointed RDDs) default
+    * to Long.MaxValue in Catalyst and saturate the sum — again the
+    * no-op, never an over-collapse.
+    *
+    * The leaf estimate can only UNDERestimate state built through a
+    * join or explode blow-up (r15 ADVICE), so after the loop's first
+    * action [[remeasure]] lifts `p` once to the cached frame's TRUE
+    * materialized bytes. `reliable` picks the lineage cut: a
+    * `localCheckpoint` pins blocks to their executors, so on a cluster
+    * with dynamic allocation / spot nodes one lost executor kills the
+    * run's lineage; there set a fault-tolerant
+    * `sparkContext.setCheckpointDir` and pass `reliable = true` for
+    * `checkpoint()` (same truncation, HDFS-backed blocks).
     */
-  def statePartitions(df: DataFrame, bytesPerPartition: Long = 64L << 20): Int = {
+  final class LoopState(input: DataFrame, reliable: Boolean) {
+    private var p = statePartitions(input)
+    private var measured = false
+    // frames persist coalesced to the leaf estimate: only these can
+    // need a re-cache once the width is measured
+    private var narrowed = List.empty[DataFrame]
+
+    /** The width keyed loops repartition their state to, fixed at the
+      * leaf estimate and bounded by the session shuffle width: a keyed
+      * repartition never needs more than any other shuffle gets. A
+      * non-integer conf falls back to defaultParallelism.
+      */
+    private val keyWidth: Int = {
+      val spark = input.sparkSession
+      val sessionWidth = spark.conf.getOption("spark.sql.shuffle.partitions")
+        .flatMap(v => scala.util.Try(v.toInt).toOption)
+        .getOrElse(spark.sparkContext.defaultParallelism)
+      math.max(1, math.min(p, sessionWidth))
+    }
+
+    def width: Int = p
+
+    /** `df` coalesced to the loop width and persisted. */
+    def persist(df: DataFrame): DataFrame = {
+      val c = persistTracked(df.coalesce(p))
+      narrowed ::= c
+      c
+    }
+
+    /** `df` hash-partitioned on `keys` at [[keyWidth]]. */
+    def keyed(df: DataFrame, keys: String*): DataFrame =
+      df.repartition(keyWidth, keys.map(col): _*)
+
+    /** An eager lineage cut at the loop width. */
+    def truncate(df: DataFrame): DataFrame =
+      if (reliable) df.coalesce(p).checkpoint(eager = true)
+      else df.coalesce(p).localCheckpoint(eager = true)
+
+    /** The single re-measure; only the first call acts, and only after
+      * an action has materialized `cached`: `p = max(p, measured
+      * partitions of cached)`. When [[persist]] coalesced `cached` to
+      * the old width and it measures wider, returns a re-cache at the
+      * lifted width — the one-time reshuffle beats a whole loop of
+      * single-task rounds over a collapsed cache; otherwise `cached`.
+      */
+    def remeasure(cached: DataFrame): DataFrame =
+      if (measured) cached
+      else {
+        measured = true
+        val m = statePartitions(cached)
+        if (m <= p) cached
+        else {
+          p = m
+          if (narrowed.exists(_ eq cached)) persistTracked(cached.repartition(m)) else cached
+        }
+      }
+  }
+
+  /** ceil(plan leaf input bytes / 64 MB), at least 1 — the width rule
+    * of [[LoopState]]. On a materialized cache the leaf is the
+    * InMemoryRelation, whose stats carry the cached size.
+    */
+  private def statePartitions(df: DataFrame): Int = {
+    val bytesPerPartition = 64L << 20
     val leafBytes = df.queryExecution.optimizedPlan.collectLeaves()
       .map(_.stats.sizeInBytes)
       .foldLeft(BigInt(0))(_ + _)
     val p = (leafBytes + bytesPerPartition - 1) / bytesPerPartition
     if (p > Int.MaxValue) Int.MaxValue else math.max(1, p.toInt)
-  }
-
-  /** Loop-state width bounded by the session shuffle width: the keyed
-    * repartitions inside iterative operators never need to exceed the
-    * width the session would give any other shuffle. Shared helper for
-    * the block previously duplicated across Graph.labelPropagation /
-    * bfsDistance / ssspWeighted (r15 ADVICE); the conf parse is
-    * guarded — a non-integer value falls back to defaultParallelism
-    * instead of throwing NumberFormatException mid-query.
-    */
-  def stateWidth(df: DataFrame): Int = {
-    val spark = df.sparkSession
-    val sessionWidth = spark.conf.getOption("spark.sql.shuffle.partitions")
-      .flatMap(v => scala.util.Try(v.toInt).toOption)
-      .getOrElse(spark.sparkContext.defaultParallelism)
-    math.max(1, math.min(statePartitions(df), sessionWidth))
-  }
-
-  /** Corrected loop-state width AFTER the state has materialized in
-    * the cache (r15 ADVICE, medium): [[statePartitions]] estimates
-    * from plan LEAF bytes, but state built through join/explode
-    * blow-up can be orders bigger than its leaves — the leaf estimate
-    * would collapse every round to one task (a cliff and an OOM risk
-    * at mid scale). Once the persisted frame's first action has run,
-    * its InMemoryRelation stats carry the TRUE cached size, so this
-    * returns max(leaf estimate, materialized estimate): locally (tiny
-    * state) both are 1 and nothing changes; when the leaf estimate was
-    * wrong the floor lifts the width to what the data actually needs.
-    * Call only after an action has materialized `cached`.
-    */
-  def measuredStatePartitions(cached: DataFrame, leafEstimate: Int,
-                              bytesPerPartition: Long = 64L << 20): Int =
-    math.max(leafEstimate, statePartitions(cached, bytesPerPartition))
-
-  /** Post-materialization cache-width correction (r15 ADVICE): when
-    * the MEASURED cached bytes of an iterated-state frame need more
-    * partitions than the leaf estimate it was coalesced to (state
-    * built via join/explode blow-up), return a re-cached copy at the
-    * measured width plus that width — the one-time reshuffle beats a
-    * whole loop of single-task rounds over a collapsed cache. On an
-    * accurate estimate (the normal case, and always at test SFs)
-    * returns the frame and estimate unchanged: zero extra work.
-    * Call only after an action has materialized `cached`.
-    */
-  def correctedStateCache(cached: DataFrame, leafEstimate: Int,
-                          bytesPerPartition: Long = 64L << 20)
-      : (DataFrame, Int) = {
-    val measured = statePartitions(cached, bytesPerPartition)
-    if (measured <= leafEstimate) (cached, leafEstimate)
-    else (persistTracked(cached.repartition(measured)), measured)
   }
 
   def widen(df: DataFrame, keys: String*): DataFrame = {

@@ -48,22 +48,27 @@ object Cdc {
     * `_perform_incremental_load_special`).
     *
     * Plan shape: one left-anti join (hash-partitioned on key) + union.
-    * No broadcast assumption — at scale both sides are large.
+    * No broadcast assumption — at scale both sides are large. The
+    * anti-join takes its keys from the batch itself, not from the
+    * deduplicated rows (the same key set): otherwise column pruning
+    * gives the key branch a latest-per-key window and shuffle of its
+    * own, one more job per upsert.
     */
   def upsert(target: DataFrame, updates: DataFrame, key: Seq[String],
              trackingCol: String, tieBreak: Seq[String] = Nil): DataFrame = {
-    val fresh = dedupLatestPerKey(updates.select(target.columns.toSeq.map(col): _*),
-      key, trackingCol, tieBreak)
-    replaceKeys(target, fresh, key)
+    val batch = updates.select(target.columns.toSeq.map(col): _*)
+    replaceKeys(target, dedupLatestPerKey(batch, key, trackingCol, tieBreak), key, batch)
   }
 
   /** The delete+insert step of [[upsert]]: rows of `target` whose key
-    * is not in `latest`, plus all of `latest`, which already holds one
-    * row per key. [[graft.sources.Versioned]] reads a version with a
-    * delta segment as `replaceKeys(base, delta)`.
+    * is not among `keys`' keys, plus all of `latest`, which already
+    * holds one row per key and has the same key set as `keys`.
+    * [[graft.sources.Versioned]] reads a version with a delta segment
+    * as `replaceKeys(base, delta, key, delta)`.
     */
-  private[graft] def replaceKeys(target: DataFrame, latest: DataFrame, key: Seq[String]): DataFrame =
-    target.join(latest.select(key.map(col): _*), key, "left_anti").unionByName(latest)
+  private[graft] def replaceKeys(target: DataFrame, latest: DataFrame, key: Seq[String],
+                                 keys: DataFrame): DataFrame =
+    target.join(keys.select(key.map(col): _*), key, "left_anti").unionByName(latest)
 
   /** Keep the newest row per key (highest trackingCol; `tieBreak`
     * columns make the winner total-ordered and deterministic).

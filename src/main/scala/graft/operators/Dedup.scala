@@ -1164,30 +1164,14 @@ object Dedup {
   def connectedComponents(pairs: DataFrame, idA: String = "id_a",
                           idB: String = "id_b", maxIter: Int = 20,
                           reliable: Boolean = false): DataFrame = {
-    // size-adaptive state width (r15, guide §2): label/edge state of a
-    // small pair graph collapses to its size-derived width — per-round
-    // session-wide stages were pure shuffle-file + SizeEstimator
-    // overhead (see Par.statePartitions); a no-op at cluster scale
-    var p = Par.statePartitions(pairs)
-    def truncate(df: DataFrame): DataFrame =
-      if (reliable) df.coalesce(p).checkpoint(eager = true)
-      else df.coalesce(p).localCheckpoint(eager = true)
+    // label/edge state at the size-derived loop width (Par.LoopState)
+    val loop = new Par.LoopState(pairs, reliable)
     // the edge cache persists at its natural width (no pre-coalesce:
     // a leaf underestimate must never squeeze a blown-up pair graph
-    // into one cached block — r15 ADVICE); reads coalesce to p, a
-    // narrow dependency over the cached blocks.
-    // Both directions come from ONE explode pass (r16, guide §1.2):
-    // the former two-select union EVALUATED `pairs` twice — for the
-    // near-dup generators feeding this (PPJoin rescore, levenshtein
-    // comparator) that doubled the whole scoring pass (profiled: a
-    // 64-task union map stage carrying 2× the comparator CPU).
-    val edges0 = Par.persistTracked(
-      pairs.select(explode(array(
-          struct(col(idA).as("src"), col(idB).as("dst")),
-          struct(col(idB).as("src"), col(idA).as("dst")))).as("__e"))
-        .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
-        .distinct())
-    def edges = edges0.coalesce(p)
+    // into one cached block — r15 ADVICE); reads coalesce to the loop
+    // width, a narrow dependency over the cached blocks
+    val edges0 = Par.persistTracked(Graph.bothDirections(pairs, idA, idB).distinct())
+    def edges = edges0.coalesce(loop.width)
     // seed with ROUND 1 fused into initialization: label₀(x) =
     // min(x, min over x's neighbors) is exactly what one propagation
     // round over self-labels produces, and it's a single map-side-
@@ -1197,7 +1181,7 @@ object Dedup {
     // converged by definition (a pair generator can legitimately emit
     // zero pairs — e.g. a quiet daily delta).
     val obs0 = org.apache.spark.sql.Observation()
-    var labels = truncate(edges.groupBy(col("src").as("id"))
+    var labels = loop.truncate(edges.groupBy(col("src").as("id"))
       .agg(min(col("dst")).as("__m"))
       .select(col("id"), least(col("id"), col("__m")).as("comp"),
         (least(col("id"), col("__m")) < col("id")).as("__chg"))
@@ -1209,10 +1193,8 @@ object Dedup {
       case null => 0L
       case n: Number => n.longValue()
     }) == 0L
-    // the seed action materialized the edge cache: floor the loop
-    // width from its TRUE cached bytes — the leaf estimate can only
-    // underestimate a pair graph built via join blow-up (r15 ADVICE)
-    p = Par.measuredStatePartitions(edges0, p)
+    // the seed action materialized the edge cache
+    loop.remeasure(edges0)
     while (!converged && it < maxIter) {
       // contributions from CHANGED nodes only, min-combined per target
       // (map-side partial agg; shuffle size = frontier's edge fan-out)
@@ -1224,7 +1206,7 @@ object Dedup {
       // changed-count rides the SAME materialization as an observed
       // metric — zero extra jobs per round.
       val obs = org.apache.spark.sql.Observation()
-      val next = truncate(
+      val next = loop.truncate(
         labels.join(contrib.select(col("src").as("id"), col("__newc")),
             Seq("id"), "left")
           .select(col("id"),

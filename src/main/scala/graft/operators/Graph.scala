@@ -7,6 +7,18 @@ import org.apache.spark.sql.functions._
   * graphs this engine already produces (near-dup pair sets, market-
   * basket pairs, audience overlaps) invite exactly these questions:
   * how clustered is the graph, and which nodes sit in dense cliques.
+  *
+  * The iterative operators share one skeleton. Every loop keeps its
+  * state through one [[graft.Par.LoopState]] (the size-derived width,
+  * re-measured once after the first action, and the `reliable`
+  * lineage cut), and the undirected ones build their edges with one
+  * [[bothDirections]] explode. The four PageRanks are one
+  * [[powerIteration]], each supplying only its node frame, initial
+  * rank, contribution aggregate and next rank; [[bfsDistance]] and
+  * [[ssspWeighted]] are one [[relax]], stepping `+ 1` or `+ w`.
+  * [[kCore]], [[hitsFixedPoint]] and [[labelPropagation]] keep their
+  * own round bodies. [[triangleStats]] and [[localClustering]] share
+  * one degree-oriented wedge frame.
   */
 object Graph {
 
@@ -37,29 +49,10 @@ object Graph {
     * the same degree frame, Σ d·(d−1)/2).
     */
   def triangleStats(edges: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val e = graft.Par.persistTracked(canon(edges, aCol, bCol))
-    val deg = e.select(col("a").as("n")).unionByName(e.select(col("b").as("n")))
-      .groupBy(col("n")).agg(count(lit(1)).as("d"))
-    // orient by (degree, id): lower (d, id) endpoint → higher
-    val withDeg = e
-      .join(deg.select(col("n").as("a"), col("d").as("da")), Seq("a"))
-      .join(deg.select(col("n").as("b"), col("d").as("db")), Seq("b"))
-    val oriented = graft.Par.persistTracked(withDeg.select(
-      when(col("da") < col("db") ||
-        (col("da") === col("db") && col("a") < col("b")), col("a"))
-        .otherwise(col("b")).as("u"),
-      when(col("da") < col("db") ||
-        (col("da") === col("db") && col("a") < col("b")), col("b"))
-        .otherwise(col("a")).as("v")))
-    // wedges from shared out-source u: (v, w) with v < w — each
-    // candidate closing edge queried once in canonical order
-    val wedges = oriented.select(col("u"), col("v").as("x"))
-      .join(oriented.select(col("u"), col("v").as("y")), Seq("u"))
-      .filter(col("x") < col("y"))
-      .select(col("x"), col("y"))
+    val (e, deg, wedges) = orientedWedges(edges, aCol, bCol, "d")
     // close against the undirected canonical edge set (orientation of
     // the closing edge is irrelevant — e is canonical a<b = x<y)
-    val tri = wedges.join(e,
+    val tri = wedges.select(col("x"), col("y")).join(e,
         col("x") === col("a") && col("y") === col("b"), "left_semi")
       .count()
     val stats = deg.agg(count(lit(1)).as("n_nodes"),
@@ -88,22 +81,7 @@ object Graph {
     */
   def localClustering(edges: DataFrame, aCol: String,
                       bCol: String): DataFrame = {
-    val e = graft.Par.persistTracked(canon(edges, aCol, bCol))
-    val deg = e.select(col("a").as("n")).unionByName(e.select(col("b").as("n")))
-      .groupBy(col("n")).agg(count(lit(1)).as("degree"))
-    val withDeg = e
-      .join(deg.select(col("n").as("a"), col("degree").as("da")), Seq("a"))
-      .join(deg.select(col("n").as("b"), col("degree").as("db")), Seq("b"))
-    val oriented = graft.Par.persistTracked(withDeg.select(
-      when(col("da") < col("db") ||
-        (col("da") === col("db") && col("a") < col("b")), col("a"))
-        .otherwise(col("b")).as("u"),
-      when(col("da") < col("db") ||
-        (col("da") === col("db") && col("a") < col("b")), col("b"))
-        .otherwise(col("a")).as("v")))
-    val wedges = oriented.select(col("u"), col("v").as("x"))
-      .join(oriented.select(col("u"), col("v").as("y")), Seq("u"))
-      .filter(col("x") < col("y"))
+    val (e, deg, wedges) = orientedWedges(edges, aCol, bCol, "degree")
     // inner close (not semi): the triple itself is needed to credit
     // all three corners
     val tris = wedges.join(e,
@@ -120,6 +98,31 @@ object Graph {
           .as("lcc"))
   }
 
+  /** The degree-oriented wedges [[triangleStats]] and
+    * [[localClustering]] share: the canonical edges (a, b), persisted;
+    * the degree frame (n, `d`); and the wedges (u, x, y), x < y, of
+    * each oriented out-source u — every edge oriented from its lower
+    * to its higher endpoint under the (degree, id) order, so each
+    * candidate closing edge (x, y) is queried once, canonically.
+    */
+  private def orientedWedges(edges: DataFrame, aCol: String, bCol: String,
+                             d: String): (DataFrame, DataFrame, DataFrame) = {
+    val e = graft.Par.persistTracked(canon(edges, aCol, bCol))
+    val deg = e.select(col("a").as("n")).unionByName(e.select(col("b").as("n")))
+      .groupBy(col("n")).agg(count(lit(1)).as(d))
+    val withDeg = e
+      .join(deg.select(col("n").as("a"), col(d).as("da")), Seq("a"))
+      .join(deg.select(col("n").as("b"), col(d).as("db")), Seq("b"))
+    val low = col("da") < col("db") || (col("da") === col("db") && col("a") < col("b"))
+    val oriented = graft.Par.persistTracked(withDeg.select(
+      when(low, col("a")).otherwise(col("b")).as("u"),
+      when(low, col("b")).otherwise(col("a")).as("v")))
+    val wedges = oriented.select(col("u"), col("v").as("x"))
+      .join(oriented.select(col("u"), col("v").as("y")), Seq("u"))
+      .filter(col("x") < col("y"))
+    (e, deg, wedges)
+  }
+
   /** PageRank over an undirected edge list (r8-w4) — "which parts /
     * documents / users sit at the center of the co-occurrence graph":
     * the damped power iteration r′(v) = (1−d)/N + d·Σ_{u→v} r(u)/deg(u)
@@ -127,22 +130,11 @@ object Graph {
     * d=0.85 on connected graphs; a fixed count keeps the job graph
     * static and the cost predictable — the batch-pipeline contract,
     * vs convergence-tested loops whose round count is data-dependent).
-    *
-    * Each round is ONE join (ranks to edge sources — both sides
-    * hash-partition on the node key, and AQE reuses the exchange
-    * round to round) + one sum on the destination key + a left join
-    * back to the node set so isolated-degree-0 nodes keep their
-    * (1−d)/N floor. Undirected edges are exploded to both directions,
-    * so every node with an edge has out-degree ≥ 1 — no dangling-mass
-    * term. Lineage is cut every 3 rounds (the connectedComponents
-    * discipline: 10 chained joins otherwise grow an exponential
-    * plan) — `localCheckpoint` by default, which pins blocks to their
-    * executors; on a cluster with dynamic allocation / spot nodes one
-    * lost executor kills the run's lineage, so there set a
-    * fault-tolerant `sparkContext.setCheckpointDir` and pass
-    * `reliable=true` to use `checkpoint()` instead (same truncation,
-    * HDFS-backed blocks) — mirrors [[Dedup.connectedComponents]]'s
-    * flag.
+    * One of the four variants of [[powerIteration]]; undirected edges
+    * are exploded to both directions, so every node with an edge has
+    * out-degree ≥ 1 — no dangling-mass term. `reliable` picks the
+    * cluster-durable lineage cut ([[graft.Par.LoopState]]), mirroring
+    * [[Dedup.connectedComponents]]'s flag.
     *
     * Float caveat, stated: per-node sums add in partition order, so
     * ranks are deterministic only up to double rounding — the graded
@@ -152,53 +144,14 @@ object Graph {
     */
   def pageRank(edges: DataFrame, aCol: String, bCol: String,
                iterations: Int = 10, damping: Double = 0.85,
-               reliable: Boolean = false): DataFrame = {
-    require(iterations >= 1 && iterations <= 100, "iterations in [1, 100]")
-    val e = canon(edges, aCol, bCol)
-    // size-adaptive state width (r15, guide §2): tiny graphs collapse
-    // to few partitions (per-round 32-task stages were pure shuffle-
-    // file open/mmap + SizeEstimator overhead, profiled ~8 CPU-s per
-    // round on a 5k-node graph — see Par.statePartitions); at scale
-    // the coalesce degenerates to a no-op and nothing changes
-    var p = graft.Par.statePartitions(e)
-    def truncate(df: DataFrame): DataFrame =
-      if (reliable) df.coalesce(p).checkpoint(eager = true)
-      else df.coalesce(p).localCheckpoint(eager = true)
-    // both edge directions from ONE explode pass (r16, guide §1.2:
-    // the former two-select union evaluated the canon subtree twice)
-    val directed0 = graft.Par.persistTracked(
-      e.select(explode(array(
-          struct(col("a").as("src"), col("b").as("dst")),
-          struct(col("b").as("src"), col("a").as("dst")))).as("__e"))
-        .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
-        .coalesce(p))
-    val deg = directed0.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val nodes = graft.Par.persistTracked(
-      deg.select(col("src").as("node"), col("deg")).coalesce(p))
-    val n = nodes.count()
-    require(n > 0, "pageRank needs at least one edge")
-    // the count materialized both caches: when the TRUE cached bytes
-    // outgrow the leaf estimate (join/explode-built state), re-cache
-    // at the measured width and lift the loop width — never iterate a
-    // collapsed cache (r15 ADVICE); a no-op on accurate estimates
-    val (directed, p2) = graft.Par.correctedStateCache(directed0, p)
-    p = p2
-    val base = (1.0 - damping) / n
-    var ranks = nodes.select(col("node"), lit(1.0 / n).as("rank"))
-    for (i <- 1 to iterations) {
-      val contrib = directed
-        .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
-        .join(nodes.select(col("node").as("src"), col("deg")), Seq("src"))
-        .groupBy(col("dst").as("node"))
-        .agg(sum(col("rank") / col("deg")).as("__c"))
-      ranks = nodes.select(col("node"))
-        .join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          (lit(base) + lit(damping) * coalesce(col("__c"), lit(0.0))).as("rank"))
-      if (i % 3 == 0 && i < iterations) ranks = truncate(ranks)
+               reliable: Boolean = false): DataFrame =
+    powerIteration(canon(edges, aCol, bCol), iterations, reliable, "rank", "deg")(
+        degreeNodes) { nodes =>
+      val n = nodes.count()
+      require(n > 0, "pageRank needs at least one edge")
+      Ranking(lit(1.0 / n), sum(col("rank") / col("deg")),
+        lit((1.0 - damping) / n) + lit(damping) * coalesce(col("__c"), lit(0.0)))
     }
-    ranks
-  }
 
   /** Fixed-point-arithmetic PageRank twin of [[pageRank]] (r9): ranks
     * held as LONG micro-units (scale 1e12), contributions as integer
@@ -216,54 +169,16 @@ object Graph {
     * intermediate `85 * sum` is ≤ 8.5e13 ≪ 2^63 — no overflow at any
     * graph size whose node count fits a long. Precision is 1e-12 of
     * total mass, far below any ranking-relevant difference.
-    *
-    * Plan shape is identical to [[pageRank]]: per round one keyed
-    * join (ranks→edge sources, AQE reuses the exchange), one
-    * dst-keyed long sum, one left join back to the node set; lineage
-    * truncated every 3 rounds with the same `reliable` option.
     */
   def pageRankFixedPoint(edges: DataFrame, aCol: String, bCol: String,
                          iterations: Int = 10,
-                         reliable: Boolean = false): DataFrame = {
-    require(iterations >= 1 && iterations <= 100, "iterations in [1, 100]")
-    val Scale = 1000000000000L
-    val e = canon(edges, aCol, bCol)
-    // size-adaptive state width (r15) — see [[pageRank]]; one-explode
-    // edge build + measured-width cache correction after the count
-    var p = graft.Par.statePartitions(e)
-    def truncate(df: DataFrame): DataFrame =
-      if (reliable) df.coalesce(p).checkpoint(eager = true)
-      else df.coalesce(p).localCheckpoint(eager = true)
-    val directed0 = graft.Par.persistTracked(
-      e.select(explode(array(
-          struct(col("a").as("src"), col("b").as("dst")),
-          struct(col("b").as("src"), col("a").as("dst")))).as("__e"))
-        .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
-        .coalesce(p))
-    val deg = directed0.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val nodes = graft.Par.persistTracked(
-      deg.select(col("src").as("node"), col("deg")).coalesce(p))
-    val n = nodes.count()
-    require(n > 0, "pageRankFixedPoint needs at least one edge")
-    val (directed, p2) = graft.Par.correctedStateCache(directed0, p)
-    p = p2
-    val base = 15L * Scale / 100L / n
-    var ranks = nodes.select(col("node"), lit(Scale / n).as("rank_fp"))
-    for (i <- 1 to iterations) {
-      val contrib = directed
-        .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
-        .join(nodes.select(col("node").as("src"), col("deg")), Seq("src"))
-        .groupBy(col("dst").as("node"))
-        .agg(sum(expr("rank_fp div deg")).as("__c"))
-      ranks = nodes.select(col("node"))
-        .join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          (lit(base) + expr("(85 * coalesce(__c, CAST(0 AS BIGINT))) div 100"))
-            .as("rank_fp"))
-      if (i % 3 == 0 && i < iterations) ranks = truncate(ranks)
+                         reliable: Boolean = false): DataFrame =
+    powerIteration(canon(edges, aCol, bCol), iterations, reliable, "rank_fp", "deg")(
+        degreeNodes) { nodes =>
+      val n = nodes.count()
+      require(n > 0, "pageRankFixedPoint needs at least one edge")
+      Ranking(lit(RankScale / n), sum(expr("rank_fp div deg")), lit(15L * RankScale / 100L / n) + damped)
     }
-    ranks
-  }
 
   /** WEIGHTED fixed-point PageRank (r9-cont): contributions split
     * proportionally to integer edge weights — r·w div W(u) with
@@ -272,57 +187,26 @@ object Graph {
     * shared orders: a pair bought together 50 times should pull
     * more rank than a one-off. Same exact-integer portability as
     * [[pageRankFixedPoint]] (the intermediate r·w needs
-    * w < 2^63/scale ≈ 9.2e6 — any realistic co-occurrence count),
-    * same per-round plan shape, same graded hash-green contract.
-    * Duplicate / reversed input pairs are canonicalized by SUMMING
-    * their weights.
+    * w < 2^63/scale ≈ 9.2e6 — any realistic co-occurrence count) and
+    * graded hash-green contract. Duplicate / reversed input pairs are
+    * canonicalized by SUMMING their weights.
     */
   def pageRankFixedPointWeighted(edges: DataFrame, aCol: String, bCol: String,
                                  weightCol: String, iterations: Int = 10,
                                  reliable: Boolean = false): DataFrame = {
-    require(iterations >= 1 && iterations <= 100, "iterations in [1, 100]")
-    val Scale = 1000000000000L
     val e = edges.select(least(col(aCol), col(bCol)).as("a"),
         greatest(col(aCol), col(bCol)).as("b"),
         col(weightCol).cast("long").as("w"))
       .filter(col("a") < col("b") && col("w") > 0)
       .groupBy(col("a"), col("b")).agg(sum(col("w")).as("w"))
-    // size-adaptive state width (r15) — see [[pageRank]]; one-explode
-    // edge build + measured-width cache correction after the count
-    var p = graft.Par.statePartitions(e)
-    def truncate(df: DataFrame): DataFrame =
-      if (reliable) df.coalesce(p).checkpoint(eager = true)
-      else df.coalesce(p).localCheckpoint(eager = true)
-    val directed0 = graft.Par.persistTracked(
-      e.select(explode(array(
-          struct(col("a").as("src"), col("b").as("dst"), col("w")),
-          struct(col("b").as("src"), col("a").as("dst"), col("w")))).as("__e"))
-        .select(col("__e.src").as("src"), col("__e.dst").as("dst"),
-          col("__e.w").as("w"))
-        .coalesce(p))
-    val tw = directed0.groupBy(col("src")).agg(sum(col("w")).as("tw"))
-    val nodes = graft.Par.persistTracked(
-      tw.select(col("src").as("node"), col("tw")).coalesce(p))
-    val n = nodes.count()
-    require(n > 0, "pageRankFixedPointWeighted needs at least one edge")
-    val (directed, p2) = graft.Par.correctedStateCache(directed0, p)
-    p = p2
-    val base = 15L * Scale / 100L / n
-    var ranks = nodes.select(col("node"), lit(Scale / n).as("rank_fp"))
-    for (i <- 1 to iterations) {
-      val contrib = directed
-        .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
-        .join(nodes.select(col("node").as("src"), col("tw")), Seq("src"))
-        .groupBy(col("dst").as("node"))
-        .agg(sum(expr("(rank_fp * w) div tw")).as("__c"))
-      ranks = nodes.select(col("node"))
-        .join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          (lit(base) + expr("(85 * coalesce(__c, CAST(0 AS BIGINT))) div 100"))
-            .as("rank_fp"))
-      if (i % 3 == 0 && i < iterations) ranks = truncate(ranks)
+    powerIteration(e, iterations, reliable, "rank_fp", "tw", "w")(
+        _.groupBy(col("src")).agg(sum(col("w")).as("tw"))
+          .select(col("src").as("node"), col("tw"))) { nodes =>
+      val n = nodes.count()
+      require(n > 0, "pageRankFixedPointWeighted needs at least one edge")
+      Ranking(lit(RankScale / n), sum(expr("(rank_fp * w) div tw")),
+        lit(15L * RankScale / 100L / n) + damped)
     }
-    ranks
   }
 
   /** PERSONALIZED fixed-point PageRank (r9-cont): the teleport mass
@@ -330,60 +214,99 @@ object Graph {
     * relative to THESE nodes", the related-items primitive (random
     * walk with restart). Seeds get base = (15%·scale div |seeds|)
     * each round and the initial mass; non-seeds start at 0 and only
-    * accumulate propagated rank. Same exact-integer portability and
-    * per-round plan shape as [[pageRankFixedPoint]]; the seed set is
-    * a (small) DataFrame joined once into the node frame — never a
-    * driver collect of the graph.
+    * accumulate propagated rank. Same exact-integer portability as
+    * [[pageRankFixedPoint]]; the seed set is a (small) DataFrame
+    * joined once into the node frame — never a driver collect of the
+    * graph.
     */
   def personalizedPageRankFixedPoint(edges: DataFrame, aCol: String, bCol: String,
                                      seeds: DataFrame, seedCol: String,
                                      iterations: Int = 10,
                                      reliable: Boolean = false): DataFrame = {
-    require(iterations >= 1 && iterations <= 100, "iterations in [1, 100]")
-    val Scale = 1000000000000L
-    val e = canon(edges, aCol, bCol)
-    // size-adaptive state width (r15) — see [[pageRank]]; one-explode
-    // edge build + measured-width cache correction after the count
-    var p = graft.Par.statePartitions(e)
-    def truncate(df: DataFrame): DataFrame =
-      if (reliable) df.coalesce(p).checkpoint(eager = true)
-      else df.coalesce(p).localCheckpoint(eager = true)
-    val directed0 = graft.Par.persistTracked(
-      e.select(explode(array(
-          struct(col("a").as("src"), col("b").as("dst")),
-          struct(col("b").as("src"), col("a").as("dst")))).as("__e"))
-        .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
-        .coalesce(p))
-    val deg = directed0.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val seedSet = seeds.select(col(seedCol).as("node")).distinct()
-    val nodes = graft.Par.persistTracked(
-      deg.select(col("src").as("node"), col("deg"))
-        .join(seedSet.withColumn("__is_seed", lit(true)), Seq("node"), "left")
-        .withColumn("__is_seed", coalesce(col("__is_seed"), lit(false)))
-        .coalesce(p))
-    val nSeeds = nodes.filter(col("__is_seed")).count()
-    require(nSeeds > 0, "no seed is a node of the graph")
-    val (directed, p2) = graft.Par.correctedStateCache(directed0, p)
-    p = p2
-    val base = 15L * Scale / 100L / nSeeds
-    var ranks = nodes.select(col("node"),
-      when(col("__is_seed"), lit(Scale / nSeeds)).otherwise(lit(0L))
-        .as("rank_fp"))
+    powerIteration(canon(edges, aCol, bCol), iterations, reliable, "rank_fp", "deg")(
+        degreeNodes(_)
+          .join(seedSet.withColumn("__is_seed", lit(true)), Seq("node"), "left")
+          .withColumn("__is_seed", coalesce(col("__is_seed"), lit(false)))) { nodes =>
+      val nSeeds = nodes.filter(col("__is_seed")).count()
+      require(nSeeds > 0, "no seed is a node of the graph")
+      Ranking(when(col("__is_seed"), lit(RankScale / nSeeds)).otherwise(lit(0L)),
+        sum(expr("rank_fp div deg")),
+        when(col("__is_seed"), lit(15L * RankScale / 100L / nSeeds)).otherwise(lit(0L)) + damped)
+    }
+  }
+
+  /** Fixed-point rank scale: 1e12 µ-units of total mass. */
+  private val RankScale = 1000000000000L
+
+  /** The fixed-point damping step, 85/100 of the summed contribution. */
+  private def damped: Column = expr("(85 * coalesce(__c, CAST(0 AS BIGINT))) div 100")
+
+  /** (node, deg) from the both-directions edge frame. */
+  private def degreeNodes(directed: DataFrame): DataFrame =
+    directed.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+      .select(col("src").as("node"), col("deg"))
+
+  /** What a PageRank variant supplies to [[powerIteration]] once its
+    * node frame is counted: the initial rank, the per-destination
+    * contribution aggregate, and the next rank from the summed
+    * contribution `__c`.
+    */
+  private final case class Ranking(init: Column, contrib: Column, next: Column)
+
+  /** The power iteration the four PageRanks share. Each round is ONE
+    * join (ranks to edge sources — both sides hash-partition on the
+    * node key, and AQE reuses the exchange round to round) + one sum on
+    * the destination key + a left join back to the node set, so nodes
+    * no contribution reaches keep their teleport floor. Lineage is cut
+    * every 3 rounds (10 chained joins otherwise grow an exponential
+    * plan). The edge and node frames persist at the loop width
+    * (r15, [[graft.Par.LoopState]]); counting the nodes materializes
+    * both, so the width is re-measured right after.
+    *
+    * `e` holds canonical (a, b) edges plus the `carry` columns;
+    * `nodeFrame` builds (node, `norm`, …) from the both-directions
+    * edges; `start` counts the persisted node frame and returns the
+    * variant's [[Ranking]], whose rank column is `rankCol`.
+    */
+  private def powerIteration(e: DataFrame, iterations: Int, reliable: Boolean,
+                             rankCol: String, norm: String, carry: String*)(
+      nodeFrame: DataFrame => DataFrame)(start: DataFrame => Ranking): DataFrame = {
+    require(iterations >= 1 && iterations <= 100, "iterations in [1, 100]")
+    val loop = new graft.Par.LoopState(e, reliable)
+    val directed0 = loop.persist(bothDirections(e, "a", "b", carry: _*))
+    val nodes = loop.persist(nodeFrame(directed0))
+    val r = start(nodes)
+    val directed = loop.remeasure(directed0)
+    var ranks = nodes.select(col("node"), r.init.as(rankCol))
     for (i <- 1 to iterations) {
       val contrib = directed
         .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
-        .join(nodes.select(col("node").as("src"), col("deg")), Seq("src"))
+        .join(nodes.select(col("node").as("src"), col(norm)), Seq("src"))
         .groupBy(col("dst").as("node"))
-        .agg(sum(expr("rank_fp div deg")).as("__c"))
-      ranks = nodes.select(col("node"), col("__is_seed"))
+        .agg(r.contrib.as("__c"))
+      ranks = nodes.drop(norm)
         .join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          (when(col("__is_seed"), lit(base)).otherwise(lit(0L)) +
-            expr("(85 * coalesce(__c, CAST(0 AS BIGINT))) div 100"))
-            .as("rank_fp"))
-      if (i % 3 == 0 && i < iterations) ranks = truncate(ranks)
+        .select(col("node"), r.next.as(rankCol))
+      if (i % 3 == 0 && i < iterations) ranks = loop.truncate(ranks)
     }
     ranks
+  }
+
+  /** Both directions of every undirected edge (a, b) as (src, dst),
+    * with the `carry` columns, from ONE explode pass (r16, guide §1.2:
+    * a two-select union evaluates the edge subtree twice — for the
+    * near-dup pair generators feeding [[Dedup.connectedComponents]]
+    * that doubled the whole scoring pass).
+    */
+  private[operators] def bothDirections(e: DataFrame, a: String, b: String,
+                                        carry: String*): DataFrame = {
+    val rest = carry.map(col)
+    e.select(explode(array(
+        struct(col(a).as("src") +: col(b).as("dst") +: rest: _*),
+        struct(col(b).as("src") +: col(a).as("dst") +: rest: _*))).as("__e"))
+      .select(col("__e.src").as("src") +: col("__e.dst").as("dst") +:
+        carry.map(c => col(s"__e.$c").as(c)): _*)
   }
 
   /** k-core: the maximal subgraph in which every node has degree ≥ k
@@ -413,14 +336,8 @@ object Graph {
             reliable: Boolean = false): DataFrame = {
     require(k >= 1, "k >= 1")
     require(maxIterations >= 1 && maxIterations <= 100, "maxIterations in [1, 100]")
-    // size-adaptive state width (r15) — see [[pageRank]]; canon built
-    // ONCE for both the width probe and the initial edge frame (r15
-    // ADVICE), measured-width correction after the first round
     val e0 = canon(edges, aCol, bCol)
-    var p = graft.Par.statePartitions(e0)
-    def truncate(df: DataFrame): DataFrame =
-      if (reliable) df.coalesce(p).checkpoint(eager = true)
-      else df.coalesce(p).localCheckpoint(eager = true)
+    val loop = new graft.Par.LoopState(e0, reliable)
     def degrees(edgeSet: DataFrame): DataFrame =
       edgeSet.select(col("a").as("n"))
         .unionByName(edgeSet.select(col("b").as("n")))
@@ -435,32 +352,24 @@ object Graph {
     // measured 6 s/round at sf0.1 against this form's sub-second
     // rounds. Same synchronous-peel semantics, same unique fixed
     // point; the last degree frame IS the answer (all ≥ k).
-    var alive = graft.Par.persistTracked(e0.coalesce(p))
+    var alive = loop.persist(e0)
     var lastDeg = degrees(alive)
     var i = 0
     var done = false
-    var widthMeasured = false
     while (!done && i < maxIterations) {
-      val deg = graft.Par.persistTracked(degrees(alive).coalesce(p))
+      val deg = loop.persist(degrees(alive))
       val removed = deg.filter(col("core_deg") < k).select(col("n"))
       val removedEmpty = removed.isEmpty
-      if (!widthMeasured) {
-        // the isEmpty probe above materialized the alive cache: when
-        // its TRUE bytes outgrow the leaf estimate, re-cache at the
-        // measured width and lift the peel width (r15 ADVICE)
-        val (alive2, p2) = graft.Par.correctedStateCache(alive, p)
-        alive = alive2; p = p2; widthMeasured = true
-      }
+      // round 1's isEmpty probe materialized the alive cache
+      alive = loop.remeasure(alive)
       if (removedEmpty) {
         lastDeg = deg
         done = true
       } else {
-        alive = graft.Par.persistTracked(
-          alive
-            .join(removed.withColumnRenamed("n", "a"), Seq("a"), "left_anti")
-            .join(removed.withColumnRenamed("n", "b"), Seq("b"), "left_anti")
-            .coalesce(p))
-        if (i % 3 == 2) alive = truncate(alive)
+        alive = loop.persist(alive
+          .join(removed.withColumnRenamed("n", "a"), Seq("a"), "left_anti")
+          .join(removed.withColumnRenamed("n", "b"), Seq("b"), "left_anti"))
+        if (i % 3 == 2) alive = loop.truncate(alive)
         lastDeg = degrees(alive)
         i += 1
       }
@@ -553,22 +462,10 @@ object Graph {
                        reliable: Boolean = false): DataFrame = {
     require(iterations >= 1 && iterations <= 100, "iterations in [1, 100]")
     val e = canon(edges, aCol, bCol)
-    // size-adaptive state width (r15) — see [[pageRank]]; the keyed
-    // repartition keeps its exchange-reuse role but its width now
-    // derives from input size, capped at the session shuffle width
-    var p = graft.Par.statePartitions(e)
-    val width = graft.Par.stateWidth(e)
-    def truncate(df: DataFrame): DataFrame =
-      if (reliable) df.coalesce(p).checkpoint(eager = true)
-      else df.coalesce(p).localCheckpoint(eager = true)
+    val loop = new graft.Par.LoopState(e, reliable)
     // pin the edge frame's partitioning on the JOIN key so the
     // per-round label lookup never re-exchanges the (big) edge side
-    val directed = graft.Par.persistTracked(
-      e.select(explode(array(
-          struct(col("a").as("src"), col("b").as("dst")),
-          struct(col("b").as("src"), col("a").as("dst")))).as("__e"))
-        .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
-        .repartition(width, col("src")))
+    val directed = graft.Par.persistTracked(loop.keyed(bothDirections(e, "a", "b"), "src"))
     var labels = directed.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
     for (i <- 1 to iterations) {
@@ -576,22 +473,19 @@ object Graph {
         .join(labels.withColumnRenamed("node", "src"), Seq("src"))
         .select(col("dst").as("node"), col("label"))
         .unionByName(labels) // self-vote
-        // ONE node-keyed exchange serves BOTH aggregations below:
-        // hash(node) satisfies the (node, label) clustering too, so
-        // the count and the argmax plan exchange-free on top of it
-        // (first cut paid three shuffles/round — measured 10 s at
-        // sf0.1, vs pageRank's 2/round at 5.8 s for the same graph)
-        .repartition(width, col("node"))
-      labels = votes
+      // ONE node-keyed exchange serves BOTH aggregations below:
+      // hash(node) satisfies the (node, label) clustering too, so the
+      // count and the argmax plan exchange-free on top of it (first
+      // cut paid three shuffles/round — measured 10 s at sf0.1, vs
+      // pageRank's 2/round at 5.8 s for the same graph)
+      labels = loop.keyed(votes, "node")
         .groupBy(col("node"), col("label")).agg(count(lit(1)).as("c"))
         .groupBy(col("node"))
         .agg(min(struct((-col("c")).as("nc"), col("label"))).as("b"))
         .select(col("node"), col("b.label").as("label"))
       if (i % 3 == 0 && i < iterations) {
-        labels = truncate(labels)
-        // the truncate materialized the edge cache rounds ago: floor
-        // the checkpoint width from its TRUE cached bytes (r15 ADVICE)
-        p = graft.Par.measuredStatePartitions(directed, p)
+        labels = loop.truncate(labels)
+        loop.remeasure(directed) // the first cut materialized it
       }
     }
     labels
@@ -669,25 +563,16 @@ object Graph {
     require(iterations >= 1 && iterations <= 50, "iterations in [1, 50]")
     require(topK > 0, "topK must be positive")
     val Scale = 1000000L
-    // size-adaptive state width (r15) — see [[pageRank]]; measured-
-    // width cache correction after round 1 (r15 ADVICE)
-    var p = graft.Par.statePartitions(
-      edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
-    def truncate(df: DataFrame): DataFrame =
-      if (reliable) df.coalesce(p).checkpoint(eager = true)
-      else df.coalesce(p).localCheckpoint(eager = true)
-    val e0 = graft.Par.persistTracked(
-      edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct()
-        .coalesce(p))
-    var e = e0
-    var widthChecked = false
+    val pairs = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    val loop = new graft.Par.LoopState(pairs, reliable)
+    var e = loop.persist(pairs.distinct())
     // each phase's raw frame is persisted (the max normalizer and the
     // scaled select share one computation) and the result eagerly
     // truncated EVERY round: the in-plan scalar subquery would
     // otherwise re-evaluate the whole preceding lineage once per
     // round (measured 141 s at sf0.1; ~4 s with per-round cuts)
     def normalize(rawIn: DataFrame): DataFrame = {
-      val raw = graft.Par.persistTracked(rawIn.coalesce(p))
+      val raw = loop.persist(rawIn)
       val mx = raw.agg(max(col("__raw")).as("__m"))
       raw.crossJoin(broadcast(mx))
         .select(col("node"), expr(s"(__raw * $Scale) div __m").as("score"))
@@ -700,19 +585,11 @@ object Graph {
         .join(h.select(col("node").as("src"), col("score")), Seq("src"))
         .groupBy(col("dst").as("node")).agg(sum(col("score")).as("__raw")))
       // truncate the round's END (h): a sits on its persisted raw, so
-      // h's cut bounds the whole round to one pass — without it the
-      // in-plan max subqueries re-evaluate the full preceding lineage
-      // once per round (measured 141 s at sf0.1; ~5 s with the cut)
-      h = truncate(normalize(e
+      // h's cut bounds the whole round to one pass
+      h = loop.truncate(normalize(e
         .join(a.select(col("node").as("dst"), col("score")), Seq("dst"))
         .groupBy(col("src").as("node")).agg(sum(col("score")).as("__raw"))))
-      if (!widthChecked) {
-        // round 1 materialized the edge cache: when its TRUE bytes
-        // outgrow the leaf estimate, re-cache at the measured width
-        // and lift the loop width (r15 ADVICE); no-op when accurate
-        val (e2, p2) = graft.Par.correctedStateCache(e0, p)
-        e = e2; p = p2; widthChecked = true
-      }
+      e = loop.remeasure(e) // round 1 materialized the edge cache
     }
     def top(df: DataFrame, kind: String): DataFrame = df
       .orderBy(col("score").desc, col("node")).limit(topK)
@@ -808,34 +685,7 @@ object Graph {
                   seeds: DataFrame, seedCol: String,
                   maxHops: Int, reliable: Boolean = false): DataFrame = {
     require(maxHops >= 1 && maxHops <= 100, "maxHops in [1, 100]")
-    val e = canon(edges, aCol, bCol)
-    // size-adaptive state width (r15) — see [[pageRank]]
-    var p = graft.Par.statePartitions(e)
-    val width = graft.Par.stateWidth(e)
-    def truncate(df: DataFrame): DataFrame =
-      if (reliable) df.coalesce(p).checkpoint(eager = true)
-      else df.coalesce(p).localCheckpoint(eager = true)
-    val directed = graft.Par.persistTracked(
-      e.select(explode(array(
-          struct(col("a").as("src"), col("b").as("dst")),
-          struct(col("b").as("src"), col("a").as("dst")))).as("__e"))
-        .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
-        .repartition(width, col("src")))
-    var dist = directed.select(col("src").as("node")).distinct()
-      .join(seeds.select(col(seedCol).as("node")), Seq("node"), "left_semi")
-      .select(col("node"), lit(0L).as("dist"))
-    for (i <- 1 to maxHops) {
-      dist = directed
-        .join(dist.withColumnRenamed("node", "src"), Seq("src"))
-        .select(col("dst").as("node"), (col("dist") + lit(1L)).as("dist"))
-        .unionByName(dist)
-        .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-      if (i % 3 == 0 && i < maxHops) {
-        dist = truncate(dist)
-        p = graft.Par.measuredStatePartitions(directed, p)
-      }
-    }
-    dist
+    relax(canon(edges, aCol, bCol), seeds, seedCol, maxHops, reliable, lit(1L))
   }
 
   /** WEIGHTED multi-source shortest path — [[bfsDistance]]'s
@@ -866,31 +716,34 @@ object Graph {
         col(weightCol).cast("long").as("w"))
       .filter(col("a") < col("b") && col("w") >= 0)
       .groupBy(col("a"), col("b")).agg(min(col("w")).as("w"))
-    // size-adaptive state width (r15) — see [[pageRank]]
-    var p = graft.Par.statePartitions(e)
-    val width = graft.Par.stateWidth(e)
-    def truncate(df: DataFrame): DataFrame =
-      if (reliable) df.coalesce(p).checkpoint(eager = true)
-      else df.coalesce(p).localCheckpoint(eager = true)
+    relax(e, seeds, seedCol, rounds, reliable, col("w"), "w")
+  }
+
+  /** The synchronous relaxation [[bfsDistance]] and [[ssspWeighted]]
+    * share: dist₀ = 0 at the seeds present in the graph, then each
+    * round dist(v) = min(dist(v), min over in-neighbors u of dist(u) +
+    * `step`), one src-keyed join and one node-keyed min. The edge
+    * frame persists hash-partitioned on `src` ([[graft.Par.LoopState]]
+    * key width), so no round re-exchanges it; lineage is cut every 3
+    * rounds and the first cut re-measures the width.
+    */
+  private def relax(e: DataFrame, seeds: DataFrame, seedCol: String, rounds: Int,
+                    reliable: Boolean, step: Column, carry: String*): DataFrame = {
+    val loop = new graft.Par.LoopState(e, reliable)
     val directed = graft.Par.persistTracked(
-      e.select(explode(array(
-          struct(col("a").as("src"), col("b").as("dst"), col("w")),
-          struct(col("b").as("src"), col("a").as("dst"), col("w")))).as("__e"))
-        .select(col("__e.src").as("src"), col("__e.dst").as("dst"),
-          col("__e.w").as("w"))
-        .repartition(width, col("src")))
+      loop.keyed(bothDirections(e, "a", "b", carry: _*), "src"))
     var dist = directed.select(col("src").as("node")).distinct()
       .join(seeds.select(col(seedCol).as("node")), Seq("node"), "left_semi")
       .select(col("node"), lit(0L).as("dist"))
     for (i <- 1 to rounds) {
       dist = directed
         .join(dist.withColumnRenamed("node", "src"), Seq("src"))
-        .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
+        .select(col("dst").as("node"), (col("dist") + step).as("dist"))
         .unionByName(dist)
         .groupBy(col("node")).agg(min(col("dist")).as("dist"))
       if (i % 3 == 0 && i < rounds) {
-        dist = truncate(dist)
-        p = graft.Par.measuredStatePartitions(directed, p)
+        dist = loop.truncate(dist)
+        loop.remeasure(directed)
       }
     }
     dist

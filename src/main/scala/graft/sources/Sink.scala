@@ -214,24 +214,11 @@ object Sink {
     * their rows, never the pruning. The residual BETWEEN stays in
     * the plan and reaches the parquet scan as a pushed filter, so
     * row-group/page pruning still applies within surviving files.
+    * It is [[prunedReadMulti]] with one band.
     */
   def prunedRead(spark: SparkSession, path: String, pruneCol: String,
-                 lo: Any, hi: Any): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val stats = spark.read.parquet(s"$path/_graft_stats")
-    // comparison via Spark expressions, so literal/column casts match
-    // exactly what the residual filter will do
-    val kept = stats.filter(
-        col(s"max_$pruneCol").isNull || col(s"min_$pruneCol").isNull ||
-        !(col(s"max_$pruneCol") < lit(lo) || col(s"min_$pruneCol") > lit(hi)))
-      .select(col("file")).collect().map(_.getString(0))
-    val base =
-      if (kept.isEmpty)
-        spark.read.parquet(path).filter(lit(false))
-      else
-        spark.read.schema(spark.read.parquet(path).schema).parquet(kept: _*)
-    base.filter(col(pruneCol).between(lit(lo), lit(hi)))
-  }
+                 lo: Any, hi: Any): DataFrame =
+    prunedReadMulti(spark, path, Seq((pruneCol, lo, hi)))
 
   /** Multi-predicate file pruning over the [[writeFileStats]]
     * manifest: every `(col, lo, hi)` band must overlap a file's
@@ -245,18 +232,29 @@ object Sink {
                       preds: Seq[(String, Any, Any)]): DataFrame = {
     require(preds.nonEmpty, "prunedReadMulti needs at least one band")
     import org.apache.spark.sql.functions.{col, lit}
-    val stats = spark.read.parquet(s"$path/_graft_stats")
-    val keep = preds.map { case (c, lo, hi) =>
-      col(s"max_$c").isNull || col(s"min_$c").isNull ||
-        !(col(s"max_$c") < lit(lo) || col(s"min_$c") > lit(hi))
-    }.reduce(_ && _)
-    val kept = stats.filter(keep).select(col("file")).collect().map(_.getString(0))
+    val kept = keptFiles(spark.read.parquet(s"$path/_graft_stats"), preds)
     val base =
       if (kept.isEmpty) spark.read.parquet(path).filter(lit(false))
       else spark.read.schema(spark.read.parquet(path).schema).parquet(kept: _*)
     preds.foldLeft(base) { case (df, (c, lo, hi)) =>
       df.filter(col(c).between(lit(lo), lit(hi)))
     }
+  }
+
+  /** The files of a per-file min/max stats manifest ([[writeFileStats]],
+    * [[Versioned.writeStats]]) whose [min, max] overlaps every
+    * `(col, lo, hi)` band; files with null stats are kept. The
+    * comparison runs as Spark expressions, so literal/column casts match
+    * exactly what the residual filter will do.
+    */
+  private[sources] def keptFiles(stats: DataFrame,
+                                 bands: Seq[(String, Any, Any)]): Array[String] = {
+    import org.apache.spark.sql.functions.{col, lit}
+    val keep = bands.map { case (c, lo, hi) =>
+      col(s"max_$c").isNull || col(s"min_$c").isNull ||
+        !(col(s"max_$c") < lit(lo) || col(s"min_$c") > lit(hi))
+    }.reduce(_ && _)
+    stats.filter(keep).select(col("file")).collect().map(_.getString(0))
   }
 
   /** Per-file BLOOM index for POINT lookups on a long column the

@@ -144,8 +144,10 @@ object Versioned {
     * replaces, plus the delta. */
   private def scan(spark: SparkSession, path: String, v: Version): DataFrame = {
     val base = readSegments(spark, path, v.schema, v.segments)
-    v.delta.fold(base)(d =>
-      Cdc.replaceKeys(base, readSegments(spark, path, v.schema, Seq(d.segment)), d.key))
+    v.delta.fold(base) { d =>
+      val delta = readSegments(spark, path, v.schema, Seq(d.segment))
+      Cdc.replaceKeys(base, delta, d.key, delta)
+    }
   }
 
   /** Land `df` as a fresh segment under `path`. */
@@ -329,11 +331,7 @@ object Versioned {
     val statsPath = s"$path/_stats/v$v"
     require(Manifest.fs(spark, path).exists(new Path(statsPath)),
       s"no stats manifest at $statsPath — run writeStats for v$v first")
-    val stats = spark.read.parquet(statsPath)
-    val kept = stats.filter(
-        col(s"max_$pruneCol").isNull || col(s"min_$pruneCol").isNull ||
-        !(col(s"max_$pruneCol") < lit(lo) || col(s"min_$pruneCol") > lit(hi)))
-      .select(col("file")).collect().map(_.getString(0))
+    val kept = Sink.keptFiles(spark.read.parquet(statsPath), Seq((pruneCol, lo, hi)))
     val m = readVersion(spark, path, v)
     val delta = m.delta.map(d => new Path(d.segment).getName)
     val base = kept.toSeq.filterNot(f => delta.contains(new Path(f).getParent.getName))

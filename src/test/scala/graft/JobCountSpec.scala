@@ -68,16 +68,62 @@ class JobCountSpec extends SparkSuite {
     assert(Versioned.read(spark, upserted).count() === 20)
   }
 
-  test("Versioned.upsert onto a head with a delta runs exactly four jobs") {
-    // it merges the batch into the delta, not the table, in as many
-    // jobs as a copy-on-write upsert of the whole table ran on the same
-    // input: four
+  test("Versioned.upsert onto a head with a delta runs exactly three jobs") {
+    // it merges the batch into the delta, not the table; the anti-join
+    // takes the batch's keys without a latest-per-key pass of their own
     val dir = tmpDir("jobs-upsert") + "/t"
     Versioned.upsert(batch(100), dir, Seq("k"), "ver")
     Versioned.upsert(batch(5).withColumn("v", lit("u")), dir, Seq("k"), "ver")
     val updates = (3 to 8).map(i => (i.toLong, 9L, s"w$i")).toDF("k", "ver", "v")
-    assert(jobs(Versioned.upsert(updates, dir, Seq("k"), "ver")) === 4)
+    assert(jobs(Versioned.upsert(updates, dir, Seq("k"), "ver")) === 3)
     assert(Versioned.read(spark, dir).filter(col("ver") === 9L).count() === 6)
+  }
+
+  test("the iterative graph operators and connectedComponents run pinned job counts") {
+    import graft.operators.{Dedup, Graph}
+    // a dense 100-node core plus a sparse 300-node fringe, so kCore
+    // peels in cascades and every loop reaches a lineage cut
+    val rnd = new scala.util.Random(11)
+    val core = for (a <- 0 until 100; _ <- 1 to 20) yield (a.toLong, rnd.nextInt(100).toLong)
+    val fringe = for (a <- 100 until 400; _ <- 1 to 3) yield (a.toLong, rnd.nextInt(400).toLong)
+    val edges = (core ++ fringe).map { case (a, b) => (a, b, 1L + rnd.nextInt(9)) }
+      .toDF("a", "b", "w")
+    val seeds = Seq(0L, 150L, 300L).toDF("s")
+    val ops: Seq[(String, () => DataFrame)] = Seq(
+      "pageRank" -> (() => Graph.pageRank(edges, "a", "b")),
+      "pageRankFixedPoint" -> (() => Graph.pageRankFixedPoint(edges, "a", "b")),
+      "pageRankFixedPointWeighted" -> (() => Graph.pageRankFixedPointWeighted(edges, "a", "b", "w")),
+      "personalizedPageRankFixedPoint" ->
+        (() => Graph.personalizedPageRankFixedPoint(edges, "a", "b", seeds, "s")),
+      "kCore" -> (() => Graph.kCore(edges, "a", "b", k = 6)),
+      "labelPropagation" -> (() => Graph.labelPropagation(edges, "a", "b")),
+      "hitsFixedPoint" -> (() => Graph.hitsFixedPoint(edges, "a", "b")),
+      "bfsDistance" -> (() => Graph.bfsDistance(edges, "a", "b", seeds, "s", maxHops = 6)),
+      "ssspWeighted" -> (() => Graph.ssspWeighted(edges, "a", "b", "w", seeds, "s", rounds = 6)),
+      "triangleStats" -> (() => Graph.triangleStats(edges, "a", "b")),
+      "localClustering" -> (() => Graph.localClustering(edges, "a", "b")),
+      "connectedComponents" -> (() => Dedup.connectedComponents(edges, "a", "b")))
+    // (total jobs, jobs while the DataFrame is built)
+    val counts = ops.map { case (name, build) =>
+      var df: DataFrame = null
+      val building = jobs { df = build() }
+      val total = building + jobs(df.collect())
+      Par.release()
+      name -> (total, building)
+    }
+    assert(counts === Seq(
+      "pageRank" -> (58, 52),
+      "pageRankFixedPoint" -> (58, 52),
+      "pageRankFixedPointWeighted" -> (58, 52),
+      "personalizedPageRankFixedPoint" -> (60, 54),
+      "kCore" -> (25, 24),
+      "labelPropagation" -> (65, 62),
+      "hitsFixedPoint" -> (85, 83),
+      "bfsDistance" -> (41, 26),
+      "ssspWeighted" -> (41, 26),
+      "triangleStats" -> (19, 16),
+      "localClustering" -> (20, 0),
+      "connectedComponents" -> (24, 23)))
   }
 
   test("Staging.stage with a tracking column runs exactly one job: the write") {
