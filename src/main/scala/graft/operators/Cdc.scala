@@ -93,7 +93,7 @@ object Cdc {
     * an idempotent overwrite of the target path.
     */
   def fullLoad(df: DataFrame, targetPath: String): Unit =
-    df.write.mode("overwrite").parquet(targetPath)
+    graft.sources.ParquetWriter(df).mode("overwrite").parquet(targetPath)
 
   /** Snapshot load: enrich the batch with a derived ingestion-date
     * column — reference base_loader.py `_perform_snapshot_load`

@@ -940,30 +940,37 @@ object Quality {
     * operator: for each declared FK edge, how many child rows (and
     * distinct keys) point at a parent that does not exist. NULL
     * child keys are excluded (that's the `not_null` test's job, not
-    * a dangling reference).
+    * a dangling reference), and a NULL parent key matches nothing.
     *
-    * One aggregate per edge over the child keyed LEFT-joined to the
-    * DISTINCT parent keys (broadcastable for dimension parents;
-    * orphan = no hit) — no cross join of scalar frames, so the plan
-    * sweep stays nested-loop-free. Run it before a snapshot publish:
-    * a nonzero orphan count is the classic symptom of a partial
-    * extract.
+    * One keyed aggregate per edge, over the union of both sides:
+    * a child row is `(k, 1, 0)`, a parent row `(k, 0, 1)`, and
+    * grouping by `k` gives each key its child row count and whether
+    * any parent carries it. Keys no child row holds drop out, and one
+    * fold over the rest counts rows, keys and the orphans among them.
+    * That is one keyed exchange per edge, of keys aggregated before
+    * the shuffle, and a one-row fold: no distinct pass over the
+    * parent, no broadcast, no Expand of the child rows, and no cross
+    * join of scalar frames. An empty child
+    * reports 0 rows, keys and orphan keys, and a null orphan row
+    * count. Run it before a snapshot publish: a nonzero orphan count
+    * is the classic symptom of a partial extract.
     */
   def referentialIntegrity(
       rels: Seq[(String, DataFrame, String, DataFrame, String)]): DataFrame = {
     require(rels.nonEmpty, "need at least one relationship")
     rels.map { case (label, child, childKey, parent, parentKey) =>
-      val c = child.select(col(childKey).as("__k"))
+      val c = child.select(col(childKey).as("__k"), lit(1L).as("__n"), lit(0).as("__hit"))
         .filter(col("__k").isNotNull)
-      val p = parent.select(col(parentKey).as("__k")).distinct()
-        .withColumn("__hit", lit(1))
-      c.join(p, Seq("__k"), "left")
-        .agg(count(lit(1)).as("n_child"),
-          countDistinct(col("__k")).as("n_keys"),
-          sum(when(col("__hit").isNull, lit(1L)).otherwise(lit(0L)))
-            .as("n_orphan_rows"),
-          countDistinct(when(col("__hit").isNull, col("__k")))
-            .as("n_orphan_keys"))
+      val p = parent.select(col(parentKey).as("__k"), lit(0L).as("__n"), lit(1).as("__hit"))
+      val orphan = col("__hit") === 0
+      c.unionByName(p)
+        .groupBy(col("__k"))
+        .agg(sum(col("__n")).as("__n"), max(col("__hit")).as("__hit"))
+        .filter(col("__n") > 0)
+        .agg(coalesce(sum(col("__n")), lit(0L)).as("n_child"),
+          count(lit(1)).as("n_keys"),
+          sum(when(orphan, col("__n")).otherwise(lit(0L))).as("n_orphan_rows"),
+          count(when(orphan, lit(1))).as("n_orphan_keys"))
         .select(lit(label).as("relationship"), col("n_child"),
           col("n_keys"), col("n_orphan_rows"), col("n_orphan_keys"))
     }.reduce(_.unionByName(_))

@@ -61,22 +61,24 @@ object Dag {
     out.toSeq
   }
 
-  /** Run the graph in topological order. Each node gets up to
+  /** Run the graph as a ready queue. Each node gets up to
     * `1 + maxRetries` attempts; when a node exhausts them, every
     * transitive dependent is Skipped (recorded with the root cause's
     * name) and independent branches keep running. Only non-fatal
     * failures are retried and recorded: a fatal error or an interrupt
     * propagates and ends the run.
     *
-    * `levelParallelism` > 1 runs INDEPENDENT nodes of the same
-    * topological level concurrently on a bounded pool (r16, guide
-    * §2.6 "overlap independent jobs": siblings like a pipeline's two
-    * extract sources otherwise serialize, idling the cluster on each
-    * other's tails — exactly what Dagster does with same-level
-    * assets). Statuses, retries and skip propagation are unchanged: a
-    * level starts only after every earlier level resolved, so each
-    * node still sees its deps' final statuses. Callers whose sibling
-    * nodes share mutable state must keep the default of 1.
+    * A node starts as soon as every one of its deps has resolved, so
+    * it sees their final statuses, on at most `levelParallelism`
+    * threads; ready nodes start in [[topoOrder]]'s name-sorted order.
+    * With 1 thread this is exactly [[topoOrder]], run on the caller's
+    * thread. With more, a ready node need not wait for unrelated
+    * nodes that started before it (guide §2.6 "overlap independent
+    * jobs": a pipeline's extract and a load of another extract's
+    * output otherwise serialize, idling the cluster on each other's
+    * tails — Dagster runs assets the same way). Callers whose nodes
+    * share mutable state without a dependency between them must keep
+    * the default of 1.
     */
   def run(nodes: Seq[Node], maxRetries: Int = 0,
           levelParallelism: Int = 1): Map[String, Status] = {
@@ -109,43 +111,46 @@ object Dag {
       }
     }
     val ordered = topoOrder(nodes)
-    if (levelParallelism <= 1) {
-      ordered.foreach(n => status(n.name) = statusOf(n).getOrElse(runOne(n)))
-    } else {
-      val level = mutable.Map.empty[String, Int]
-      ordered.foreach { n =>
-        level(n.name) = if (n.deps.isEmpty) 0 else n.deps.map(level).max + 1
+    val position = ordered.map(_.name).zipWithIndex.toMap
+    val dependents = nodes.flatMap(n => n.deps.distinct.map(d => d -> n.name)).groupMap(_._1)(_._2)
+    val pending = mutable.Map(nodes.map(n => n.name -> n.deps.distinct.size): _*)
+    val ready = mutable.SortedSet(ordered.indices.filter(i => ordered(i).deps.isEmpty): _*)
+    // a worker hands back its node's status, or the throwable that ends
+    // the run; a single thread is the caller's own
+    val finished = new java.util.concurrent.LinkedBlockingQueue[(Node, Either[Throwable, Status])]()
+    val width = math.max(1, levelParallelism)
+    val pool =
+      if (width == 1) None
+      else Some(java.util.concurrent.Executors.newFixedThreadPool(width))
+    def resolve(n: Node, s: Status): Unit = {
+      status(n.name) = s
+      dependents.getOrElse(n.name, Nil).foreach { d =>
+        pending(d) -= 1
+        if (pending(d) == 0) ready += position(d)
       }
-      ordered.groupBy(n => level(n.name)).toSeq.sortBy(_._1)
-        .foreach { case (_, lvl) =>
-          // deps of this level's nodes are all resolved — decide skips
-          // serially, run the rest concurrently
-          val (skipped, runnable) =
-            lvl.map(n => n -> statusOf(n)).partition(_._2.isDefined)
-          skipped.foreach { case (n, s) => status(n.name) = s.get }
-          if (runnable.size <= 1) {
-            runnable.foreach { case (n, _) => status(n.name) = runOne(n) }
-          } else {
-            val pool = java.util.concurrent.Executors.newFixedThreadPool(
-              math.min(levelParallelism, runnable.size))
-            try {
-              // java futures, not scala.concurrent ones: a Scala Future
-              // never completes on a fatal throwable, so awaiting it
-              // would hang; FutureTask hands any throwable to get()
-              val futs = runnable.map { case (n, _) =>
-                n.name -> pool.submit(new java.util.concurrent.Callable[Status] {
-                  def call(): Status = runOne(n)
-                })
-              }
-              futs.foreach { case (name, f) =>
-                status(name) =
-                  try f.get()
-                  catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-              }
-            } finally pool.shutdown()
+    }
+    var running = 0
+    try {
+      while (ready.nonEmpty || running > 0) {
+        while (ready.nonEmpty && running < width) {
+          val n = ordered(ready.head)
+          ready -= ready.head
+          statusOf(n) match {
+            case Some(skipped) => resolve(n, skipped)
+            case None =>
+              running += 1
+              val work: Runnable = () => finished.put(n ->
+                (try Right(runOne(n)) catch { case e: Throwable => Left(e) }))
+              pool.fold(work.run())(_.execute(work))
           }
         }
-    }
+        if (running > 0) {
+          val (n, result) = finished.take()
+          running -= 1
+          resolve(n, result.fold(e => throw e, s => s))
+        }
+      }
+    } finally pool.foreach(_.shutdown())
     status.toMap
   }
 

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.operators.Cdc
+import graft.sources.ParquetWriter
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit, max}
 
@@ -68,7 +69,7 @@ object IncrementalModel {
   def run(spark: SparkSession, source: DataFrame, targetPath: String,
           trackingCol: String): Long =
     pass(spark, source, targetPath, trackingCol) { (_, delta) =>
-      delta.write.mode(SaveMode.Append).parquet(targetPath)
+      ParquetWriter(delta).mode(SaveMode.Append).parquet(targetPath)
     }
 
   /** The pass both strategies share. A missing target gets the whole
@@ -83,8 +84,8 @@ object IncrementalModel {
     val path = new org.apache.hadoop.fs.Path(targetPath)
     if (!path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)) {
       val loaded = Observation()
-      source.observe(loaded, count(lit(1)).as("rows"))
-        .write.mode(SaveMode.ErrorIfExists).parquet(targetPath)
+      ParquetWriter(source.observe(loaded, count(lit(1)).as("rows")))
+        .mode(SaveMode.ErrorIfExists).parquet(targetPath)
       loaded.get("rows").asInstanceOf[Long]
     } else {
       // both strategies write only the source's rows, so the target

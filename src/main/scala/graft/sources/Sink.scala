@@ -16,19 +16,24 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *  - keyed upsert        → read-merge-write via Cdc.upsert
   *  - co-located joins    → bucketed tables (both sides bucketed on
   *    the join key → SortMergeJoin with NO exchange)
+  *
+  * Every Parquet file these sinks land, data and `_`-prefixed stats,
+  * bloom and shard manifests alike, is zstd Parquet from the one
+  * [[ParquetWriter]]; each writer keeps its own mode, partitioning,
+  * bucketing, sort and file count. The JDBC sinks write no Parquet.
   */
 object Sink {
 
   /** Truncate+insert full load (idempotent). */
   def fullOverwrite(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(path)
+    ParquetWriter(df).mode(SaveMode.Overwrite).parquet(path)
 
   /** Partitioned write: one directory per partition value —
     * downstream readers prune partitions from the path (the 100 TB
     * daily-delta read is a single-dir scan).
     */
   def partitioned(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
-    df.write.mode(SaveMode.Overwrite)
+    ParquetWriter(df).mode(SaveMode.Overwrite)
       .partitionBy(partitionCols: _*)
       .parquet(path)
 
@@ -39,7 +44,7 @@ object Sink {
     * concurrent writers cannot see each other's mode.
     */
   def overwritePartitions(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
-    df.write.mode(SaveMode.Overwrite)
+    ParquetWriter(df).mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCols: _*)
       .parquet(path)
@@ -66,7 +71,7 @@ object Sink {
     val dst = new Path(targetPath)
     val fs  = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new Path(targetPath + "__staged")
-    df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    ParquetWriter(df).mode(SaveMode.Overwrite).parquet(tmp.toString)
     swapInto(fs, tmp, dst)
   }
 
@@ -138,8 +143,8 @@ object Sink {
       math.ceil(totalBytes.toDouble / targetBytes).toLong)
     if (nBefore > nOut) {
       val tmp = new Path(path + "__staged")
-      spark.read.parquet(path).coalesce(nOut.toInt)
-        .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+      ParquetWriter(spark.read.parquet(path).coalesce(nOut.toInt))
+        .mode(SaveMode.Overwrite).parquet(tmp.toString)
       swapInto(fs, tmp, dst)
     }
     fileStats(dst)._1.toInt
@@ -163,9 +168,8 @@ object Sink {
     require(clusterCols.nonEmpty, "clusteredWrite needs cluster columns")
     require(numFiles > 0, "numFiles must be positive")
     val cols = clusterCols.map(org.apache.spark.sql.functions.col)
-    df.repartitionByRange(numFiles, cols: _*)
-      .sortWithinPartitions(cols: _*)
-      .write.mode(SaveMode.Overwrite).parquet(path)
+    ParquetWriter(df.repartitionByRange(numFiles, cols: _*).sortWithinPartitions(cols: _*))
+      .mode(SaveMode.Overwrite).parquet(path)
     val dst = new Path(path)
     val fs = dst.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
     fs.listStatus(dst).count { f =>
@@ -196,7 +200,7 @@ object Sink {
       .select(col("_metadata.file_path").as("file") +: cols.map(col): _*)
       .groupBy(col("file"))
       .agg(aggs.head, aggs.tail: _*)
-    stats.coalesce(1).write.mode(SaveMode.Overwrite)
+    ParquetWriter(stats.coalesce(1)).mode(SaveMode.Overwrite)
       .parquet(s"$path/_graft_stats")
     spark.read.parquet(s"$path/_graft_stats").count().toInt
   }
@@ -277,12 +281,12 @@ object Sink {
     val hashed = new XxHash64(Seq(GraftSqlBridge.expression(col(column))))
     val agg = new BloomFilterAggregate(hashed, expectedItemsPerFile)
       .toAggregateExpression()
-    spark.read.parquet(path)
-      .select(col("_metadata.file_path").as("file"), col(column))
-      .groupBy(col("file"))
-      .agg(GraftSqlBridge.column(agg).as("bloom"))
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$path/_graft_bloom_$column")
+    ParquetWriter(spark.read.parquet(path)
+        .select(col("_metadata.file_path").as("file"), col(column))
+        .groupBy(col("file"))
+        .agg(GraftSqlBridge.column(agg).as("bloom"))
+        .coalesce(1))
+      .mode(SaveMode.Overwrite).parquet(s"$path/_graft_bloom_$column")
     spark.read.parquet(s"$path/_graft_bloom_$column").count().toInt
   }
 
@@ -362,11 +366,11 @@ object Sink {
       }.reduce(_.bitwiseOR(_))
     }
     val z = zParts.reduce(_.bitwiseOR(_))
-    df.withColumn("__graft_z", z)
-      .repartitionByRange(numFiles, col("__graft_z"))
-      .sortWithinPartitions(col("__graft_z"))
-      .drop("__graft_z")
-      .write.mode(SaveMode.Overwrite).parquet(path)
+    ParquetWriter(df.withColumn("__graft_z", z)
+        .repartitionByRange(numFiles, col("__graft_z"))
+        .sortWithinPartitions(col("__graft_z"))
+        .drop("__graft_z"))
+      .mode(SaveMode.Overwrite).parquet(path)
     val dst = new Path(path)
     val fs = dst.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
     fs.listStatus(dst).count { f =>
@@ -412,15 +416,15 @@ object Sink {
     val withS = df
       .withColumn("__h", xxhash64(col(idCol), lit(seed)))
       .withColumn("shard", pmod(col("__h"), lit(nShards.toLong)).cast("int"))
-    withS.repartition(nShards, col("shard"))
-      .sortWithinPartitions(col("shard"), col("__h"), col(idCol))
-      .drop("__h")
-      .write.mode(SaveMode.Overwrite).partitionBy("shard").parquet(path)
+    ParquetWriter(withS.repartition(nShards, col("shard"))
+        .sortWithinPartitions(col("shard"), col("__h"), col(idCol))
+        .drop("__h"))
+      .mode(SaveMode.Overwrite).partitionBy("shard").parquet(path)
     val manifest = withS.groupBy(col("shard"))
       .agg(count(lit(1)).as("n_rows"),
         min(col("__h")).as("min_hash"), max(col("__h")).as("max_hash"))
       .orderBy(col("shard"))
-    manifest.coalesce(1).write.mode(SaveMode.Overwrite)
+    ParquetWriter(manifest.coalesce(1)).mode(SaveMode.Overwrite)
       .parquet(s"$path/_manifest")
     manifest
   }
@@ -661,7 +665,7 @@ object Sink {
   def bucketedTableBy(df: DataFrame, table: String, bucketCols: Seq[String],
                       buckets: Int, sortCol: Option[String] = None): Unit = {
     require(bucketCols.nonEmpty, "need at least one bucket column")
-    val w = df.write.mode(SaveMode.Overwrite)
+    val w = ParquetWriter(df).mode(SaveMode.Overwrite)
       .bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
     sortCol.fold(w)(c => w.sortBy(c)).format("parquet").saveAsTable(table)
   }

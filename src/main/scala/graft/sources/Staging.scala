@@ -30,11 +30,12 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * but single-object PUT is atomic, so the pattern still yields
   * all-or-nothing manifests). Layout per batch:
   * {{{
-  *   <stagingDir>/<batchId>/data/          the extracted parquet rows
+  *   <stagingDir>/<batchId>/data/          the extracted rows, zstd Parquet
   *   <stagingDir>/<batchId>/manifest.json  commit point + metadata
   *   <stagingDir>/<batchId>/loaded.json    load-complete marker
   * }}}
-  * Both are in the one [[Manifest]] format. The commit manifest
+  * The data files come from the one [[ParquetWriter]]. Both JSON files
+  * are in the one [[Manifest]] format. The commit manifest
   * `{"batch_id", "rows", "schema", "watermark", "committed_at_ms"}`
   * records what the extract's write produced, observed on the write
   * itself: `watermark` (with a tracking column; "" for an empty batch)
@@ -78,8 +79,8 @@ object Staging {
       trackingCol.map(c => max(col(c)).as("watermark")).toSeq
     // overwrite: leftovers of a mid-extract kill are garbage by
     // definition (no manifest committed them)
-    df.observe(written, metrics.head, metrics.tail: _*)
-      .write.mode(SaveMode.Overwrite).parquet(dataPath(stagingDir, batchId).toString)
+    ParquetWriter(df.observe(written, metrics.head, metrics.tail: _*))
+      .mode(SaveMode.Overwrite).parquet(dataPath(stagingDir, batchId).toString)
     val seen = written.get
     val staged = StagedManifest(batchId, seen("rows").asInstanceOf[Long],
       df.schema.json, trackingCol.map(_ => Option(seen("watermark")).fold("")(_.toString)))

@@ -24,6 +24,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *     _versions/v00000001.json   // one manifest per committed version
   *     d-<uuid>/part-*.parquet    // immutable data segments
   * }}}
+  * Segments and per-version stats are zstd Parquet, written through
+  * the one [[ParquetWriter]]; a table whose older segments are snappy
+  * reads the same, since each footer names its codec.
   *
   * A version is BASE segments plus at most one DELTA segment. The
   * delta holds the latest row of every key [[upsert]]ed since the
@@ -153,7 +156,7 @@ object Versioned {
   /** Land `df` as a fresh segment under `path`. */
   private def writeSegment(df: DataFrame, path: String): String = {
     val seg = newSegment()
-    df.write.mode(SaveMode.ErrorIfExists).parquet(new Path(path, seg).toString)
+    ParquetWriter(df).mode(SaveMode.ErrorIfExists).parquet(new Path(path, seg).toString)
     seg
   }
 
@@ -308,7 +311,7 @@ object Versioned {
       .select(col("_metadata.file_path").as("file") +: cols.map(col): _*)
       .groupBy(col("file"))
       .agg(aggs.head, aggs.tail: _*)
-    stats.coalesce(1).write.mode(SaveMode.Overwrite)
+    ParquetWriter(stats.coalesce(1)).mode(SaveMode.Overwrite)
       .parquet(s"$path/_stats/v$v")
     spark.read.parquet(s"$path/_stats/v$v").count().toInt
   }

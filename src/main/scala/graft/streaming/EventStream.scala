@@ -374,8 +374,9 @@ object EventStream {
           val dst = new org.apache.hadoop.fs.Path(targetPath)
           val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
           if (!fs.exists(dst))
-            graft.operators.Cdc.dedupLatestPerKey(batch, key, trackingCol, tieBreak)
-              .write.parquet(targetPath)
+            graft.sources.ParquetWriter(
+              graft.operators.Cdc.dedupLatestPerKey(batch, key, trackingCol, tieBreak))
+              .parquet(targetPath)
           else
             graft.sources.Sink.upsert(spark, targetPath, batch, key,
               trackingCol, tieBreak)

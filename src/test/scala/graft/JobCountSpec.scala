@@ -126,6 +126,33 @@ class JobCountSpec extends SparkSuite {
       "connectedComponents" -> (24, 23)))
   }
 
+  test("Quality.referentialIntegrity over two edges runs exactly five jobs") {
+    import graft.operators.Quality
+    // each edge is one keyed aggregate over the union of its two sides;
+    // a distinct pass over each parent, its broadcast and an Expand of
+    // the child rows took 9 jobs for the same two edges
+    val dir = tmpDir("jobs-ri")
+    val child = (1 to 400).map(i => (i.toLong, if (i % 50 == 0) None else Some(i % 70L)))
+    child.toDF("id", "fk").write.parquet(s"$dir/child")
+    (1 to 61).map(i => (if (i == 61) None else Some(i.toLong), s"p$i")).toDF("pk", "name")
+      .write.parquet(s"$dir/parent")
+    (1 to 300).map(i => (i.toLong, i + 150L)).toDF("id", "fk").write.parquet(s"$dir/grandchild")
+    val parent = spark.read.parquet(s"$dir/parent")
+    val rels = Seq(
+      ("child.fk->parent", spark.read.parquet(s"$dir/child"), "fk", parent, "pk"),
+      ("grandchild.fk->child", spark.read.parquet(s"$dir/grandchild"), "fk",
+        spark.read.parquet(s"$dir/child"), "id"))
+    var out: Array[Row] = null
+    val n = jobs { out = Quality.referentialIntegrity(rels).collect() }
+    // child: 392 non-null rows over keys 0..69, of which keys 0 and
+    // 61..69 (49 rows) have no parent, the null parent key matching
+    // none; grandchild: keys 151..450, 401..450 orphaned
+    assert(out.map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap ===
+      Map("child.fk->parent" -> ((392L, 70L, 49L, 10L)),
+        "grandchild.fk->child" -> ((300L, 300L, 50L, 50L))))
+    assert(n === 5)
+  }
+
   test("Staging.stage with a tracking column runs exactly one job: the write") {
     val dir = tmpDir("jobs-stage")
     var m: Staging.StagedManifest = null

@@ -529,4 +529,18 @@ class QualitySpec extends SparkSuite {
     intercept[IllegalArgumentException] {
       Quality.candidateKeys(df, Seq(Seq("a"), Seq("a"))) }
   }
+
+  test("referentialIntegrity: an empty child counts zeros and a null orphan row sum; null parent keys match nothing") {
+    val parent = Seq(Some(1L), None).toDF("pk")
+    val empty = Seq.empty[Option[Long]].toDF("fk")
+    val nulls = Seq(Some(1L), Some(2L), None, None).toDF("fk")
+    val out = Quality.referentialIntegrity(Seq(
+        ("empty", empty, "fk", parent, "pk"),
+        ("nulls", nulls, "fk", parent, "pk")))
+      .collect().map(r => r.getString(0) -> r).toMap
+    val e = out("empty")
+    assert((e.getLong(1), e.getLong(2), e.isNullAt(3), e.getLong(4)) === ((0L, 0L, true, 0L)))
+    val n = out("nulls")
+    assert((n.getLong(1), n.getLong(2), n.getLong(3), n.getLong(4)) === ((2L, 2L, 1L, 1L)))
+  }
 }
